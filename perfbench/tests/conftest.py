@@ -1,0 +1,7 @@
+"""The benchmark's modules import each other as top-level modules (run.py
+is executed as a script), so the tests put perfbench/ on sys.path."""
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
