@@ -61,10 +61,15 @@ def artifact_name(sf: float, cpus: str) -> str:
     32 cores. Non-canonical sf wins (a leftover SPARK_GRAFT_SF_DIR) and
     non-canonical core counts (the driver's local[8] scaling pass, VERDICT
     r14 item 2) each get their own clearly-named side file so they can never
-    clobber the record.
+    clobber the record. ``cpus`` is compared as an integer when it parses as
+    one (``"032"`` and ``" 32 "`` are 32); any other value gets a side file.
     """
     if sf != 0.1:
         return f"BENCH_sf{sf}.json"
+    try:
+        cpus = str(int(cpus))
+    except ValueError:
+        pass
     if cpus != "32":
         return f"BENCH_c{cpus}.json"
     return "BENCH.json"

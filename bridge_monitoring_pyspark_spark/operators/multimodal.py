@@ -3,7 +3,9 @@
 Images/audio/video ride through the engine as ``binary`` columns with a
 metadata struct; decode / feature-extraction runs as ``mapInPandas`` over
 Arrow batches, so payload bytes move columnar-batched (never row-pickled)
-and the Python stage parallelizes per partition.
+and the Python stage parallelizes per partition. Every such stage in this
+module is one :func:`map_rows` call with a per-row function; fixture
+payloads are attached by :func:`with_payload` from a ``synth_*`` function.
 
 The decode slot is REAL for one format per modality, each via a
 dependency-free stdlib/numpy parser behind :func:`decode_media`:
@@ -23,9 +25,9 @@ container) still raise ``NotImplementedError`` from the same slot.
 Scale notes: binary payloads dominate row width; keep
 ``spark.sql.files.maxPartitionBytes`` at its default 128 MB so tasks stay
 memory-bounded, and never groupBy/shuffle the payload column — project the
-features out first, then drop the bytes. Every mapInPandas generator here
-works strictly batch-at-a-time (no cross-batch accumulation — round-12
-memory-bounds audit), so the per-task working set is one Arrow batch.
+features out first, then drop the bytes. :func:`map_rows` works strictly
+batch-at-a-time (no cross-batch accumulation — round-12 memory-bounds
+audit), so the per-task working set is one Arrow batch.
 Batch BYTES are bounded natively: Spark 4's serializer slices JVM→Python
 batches at ``spark.sql.execution.arrow.maxBytesPerBatch`` (default 64 MB)
 in addition to the 10k-row ``maxRecordsPerBatch`` cap, so multi-MB
@@ -41,7 +43,7 @@ witnesses the override mechanics).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,6 +52,32 @@ from pyspark.sql import functions as F
 FEATURE_SCHEMA = (
     "doc_id long, mime string, byte_len long, first_byte int, n_spaces long"
 )
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    row_fn: Callable[..., Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The module's one Arrow stage: ``row_fn(*values)`` runs on each row of
+    ``cols`` and every tuple it yields becomes one output row of ``schema``
+    (a flat DDL string). A row_fn yielding one tuple is a 1:1 map, several
+    is an explode (frames, windows), none drops the row. The output frame
+    is built from records with the schema's column names, so an empty
+    batch, or one whose rows all yield nothing, needs no special case."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                out
+                for vals in zip(*(pdf[c] for c in cols))
+                for out in row_fn(*vals)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema)
 
 
 def with_binary_payload(df: DataFrame, text_col: str, mime: str = "text/plain") -> DataFrame:
@@ -467,63 +495,27 @@ def synth_png16(doc_id: int) -> bytes:
     )
 
 
-def with_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`synth_png` fixture image as a binary payload
-    column via an Arrow batch pass (same plumbing as
-    :func:`with_ppm_payload`). Every third document is encoded Adam7
-    interlaced — decoded pixels are identical, so the oracle is unchanged
-    while the interlaced reassembly path is hash-checked end-to-end."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        synth_png(int(d), interlaced=int(d) % 3 == 0)
-                        for d in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
+def synth_png_mixed(doc_id: int) -> bytes:
+    """The PNG catalog fixture: :func:`synth_png` with every third document
+    encoded Adam7 interlaced — decoded pixels are identical, so the oracle
+    is unchanged while the interlaced reassembly path is hash-checked
+    end-to-end."""
+    return synth_png(doc_id, interlaced=doc_id % 3 == 0)
 
 
-def with_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`operators.jpeg.synth_jpeg` fixture as a binary
-    payload column (same Arrow plumbing as the PNG/PPM fixtures). The
-    fixture itself rotates grayscale+restart-marker / 4:4:4 / 4:2:0
-    encodings by ``doc_id % 3`` — all decoding to the same closed-form
-    pixels, so one oracle hash-checks every entropy-coding path."""
-    from .jpeg import synth_jpeg
+def with_payload(
+    df: DataFrame, synth: Callable[[int], bytes], id_col: str = "doc_id"
+) -> DataFrame:
+    """Attach ``synth(doc_id)`` — one of the closed-form ``synth_*`` fixtures
+    (:func:`synth_ppm`, :func:`synth_png_mixed`, :func:`synth_wav`,
+    :func:`synth_flac`, :func:`synth_y4m`, :func:`operators.jpeg.synth_jpeg`)
+    — as a binary payload column via an Arrow batch pass, the same
+    ``(doc_id, payload)`` shape a binaryFile read of real media would feed."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [synth_jpeg(int(d)) for d in pdf[id_col]],
-                }
-            )
+    def row(d):
+        yield d, synth(int(d))
 
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
-
-
-def with_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`synth_ppm` fixture image as a binary payload
-    column via an Arrow batch pass (same plumbing a binaryFile read of
-    real images would feed)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [synth_ppm(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
+    return map_rows(df, [id_col], row, "doc_id long, payload binary")
 
 
 DECODE_STATS_SCHEMA = (
@@ -543,20 +535,13 @@ def decode_image_stats(
     cheap; the payload column never leaves this stage."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "r_sum", "g_sum", "b_sum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_media(bytes(payload), mime)
-                px = img["pixels"].astype(np.int64)
-                out["doc_id"].append(doc_id)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                for c, k in enumerate(("r_sum", "g_sum", "b_sum")):
-                    out[k].append(int(px[:, :, min(c, img["channels"] - 1)].sum()))
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        img = decode_media(bytes(payload), mime)
+        px = img["pixels"].astype(np.int64)
+        sums = (int(px[:, :, min(c, img["channels"] - 1)].sum()) for c in range(3))
+        yield doc_id, img["width"], img["height"], *sums
 
-    return df.select("doc_id", "payload").mapInPandas(batches, DECODE_STATS_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, DECODE_STATS_SCHEMA)
 
 
 # The five mimes decode_media decodes for real, and the structural
@@ -592,12 +577,16 @@ def corrupt_payload(buf: bytes, kind: str) -> bytes:
     raise ValueError(f"unknown corruption kind {kind!r}")
 
 
-def with_corrupted_mixed_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture stage for the decode-quarantine witness: each document gets
-    one of the five real-decoder fixtures (mime = ``doc_id % 5``) with one
-    of the four structural corruptions applied (kind = ``doc_id // 5 % 4``
-    — decorrelated from the mime so every (mime, kind) cell is populated).
-    Same Arrow plumbing as the clean fixture attachers."""
+QUARANTINE_SCHEMA = (
+    "doc_id long, mime string, corruption string, ok boolean, err_kind string"
+)
+
+
+def _synth_corrupt(d: int) -> tuple[str, str, bytes]:
+    """The quarantine fixture for document ``d``: one of the five
+    real-decoder fixtures (mime = ``d % 5``) with one of the four structural
+    corruptions applied (kind = ``d // 5 % 4`` — decorrelated from the mime
+    so every (mime, kind) cell is populated). Returns (mime, kind, payload)."""
     from .jpeg import synth_jpeg
 
     synth = {
@@ -607,28 +596,31 @@ def with_corrupted_mixed_payload(df: DataFrame, id_col: str = "doc_id") -> DataF
         "image/x-portable-pixmap": synth_ppm,
         "video/x-yuv4mpeg": synth_y4m,
     }
+    mime = QUARANTINE_MIMES[d % 5]
+    kind = QUARANTINE_KINDS[(d // 5) % 4]
+    return mime, kind, corrupt_payload(synth[mime](d), kind)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mimes, kinds, payloads = [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                mime = QUARANTINE_MIMES[d % 5]
-                kind = QUARANTINE_KINDS[(d // 5) % 4]
-                mimes.append(mime)
-                kinds.append(kind)
-                payloads.append(corrupt_payload(synth[mime](d), kind))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "mime": mimes,
-                    "corruption": kinds,
-                    "payload": payloads,
-                }
-            )
 
-    return df.select(id_col).mapInPandas(
-        batches, "doc_id long, mime string, corruption string, payload binary"
+def _try_decode(payload: bytes, mime: str) -> tuple[bool, str | None]:
+    """Row-level fault isolation: (True, None) when ``payload`` decodes,
+    else (False, the exception's class name)."""
+    try:
+        decode_media(bytes(payload), mime)
+    except Exception as e:  # noqa: BLE001 — row-level quarantine
+        return False, type(e).__name__
+    return True, None
+
+
+def with_corrupted_mixed_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Fixture stage for the decode-quarantine witness: each document gets
+    its :func:`_synth_corrupt` payload with the mime and corruption kind
+    alongside, as ``(doc_id, mime, corruption, payload)``."""
+
+    def row(d):
+        yield d, *_synth_corrupt(int(d))
+
+    return map_rows(
+        df, [id_col], row, "doc_id long, mime string, corruption string, payload binary"
     )
 
 
@@ -648,30 +640,11 @@ def decode_with_quarantine(df: DataFrame) -> DataFrame:
     strings regardless of payload size; the payload never leaves this
     stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            oks, errs = [], []
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                try:
-                    decode_media(bytes(payload), mime)
-                    oks.append(True)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — row-level quarantine
-                    oks.append(False)
-                    errs.append(type(e).__name__)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "corruption": pdf["corruption"],
-                    "ok": oks,
-                    "err_kind": errs,
-                }
-            )
+    def row(doc_id, mime, corruption, payload):
+        yield doc_id, mime, corruption, *_try_decode(payload, mime)
 
-    return df.select("doc_id", "mime", "corruption", "payload").mapInPandas(
-        batches,
-        "doc_id long, mime string, corruption string, ok boolean, err_kind string",
+    return map_rows(
+        df, ["doc_id", "mime", "corruption", "payload"], row, QUARANTINE_SCHEMA
     )
 
 
@@ -684,57 +657,23 @@ def synth_corrupt_decode_quarantine(
     Arrow boundary at all.
 
     Semantics are exactly ``decode_with_quarantine(
-    with_corrupted_mixed_payload(df))`` (same closed-form mime/corruption
-    assignment, same routing, same output schema — the catalog oracle is
-    unchanged). The split form ships each ~KB payload JVM→Python→JVM twice
-    for zero work in between; at decade 3 (5M docs) that double crossing
-    was the adjudicated ×14.59 band break (SCALE_RUNS_DECADE3.json r11).
-    The split operators stay exported: ``decode_with_quarantine`` is the
-    production stage (real payloads arrive from storage, not a
-    synthesizer) and keeps its own pytest + fuzz coverage; this fusion is
-    the fixture-pipeline shape, where synthesis and decode share a worker.
+    with_corrupted_mixed_payload(df))`` (both run the same
+    :func:`_synth_corrupt` and :func:`_try_decode` per row — the catalog
+    oracle is unchanged). The split form ships each ~KB payload
+    JVM→Python→JVM twice for zero work in between; at decade 3 (5M docs)
+    that double crossing was the adjudicated ×14.59 band break
+    (SCALE_RUNS_DECADE3.json r11). The split operators stay exported:
+    ``decode_with_quarantine`` is the production stage (real payloads
+    arrive from storage, not a synthesizer) and keeps its own pytest + fuzz
+    coverage; this fusion is the fixture-pipeline shape, where synthesis
+    and decode share a worker.
     """
-    from .jpeg import synth_jpeg
 
-    synth = {
-        "image/png": synth_png,
-        "image/jpeg": synth_jpeg,
-        "audio/wav": synth_wav,
-        "image/x-portable-pixmap": synth_ppm,
-        "video/x-yuv4mpeg": synth_y4m,
-    }
+    def row(d):
+        mime, kind, payload = _synth_corrupt(int(d))
+        yield d, mime, kind, *_try_decode(payload, mime)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mimes, kinds, oks, errs = [], [], [], []
-            for d in pdf[id_col]:
-                d = int(d)
-                mime = QUARANTINE_MIMES[d % 5]
-                kind = QUARANTINE_KINDS[(d // 5) % 4]
-                mimes.append(mime)
-                kinds.append(kind)
-                payload = corrupt_payload(synth[mime](d), kind)
-                try:
-                    decode_media(payload, mime)
-                    oks.append(True)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — row-level quarantine
-                    oks.append(False)
-                    errs.append(type(e).__name__)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "mime": mimes,
-                    "corruption": kinds,
-                    "ok": oks,
-                    "err_kind": errs,
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        batches,
-        "doc_id long, mime string, corruption string, ok boolean, err_kind string",
-    )
+    return map_rows(df, [id_col], row, QUARANTINE_SCHEMA)
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -745,20 +684,11 @@ def extract_features(df: DataFrame) -> DataFrame:
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["meta"].map(lambda m: m["mime"]),
-                    "byte_len": payloads.map(len),
-                    "first_byte": payloads.map(lambda b: b[0] if len(b) else -1),
-                    "n_spaces": payloads.map(lambda b: b.count(b" ")),
-                }
-            )
+    def row(doc_id, payload, meta):
+        yield (doc_id, meta["mime"], len(payload),
+               payload[0] if len(payload) else -1, payload.count(b" "))
 
-    return df.select("doc_id", "payload", "meta").mapInPandas(batches, FEATURE_SCHEMA)
+    return map_rows(df, ["doc_id", "payload", "meta"], row, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int, first_byte int"
@@ -777,26 +707,12 @@ def sample_frames(df: DataFrame, stride: int = 256) -> DataFrame:
     stays bounded (frame sampling at 100 TB is an explode of the largest
     column in the dataset)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, sizes, firsts = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for k, start in enumerate(range(0, len(payload), stride)):
-                    frame = payload[start : start + stride]
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    sizes.append(len(frame))
-                    firsts.append(frame[0] if len(frame) else -1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": idxs,
-                    "frame_bytes": sizes,
-                    "first_byte": firsts,
-                }
-            )
+    def row(doc_id, payload):
+        for k, start in enumerate(range(0, len(payload), stride)):
+            frame = payload[start : start + stride]
+            yield doc_id, k, len(frame), frame[0] if len(frame) else -1
 
-    return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, FRAME_SCHEMA)
 
 
 RESIZE_SCHEMA = (
@@ -820,33 +736,14 @@ def resize_media(df: DataFrame, target: int = 64) -> DataFrame:
     the post-resize table is safely shuffleable."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ins, outs, strides, sums, firsts, lasts = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                stride = max(1, -(-n // target))
-                b = np.frombuffer(payload, dtype=np.uint8)[::stride]
-                ids.append(doc_id)
-                ins.append(n)
-                outs.append(len(b))
-                strides.append(stride)
-                sums.append(int(b.astype(np.int64).sum()))
-                firsts.append(int(b[0]) if len(b) else -1)
-                lasts.append(int(b[-1]) if len(b) else -1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "in_bytes": ins,
-                    "out_bytes": outs,
-                    "stride": strides,
-                    "checksum": sums,
-                    "first_byte": firsts,
-                    "last_byte": lasts,
-                }
-            )
+    def row(doc_id, payload):
+        n = len(payload)
+        stride = max(1, -(-n // target))
+        b = np.frombuffer(payload, dtype=np.uint8)[::stride]
+        yield (doc_id, n, len(b), stride, int(b.astype(np.int64).sum()),
+               int(b[0]) if len(b) else -1, int(b[-1]) if len(b) else -1)
 
-    return df.select("doc_id", "payload").mapInPandas(batches, RESIZE_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, RESIZE_SCHEMA)
 
 
 def perceptual_dhash(
@@ -870,31 +767,24 @@ def perceptual_dhash(
     one groupBy on the hash. The payload bytes never leave this stage.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_media(bytes(payload), mime)
-                px = img["pixels"].astype("int64")
-                w, h = img["width"], img["height"]
-                if img["channels"] >= 3:
-                    gray = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
-                else:
-                    gray = px[:, :, 0]
-                xs = [(c * w) // grid_w for c in range(grid_w)]
-                ys = [(r * h) // grid_h for r in range(grid_h)]
-                bits = [
-                    "1" if gray[ys[r], xs[c + 1]] > gray[ys[r], xs[c]] else "0"
-                    for r in range(grid_h)
-                    for c in range(grid_w - 1)
-                ]
-                ids.append(doc_id)
-                hashes.append("".join(bits))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
+    def row(doc_id, payload):
+        img = decode_media(bytes(payload), mime)
+        px = img["pixels"].astype("int64")
+        w, h = img["width"], img["height"]
+        if img["channels"] >= 3:
+            gray = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
+        else:
+            gray = px[:, :, 0]
+        xs = [(c * w) // grid_w for c in range(grid_w)]
+        ys = [(r * h) // grid_h for r in range(grid_h)]
+        bits = [
+            "1" if gray[ys[r], xs[c + 1]] > gray[ys[r], xs[c]] else "0"
+            for r in range(grid_h)
+            for c in range(grid_w - 1)
+        ]
+        yield doc_id, "".join(bits)
 
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, "doc_id long, dhash string"
-    )
+    return map_rows(df, ["doc_id", "payload"], row, "doc_id long, dhash string")
 
 
 def _wav_decode(buf: bytes) -> dict:
@@ -1009,22 +899,6 @@ def synth_wav(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-def with_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`synth_wav` fixture clip as a binary payload column
-    via an Arrow batch pass (same plumbing as :func:`with_png_payload`)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [synth_wav(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
-
-
 def synth_flac(doc_id: int) -> bytes:
     """Deterministic FLAC fixture for ``doc_id`` carrying EXACTLY the same
     PCM as :func:`synth_wav` — channels ``1 + id%2``, ``64 + id%57``
@@ -1059,22 +933,6 @@ def synth_flac(doc_id: int) -> bytes:
     )
 
 
-def with_flac_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`synth_flac` fixture clip as a binary payload
-    column via an Arrow batch pass (same plumbing as the WAV twin)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [synth_flac(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
-
-
 AUDIO_STATS_SCHEMA = (
     "doc_id long, sample_rate int, channels int, n_frames int, "
     "sum_samples long, sum_abs long, peak_abs int, zero_cross long"
@@ -1094,27 +952,16 @@ def decode_audio_stats(df: DataFrame, mime: str = "audio/x-wav") -> DataFrame:
     this stage, and the per-clip work is embarrassingly parallel."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = ("doc_id", "sample_rate", "channels", "n_frames",
-                    "sum_samples", "sum_abs", "peak_abs", "zero_cross")
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                wav = decode_media(bytes(payload), mime)
-                s = wav["samples"].astype(np.int64)
-                ch0 = s[:, 0]
-                nonneg = ch0 >= 0
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(wav["sample_rate"])
-                out["channels"].append(wav["channels"])
-                out["n_frames"].append(wav["n_frames"])
-                out["sum_samples"].append(int(s.sum()))
-                out["sum_abs"].append(int(np.abs(s).sum()))
-                out["peak_abs"].append(int(np.abs(s).max()) if s.size else 0)
-                out["zero_cross"].append(int((nonneg[1:] != nonneg[:-1]).sum()))
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        wav = decode_media(bytes(payload), mime)
+        s = wav["samples"].astype(np.int64)
+        nonneg = s[:, 0] >= 0
+        yield (doc_id, wav["sample_rate"], wav["channels"], wav["n_frames"],
+               int(s.sum()), int(np.abs(s).sum()),
+               int(np.abs(s).max()) if s.size else 0,
+               int((nonneg[1:] != nonneg[:-1]).sum()))
 
-    return df.select("doc_id", "payload").mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, AUDIO_STATS_SCHEMA)
 
 
 AUDIO_ENERGY_SCHEMA = (
@@ -1134,24 +981,13 @@ def audio_frame_energy(df: DataFrame, frame: int = 16) -> DataFrame:
     until whatever aggregates the contour downstream."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, widx, wn, energy = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                wav = _wav_decode(bytes(payload))
-                ch0 = wav["samples"][:, 0].astype(np.int64)
-                for k in range(0, len(ch0), frame):
-                    win = ch0[k : k + frame]
-                    ids.append(doc_id)
-                    widx.append(k // frame)
-                    wn.append(len(win))
-                    energy.append(int((win * win).sum()))
-            yield pd.DataFrame(
-                {"doc_id": ids, "window_idx": widx,
-                 "win_frames": wn, "energy": energy}
-            )
+    def row(doc_id, payload):
+        ch0 = _wav_decode(bytes(payload))["samples"][:, 0].astype(np.int64)
+        for k in range(0, len(ch0), frame):
+            win = ch0[k : k + frame]
+            yield doc_id, k // frame, len(win), int((win * win).sum())
 
-    return df.select("doc_id", "payload").mapInPandas(batches, AUDIO_ENERGY_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, AUDIO_ENERGY_SCHEMA)
 
 
 # Y4M chroma subsampling -> bytes per frame as a function of (w, h).
@@ -1274,22 +1110,6 @@ def synth_y4m(doc_id: int) -> bytes:
     return b"".join(parts)
 
 
-def with_y4m_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the :func:`synth_y4m` fixture clip as a binary payload column
-    via an Arrow batch pass (same plumbing as :func:`with_png_payload`)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [synth_y4m(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(batches, "doc_id long, payload binary")
-
-
 VIDEO_FRAME_SCHEMA = (
     "doc_id long, frame_idx int, width int, height int, "
     "luma_sum long, luma_min int, luma_max int"
@@ -1311,25 +1131,14 @@ def decode_video_frames(df: DataFrame, stride: int = 2) -> DataFrame:
     payload never leaves the stage."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = ("doc_id", "frame_idx", "width", "height",
-                    "luma_sum", "luma_min", "luma_max")
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                vid = _y4m_decode(bytes(payload))
-                for f in range(0, vid["n_frames"], stride):
-                    luma = vid["frames"][f].astype(np.int64)
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["width"].append(vid["width"])
-                    out["height"].append(vid["height"])
-                    out["luma_sum"].append(int(luma.sum()))
-                    out["luma_min"].append(int(luma.min()))
-                    out["luma_max"].append(int(luma.max()))
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        vid = _y4m_decode(bytes(payload))
+        for f in range(0, vid["n_frames"], stride):
+            luma = vid["frames"][f].astype(np.int64)
+            yield (doc_id, f, vid["width"], vid["height"],
+                   int(luma.sum()), int(luma.min()), int(luma.max()))
 
-    return df.select("doc_id", "payload").mapInPandas(batches, VIDEO_FRAME_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, VIDEO_FRAME_SCHEMA)
 
 
 SCENE_CUT_SCHEMA = (
@@ -1354,25 +1163,18 @@ def scene_cut_stats(df: DataFrame, threshold_num: int = 40) -> DataFrame:
     inside the decode stage."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nf, cuts, mx = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                vid = _y4m_decode(bytes(payload))
-                n_px = vid["width"] * vid["height"]
-                deltas = [
-                    int(np.abs(
-                        vid["frames"][f].astype(np.int64)
-                        - vid["frames"][f - 1].astype(np.int64)
-                    ).sum())
-                    for f in range(1, vid["n_frames"])
-                ]
-                ids.append(doc_id)
-                nf.append(vid["n_frames"])
-                cuts.append(sum(1 for d in deltas if d > threshold_num * n_px))
-                mx.append(max(deltas) if deltas else 0)
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_frames": nf, "n_cuts": cuts, "max_delta": mx}
-            )
+    def row(doc_id, payload):
+        vid = _y4m_decode(bytes(payload))
+        n_px = vid["width"] * vid["height"]
+        deltas = [
+            int(np.abs(
+                vid["frames"][f].astype(np.int64)
+                - vid["frames"][f - 1].astype(np.int64)
+            ).sum())
+            for f in range(1, vid["n_frames"])
+        ]
+        yield (doc_id, vid["n_frames"],
+               sum(1 for d in deltas if d > threshold_num * n_px),
+               max(deltas) if deltas else 0)
 
-    return df.select("doc_id", "payload").mapInPandas(batches, SCENE_CUT_SCHEMA)
+    return map_rows(df, ["doc_id", "payload"], row, SCENE_CUT_SCHEMA)

@@ -15,6 +15,7 @@ Conventions:
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -378,91 +379,25 @@ PRIORITY_ORDER: tuple[str, ...] = (
 )
 
 
+# Plan modules in registration order: entries not named in PRIORITY_ORDER
+# follow in this order.
+_PLAN_MODULES: tuple[str, ...] = (
+    "bridge", "tpch", "llmdata", "streaming_q", "extras", "advanced",
+    "relational2", "llmdata2", "streaming_q2", "extras2", "tpch2", "extras3",
+    "extras4", "extras5", "extras6", "extras7", "extras8", "extras9",
+    "extras10", "extras11", "extras12", "extras13", "extras14", "extras15",
+    "extras16", "extras17", "extras18", "extras19", "extras20", "extras21",
+    "extras22", "extras23", "extras24", "extras25", "extras26", "extras27",
+    "extras28", "extras29", "extras30", "extras31", "extras32", "extras33",
+    "extras34", "extras35",
+)
+
+
 def all_queries() -> dict[str, Query]:
     """Assemble the full catalog (import here to keep module import light)."""
-    from . import (
-        advanced,
-        bridge,
-        extras,
-        extras2,
-        llmdata,
-        llmdata2,
-        relational2,
-        streaming_q,
-        streaming_q2,
-        tpch,
-        tpch2,
-        extras3,
-        extras4,
-        extras5,
-        extras6,
-        extras7,
-        extras8,
-        extras9,
-        extras10,
-        extras11,
-        extras12,
-        extras13,
-        extras14,
-        extras15,
-        extras16,
-        extras17,
-        extras18,
-        extras19,
-        extras20,
-        extras21,
-        extras22,
-        extras23,
-        extras24,
-        extras25,
-        extras26,
-        extras27,
-        extras28,
-        extras29,
-        extras30,
-        extras31,
-        extras32,
-        extras33,
-        extras34,
-        extras35,
-    )
-
     out: dict[str, Query] = {}
-    for mod in (
-        bridge, tpch, llmdata, streaming_q, extras, advanced,
-        relational2, llmdata2, streaming_q2, extras2, tpch2, extras3, extras4,
-        extras5,
-        extras6,
-        extras7,
-        extras8,
-        extras9,
-        extras10,
-        extras11,
-        extras12,
-        extras13,
-        extras14,
-        extras15,
-        extras16,
-        extras17,
-        extras18,
-        extras19,
-        extras20,
-        extras21,
-        extras22,
-        extras23,
-        extras24,
-        extras25,
-        extras26,
-        extras27,
-        extras28,
-        extras29,
-        extras30,
-        extras31,
-        extras32,
-        extras33,
-        extras34,
-        extras35,
-    ):
+    for modname in _PLAN_MODULES:
+        mod = importlib.import_module(f".{modname}", __package__)
         for q in mod.QUERIES:
             if q.name in out:
                 raise ValueError(f"duplicate query name: {q.name}")

@@ -402,10 +402,10 @@ def _multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final group-free projection; the payload bytes never leave
     the decode stage. The oracle replays the closed-form pixel function
     ((doc_id*7 + i*13) % 256) with unnest(generate_series(...))."""
-    from ..operators.multimodal import decode_image_stats, with_ppm_payload
+    from ..operators.multimodal import decode_image_stats, synth_ppm, with_payload
 
     d = load_table(spark, sf_dir, "documents")
-    return sorted_once(decode_image_stats(with_ppm_payload(d)), "doc_id")
+    return sorted_once(decode_image_stats(with_payload(d, synth_ppm)), "doc_id")
 
 
 _DECODE_PPM_SQL = """
@@ -448,13 +448,15 @@ def _multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single small parquet file otherwise pins the chain to one task
     (4.2 s → 3.5 s at sf0.1; the full rationale and the measured A/B
     across all media codecs live on the JPEG entry, plans/extras26.py)."""
-    from ..operators.multimodal import decode_image_stats, with_png_payload
+    from ..operators.multimodal import (
+        decode_image_stats, synth_png_mixed, with_payload,
+    )
 
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     return sorted_once(
-        decode_image_stats(with_png_payload(d), mime="image/png"), "doc_id"
+        decode_image_stats(with_payload(d, synth_png_mixed), mime="image/png"), "doc_id"
     )
 
 

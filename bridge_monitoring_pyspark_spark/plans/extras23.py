@@ -108,11 +108,13 @@ def _phash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by hash: each output row is one perceptual equivalence class with its
     size and smallest doc_id as the keeper. Zero shuffle until the
     64-char-hash groupBy; payload bytes never leave the decode stage."""
-    from ..operators.multimodal import perceptual_dhash, with_png_payload
+    from ..operators.multimodal import (
+        perceptual_dhash, synth_png_mixed, with_payload,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     return sorted_once(
-        perceptual_dhash(with_png_payload(d), mime="image/png")
+        perceptual_dhash(with_payload(d, synth_png_mixed), mime="image/png")
         .groupBy("dhash")
         .agg(
             F.count(F.lit(1)).alias("n_images"),

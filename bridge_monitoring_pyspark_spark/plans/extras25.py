@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.multimodal import (
     audio_frame_energy,
     decode_audio_stats,
-    with_wav_payload,
+    synth_wav,
+    with_payload,
 )
 from ..sources.readers import load_table
 from ..functions.plan import sorted_once
@@ -84,7 +85,7 @@ def _multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sample statistics. The oracle replays the closed-form sample
     function, so any decode defect is a hash fail."""
     d = load_table(spark, sf_dir, "documents")
-    return sorted_once(decode_audio_stats(with_wav_payload(d)), "doc_id")
+    return sorted_once(decode_audio_stats(with_payload(d, synth_wav)), "doc_id")
 
 
 _DECODE_WAV_SQL = _WAV_PRELUDE + """
@@ -118,7 +119,7 @@ def _audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     width; the windowed explode happens on the compact numeric side."""
     d = load_table(spark, sf_dir, "documents")
     return sorted_once(
-        audio_frame_energy(with_wav_payload(d)), "doc_id", "window_idx"
+        audio_frame_energy(with_payload(d, synth_wav)), "doc_id", "window_idx"
     )
 
 
@@ -158,11 +159,11 @@ def _video_frame_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the closed-form luma function
     ((id*11 + f*131 + i*17) % 256); the chroma planes use a different
     form, so any plane misalignment in the decoder is a hash fail."""
-    from ..operators.multimodal import decode_video_frames, with_y4m_payload
+    from ..operators.multimodal import decode_video_frames, synth_y4m, with_payload
 
     d = load_table(spark, sf_dir, "documents")
     return sorted_once(
-        decode_video_frames(with_y4m_payload(d)), "doc_id", "frame_idx"
+        decode_video_frames(with_payload(d, synth_y4m)), "doc_id", "frame_idx"
     )
 
 
@@ -191,10 +192,10 @@ def _video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     = mean |delta| above threshold 40. The shot-boundary pass a video
     curation pipeline runs before sampling training clips. Temporal state
     stays inside one clip = one row — embarrassingly parallel."""
-    from ..operators.multimodal import scene_cut_stats, with_y4m_payload
+    from ..operators.multimodal import scene_cut_stats, synth_y4m, with_payload
 
     d = load_table(spark, sf_dir, "documents")
-    return sorted_once(scene_cut_stats(with_y4m_payload(d)), "doc_id")
+    return sorted_once(scene_cut_stats(with_payload(d, synth_y4m)), "doc_id")
 
 
 _SCENE_CUT_SQL = _Y4M_PRELUDE + """

@@ -47,13 +47,14 @@ def _multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage. The cheap decoders (WAV, Y4M) measured FASTER single-partition
     — the shuffle costs more than their decode — so only the
     CPU-expensive codecs carry the fan-out."""
-    from ..operators.multimodal import decode_image_stats, with_jpeg_payload
+    from ..operators.jpeg import synth_jpeg
+    from ..operators.multimodal import decode_image_stats, with_payload
 
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     return sorted_once(
-        decode_image_stats(with_jpeg_payload(d), mime="image/jpeg"), "doc_id"
+        decode_image_stats(with_payload(d, synth_jpeg), mime="image/jpeg"), "doc_id"
     )
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.multimodal import decode_audio_stats, with_flac_payload
+from ..operators.multimodal import decode_audio_stats, synth_flac, with_payload
 from ..sources.readers import load_table
 from ..functions.plan import sorted_once
 from .catalog import Query
@@ -66,7 +66,7 @@ def _multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     return sorted_once(
-        decode_audio_stats(with_flac_payload(d), mime="audio/flac"), "doc_id"
+        decode_audio_stats(with_payload(d, synth_flac), mime="audio/flac"), "doc_id"
     )
 
 

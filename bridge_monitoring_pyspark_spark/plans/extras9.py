@@ -160,14 +160,35 @@ def lloyd_centroids(pts: DataFrame) -> list[tuple[int, list[float]]]:
         cells = (
             assigned.select("cluster", F.posexplode("embedding").alias("dim", "x"))
             .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
+            .agg(F.avg("x").alias("m"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        upd: dict[int, list[float]] = {}
-        for r in cells:
-            upd.setdefault(r.cluster, [0.0] * KMEANS_DIM)[r.dim] = float(r.m)
+        upd = _centroid_update(cells)
         cents = [(cid, upd.get(cid, vec)) for cid, vec in cents]
     return cents
+
+
+def _centroid_update(cells: list) -> dict[int, list[float]]:
+    """Assemble collected (cluster, dim, m, n) cells into centroids, refusing
+    ragged input: every embedding must be exactly KMEANS_DIM wide. A long
+    one shows as a dim out of range; a short one as a dim missing from its
+    cluster or averaged over fewer points than the cluster's other dims."""
+    upd: dict[int, list] = {}
+    sizes: dict[int, set[int]] = {}
+    for r in cells:
+        if not 0 <= r.dim < KMEANS_DIM:
+            raise ValueError(
+                f"ragged embedding: element {r.dim} is beyond width {KMEANS_DIM}"
+            )
+        upd.setdefault(r.cluster, [None] * KMEANS_DIM)[r.dim] = float(r.m)
+        sizes.setdefault(r.cluster, set()).add(r.n)
+    for cid, vec in upd.items():
+        if None in vec or len(sizes[cid]) != 1:
+            raise ValueError(
+                f"ragged embedding: a point in cluster {cid} is narrower "
+                f"than width {KMEANS_DIM}"
+            )
+    return upd
 
 
 def _kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,3 +25,16 @@ def test_noncanonical_cpus_writes_side_file():
 def test_noncanonical_sf_writes_side_file_regardless_of_cpus():
     assert artifact_name(0.001, "32") == "BENCH_sf0.001.json"
     assert artifact_name(0.001, "8") == "BENCH_sf0.001.json"
+
+
+def test_cpus_compared_as_integer():
+    # zero-padded or space-padded 32 is still the canonical core count
+    assert artifact_name(0.1, "032") == "BENCH.json"
+    assert artifact_name(0.1, " 32 ") == "BENCH.json"
+    assert artifact_name(0.1, "08") == "BENCH_c8.json"
+
+
+def test_unparseable_cpus_writes_side_file():
+    assert artifact_name(0.1, "32x") == "BENCH_c32x.json"
+    assert artifact_name(0.1, "") == "BENCH_c.json"
+

@@ -19,13 +19,16 @@ from bridge_monitoring_pyspark_spark.operators.multimodal import (
     QUARANTINE_MIMES,
     corrupt_payload,
     decode_media,
+    decode_image_stats,
     decode_with_quarantine,
+    map_rows,
     synth_corrupt_decode_quarantine,
     with_corrupted_mixed_payload,
     synth_ppm,
     synth_png,
     synth_wav,
     synth_y4m,
+    with_payload,
 )
 from bridge_monitoring_pyspark_spark.operators.jpeg import synth_jpeg
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
@@ -193,3 +196,68 @@ def test_fused_quarantine_equals_split_form(spark):
         .collect()
     )
     assert fused == split
+
+
+# ------------------------------------------------------------- map_rows stage
+
+
+def _fields(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+
+def test_map_rows_over_zero_row_partitions(spark):
+    # 3 rows over 8 partitions: at least 5 partitions are empty, and every
+    # stage must pass them through without a special case.
+    ids = spark.range(3).repartition(8).selectExpr("id AS doc_id")
+
+    def row(d):
+        yield d, f"doc{d}"
+
+    out = map_rows(ids, ["doc_id"], row, "doc_id long, tag string")
+    assert _fields(out) == [("doc_id", "bigint"), ("tag", "string")]
+    assert sorted(map(tuple, out.collect())) == [(0, "doc0"), (1, "doc1"), (2, "doc2")]
+
+    stats = decode_image_stats(with_payload(ids, synth_ppm)).collect()
+    assert sorted(r.doc_id for r in stats) == [0, 1, 2]
+    for r in stats:
+        img = decode_media(synth_ppm(r.doc_id), "image/x-portable-pixmap")
+        assert (r.width, r.height) == (img["width"], img["height"])
+        assert r.r_sum == int(img["pixels"][:, :, 0].astype("int64").sum())
+
+
+def test_map_rows_row_fn_yielding_nothing(spark):
+    ids = spark.range(10).selectExpr("id AS doc_id")
+    schema = "doc_id long, half long, ok boolean"
+
+    def evens(d):
+        if d % 2 == 0:
+            yield d, d // 2, True
+
+    some = map_rows(ids, ["doc_id"], evens, schema)
+    assert _fields(some) == [
+        ("doc_id", "bigint"), ("half", "bigint"), ("ok", "boolean"),
+    ]
+    want = [(d, d // 2, True) for d in range(0, 10, 2)]
+    assert sorted(map(tuple, some.collect())) == want
+
+    none = map_rows(ids, ["doc_id"], lambda d: iter(()), schema)
+    assert _fields(none) == _fields(some)
+    assert none.collect() == []
+
+
+def test_map_rows_one_to_many(spark):
+    df = spark.createDataFrame(
+        [(0, bytearray(b"")), (1, bytearray(b"ab")), (2, bytearray(b"abcde"))],
+        "doc_id long, payload binary",
+    )
+
+    def frames(doc_id, payload):
+        for k in range(0, len(payload), 2):
+            yield doc_id, k // 2, payload[k : k + 2]
+
+    out = map_rows(
+        df, ["doc_id", "payload"], frames, "doc_id long, idx int, frame binary"
+    )
+    assert _fields(out) == [("doc_id", "bigint"), ("idx", "int"), ("frame", "binary")]
+    got = sorted((r.doc_id, r.idx, bytes(r.frame)) for r in out.collect())
+    assert got == [(1, 0, b"ab"), (2, 0, b"ab"), (2, 1, b"cd"), (2, 2, b"e")]

@@ -4,9 +4,15 @@ bit-for-bit numpy replay (same deterministic init, same iteration count)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras9 import KMEANS_ITERS, KMEANS_K
+from bridge_monitoring_pyspark_spark.plans.extras9 import (
+    KMEANS_DIM,
+    KMEANS_ITERS,
+    KMEANS_K,
+    lloyd_centroids,
+)
 from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
 from testdata_paths import SF_SMOKE
@@ -40,3 +46,16 @@ def test_kmeans_matches_numpy_replay(spark):
         for r in all_queries()["kmeans_embeddings"].build(spark, SF_SMOKE).collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize("width", [KMEANS_DIM - 1, KMEANS_DIM + 1])
+def test_lloyd_update_rejects_ragged_embedding(spark, width):
+    # one short or one long vector among full-width ones must fail loudly,
+    # not index out of range or average a missing element as 0.0
+    rng = np.random.default_rng(7)
+    rows = [(i, rng.normal(size=KMEANS_DIM).tolist()) for i in range(3 * KMEANS_K)]
+    rows.append((len(rows), rng.normal(size=width).tolist()))
+    pts = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="ragged embedding"):
+        lloyd_centroids(pts)
+
