@@ -2,23 +2,37 @@
 
 Four tiers (brute-force / IVF / hyperplane-LSH / product quantization):
 
-* **Arrow/numpy brute-force** — the workhorse: the small side (queries, or
-  the right half of a pair search) is collected, L2-normalized, and
-  broadcast as one numpy matrix; ``mapInPandas`` streams the corpus through
-  BLAS matmuls per Arrow batch. Exact, embarrassingly parallel, zero
-  shuffle of the corpus; per-batch partial top-k caps the emitted rows at
-  k×|queries| per batch. This is the documented exception to "UDFs are the
-  slow path": JVM higher-order-function expressions are interpreted
-  (outside codegen) and lose to Arrow+BLAS by >10x on wide vectors.
-* **JVM-expression cosine** — :func:`cosine_topk_bruteforce` keeps a pure
-  Column-expression form for composability inside larger plans (it is also
-  what the IVF assignment passes use, where vectors-per-row are few).
+* **Brute-force** — exact, in two forms. The Arrow/numpy form is the
+  workhorse: the small side (queries, or the right half of a pair search)
+  is collected, L2-normalized, and broadcast as one numpy matrix;
+  ``mapInPandas`` streams the corpus through BLAS matmuls per Arrow batch.
+  Embarrassingly parallel, zero shuffle of the corpus; per-batch partial
+  top-k caps the emitted rows at k×|queries| per batch. This is the
+  documented exception to "UDFs are the slow path": JVM
+  higher-order-function expressions are interpreted (outside codegen) and
+  lose to Arrow+BLAS by >10x on wide vectors. The JVM-expression form,
+  :func:`cosine_topk_bruteforce`, keeps a pure Column-expression plan for
+  composability inside larger plans (``ivf_topk(assignment="sql")``
+  assigns the same way).
 * **IVF (inverted-file) top-k** — the sub-linear path: partition the corpus
   by nearest centroid (broadcast centroid table, one narrow pass), then
   search only the ``n_probe`` closest clusters per query. Recall < 1 by
   construction; measured in tests against brute force. Centroid selection
   here is deterministic (fixed ids) so results are stable; production
   would k-means on a sample.
+* **Hyperplane LSH** — :func:`hyperplane_lsh_topk` / :func:`hyperplane_lsh_pairs`
+  bucket by random-projection sign bits and exactly re-score the bucket
+  collisions.
+* **Product quantization** — :func:`pq_topk` scores byte codes against
+  per-query distance tables, then refines a shortlist exactly.
+
+Shared kernels — each similarity decision is written once:
+:func:`_normalized_batch` (unit rows, zero-norm guard),
+:func:`_quantize_half_up` + :func:`_partial_topk_rows` (the tie-safe
+composite-key cut), :func:`_partial_topk_frame` (one query x corpus block
+to partial top-k rows), :func:`_centroid_assigner` (the one Arrow
+nearest-centroid pass), :func:`_rank_neighbors` (the final per-query rank
+and output columns) and :func:`_planes` (the LSH hyperplanes).
 
 Ranking determinism: ordering is on round(sim, 6) desc then neighbor id, so
 double-precision noise below 1e-6 can't reorder results across engines.
@@ -47,8 +61,11 @@ def _normalized_batch(vectors) -> np.ndarray:
     Zero-norm rows are guarded to norm 1 (sim contribution 0) — the ONE
     definition of the Arrow paths' zero-vector contract (the SQL paths
     instead fail loudly under ANSI); keeping it in one place stops the
-    guard drifting between mapInPandas bodies."""
+    guard drifting between mapInPandas bodies. No vectors at all give a
+    (0, 0) matrix."""
     m = np.array(list(vectors), dtype=np.float64)
+    if not len(m):
+        return m.reshape(0, 0)
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
     return m / norms
@@ -59,13 +76,18 @@ def _normalized_matrix(rows: list, id_idx: int = 0, vec_idx: int = 1):
     return ids, _normalized_batch(r[vec_idx] for r in rows)
 
 
+def _id_matrix(pdf: pd.DataFrame):
+    """(ids, unit matrix) of a pandas block with ``__id``/``__vec`` columns."""
+    return pdf["__id"].to_numpy(dtype=np.int64), _normalized_batch(pdf["__vec"])
+
+
 def _quantize_half_up(sims: np.ndarray) -> np.ndarray:
     """Quantize similarities to int64 micro-units, rounding half AWAY FROM
     ZERO — the one rule shared by Spark's ``F.round(sim, 6)`` (java
     HALF_UP) and DuckDB's ``round()``. np.round is half-to-even, so a sim
     landing exactly on a .5 micro-unit boundary would otherwise be cut
     here yet ranked k-th by the merge. Single source of truth: both the
-    partial top-k cut and the Arrow IVF assignment call this, so the
+    partial top-k cut and the Arrow centroid assigner call this, so the
     rounding rule cannot drift between the cut and the merge (the bug
     class c0e7e30 fixed)."""
     f = sims * 1_000_000.0
@@ -104,6 +126,64 @@ def _partial_topk_rows(sims: np.ndarray, cids: np.ndarray, k: int):
     return np.argpartition(-composite, take - 1, axis=0)[:take], take
 
 
+def _partial_topk_frame(qids, qmat, cids, cmat, k: int) -> pd.DataFrame:
+    """(query_id, neighbor_id, sim) partial top-k rows of one corpus block
+    (``cids``/``cmat``) against the unit query matrix. Self-matches (same
+    id) score -inf; each caller drops them itself. An empty side gives an
+    empty frame."""
+    if not len(qids) or not len(cids):
+        return pd.DataFrame({"query_id": [], "neighbor_id": [], "sim": []})
+    sims = cmat @ qmat.T  # (n_corpus, n_queries)
+    sims[cids[:, None] == qids[None, :]] = -np.inf  # self-match
+    top, take = _partial_topk_rows(sims, cids, k)  # per query, tie-safe
+    rows = top.T.ravel()
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, take),
+            "neighbor_id": cids[rows],
+            "sim": sims[rows, np.repeat(np.arange(len(qids)), take)],
+        }
+    )
+
+
+def _rank_neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """The one ranking tail of every neighbour search: per ``query_id``, the
+    top ``k`` ``(neighbor_id, sim)`` rows by round(sim, 6) DESC then
+    neighbor_id ASC, as (query_id, rank int, neighbor_id, cosine_sim =
+    round(sim, 4))."""
+    ranked = top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
+        k,
+        rank_col="rank",
+    )
+    return ranked.select(
+        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
+        F.round("sim", 4).alias("cosine_sim"),
+    )
+
+
+def _with_norm(df: DataFrame, id_col: str, vec_col: str, side: str, *extra):
+    """One side of a JVM-expression pair search: ``(query_id, __qv, *extra,
+    __qn)`` for ``side="q"``, ``(neighbor_id, __cv, *extra, __cn)`` for
+    ``side="c"``. The L2 norm is hoisted to one evaluation per row, so the
+    pair loop of :func:`_qc_cosine` runs a single cross dot."""
+    return df.select(
+        F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
+        F.col(vec_col).alias(f"__{side}v"),
+        *extra,
+        l2_norm(F.col(vec_col)).alias(f"__{side}n"),
+    )
+
+
+def _qc_cosine():
+    """Cosine of a joined (query, corpus) row pair of :func:`_with_norm` sides."""
+    return cosine_similarity_prenorm(
+        F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
+    )
+
+
 def cosine_topk_arrow(
     queries: DataFrame,
     corpus: DataFrame,
@@ -129,33 +209,16 @@ def cosine_topk_arrow(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids, qmat = bc.value
         for pdf in it:
-            if not len(pdf):
-                continue
-            cids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            sims = _normalized_batch(pdf["__vec"]) @ qmat.T  # (batch, n_queries)
-            sims[cids[:, None] == qids[None, :]] = -np.inf  # self-match
-            top, take = _partial_topk_rows(sims, cids, k)  # per query, tie-safe
-            out = {
-                "query_id": np.repeat(qids, take),
-                "neighbor_id": cids[top.T.ravel()],
-                "sim": sims[top.T.ravel(), np.repeat(np.arange(len(qids)), take)],
-            }
-            yield pd.DataFrame(out)
+            if len(pdf):
+                yield _partial_topk_frame(
+                    qids, qmat, pdf["neighbor_id"].to_numpy(dtype=np.int64),
+                    _normalized_batch(pdf["__vec"]), k,
+                )
 
     partial = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__vec")
     ).mapInPandas(batches, "query_id long, neighbor_id long, sim double")
-    ranked = top_k_per_group(
-        partial.where(F.col("sim") != float("-inf")),
-        ["query_id"],
-        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select(
-        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
-        F.round("sim", 4).alias("cosine_sim"),
-    )
+    return _rank_neighbors(partial.where(F.col("sim") != float("-inf")), k)
 
 
 # Target rows per block for auto-sized block decompositions. The per-task
@@ -235,34 +298,22 @@ def cosine_pairs_blocked(
 
     def block_pairs(key, pdf):
         bi, bj = key
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine_sim": []})
-        if bi == bj:
-            ids, mat = _normalized_matrix(
-                list(zip(pdf["__id"], pdf["__vec"]))
-            )
-            sims = mat @ mat.T
-            rows, cols = np.where(
-                (sims >= threshold) & (ids[:, None] < ids[None, :])
-            )
-            a_ids, b_ids = ids[rows], ids[cols]
-        else:
-            a = pdf[pdf["__blk"] == bi]
-            b = pdf[pdf["__blk"] == bj]
-            if not len(a) or not len(b):
-                return empty
-            aids, amat = _normalized_matrix(list(zip(a["__id"], a["__vec"])))
-            bids, bmat = _normalized_matrix(list(zip(b["__id"], b["__vec"])))
-            sims = amat @ bmat.T
-            rows, cols = np.where(sims >= threshold)
-            left, right = aids[rows], bids[cols]
-            a_ids = np.minimum(left, right)
-            b_ids = np.maximum(left, right)
-        if not len(a_ids):
-            return empty
+        a, b = pdf[pdf["__blk"] == bi], pdf[pdf["__blk"] == bj]
+        if not len(a) or not len(b):
+            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine_sim": []})
+        aids, amat = _id_matrix(a)
+        # the diagonal block multiplies ONE array by its own transpose
+        # (BLAS syrk); two equal copies would take gemm and move last bits
+        bids, bmat = (aids, amat) if bi == bj else _id_matrix(b)
+        sims = amat @ bmat.T
+        rows, cols = np.where(
+            (sims >= threshold) & ((bi != bj) | (aids[:, None] < bids[None, :]))
+        )
+        left, right = aids[rows], bids[cols]
         return pd.DataFrame(
             {
-                "vec_a": a_ids,
-                "vec_b": b_ids,
+                "vec_a": np.minimum(left, right),
+                "vec_b": np.maximum(left, right),
                 "cosine_sim": np.round(sims[rows, cols], 4),
             }
         )
@@ -296,11 +347,8 @@ def _cosine_pairs_smallside_verifier(
         for pdf in it:
             if not len(pdf):
                 continue
-            aids = pdf["__id"].to_numpy(dtype=np.int64)
-            amat = np.array(pdf["__vec"].tolist(), dtype=np.float64)
-            anorm = np.linalg.norm(amat, axis=1, keepdims=True)
-            anorm[anorm == 0.0] = 1.0
-            sims = (amat / anorm) @ bmat.T
+            aids, amat = _id_matrix(pdf)
+            sims = amat @ bmat.T
             rows, cols = np.where((sims >= threshold) & (aids[:, None] < bids[None, :]))
             yield pd.DataFrame(
                 {
@@ -354,40 +402,23 @@ def knn_join_blocked(
         n_query_blocks = auto_n_blocks(queries)
     if n_corpus_blocks is None:
         n_corpus_blocks = auto_n_blocks(corpus)
-    qs = queries.select(
-        F.col(query_id).alias("__id"),
-        F.col(query_vec).cast("array<double>").alias("__vec"),
-        F.lit("q").alias("__side"),
-        F.pmod(F.col(query_id), F.lit(n_query_blocks)).cast("int").alias("__own"),
-    ).withColumn(
-        "__cell",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.col("__own").alias("gq"),
-                    F.lit(j).cast("int").alias("gc"),
-                )
-                for j in range(n_corpus_blocks)
-            ])
-        ),
-    )
-    cs = corpus.select(
-        F.col(corpus_id).alias("__id"),
-        F.col(corpus_vec).cast("array<double>").alias("__vec"),
-        F.lit("c").alias("__side"),
-        F.pmod(F.col(corpus_id), F.lit(n_corpus_blocks)).cast("int").alias("__own"),
-    ).withColumn(
-        "__cell",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).cast("int").alias("gq"),
-                    F.col("__own").alias("gc"),
-                )
-                for i in range(n_query_blocks)
-            ])
-        ),
-    )
+
+    def grid_side(df, id_col, vec_col, side, n_own, n_other):
+        # a query row fills its block's row of the grid, a corpus row its column
+        def cell(o):
+            own, other = F.col("__own"), F.lit(o).cast("int")
+            gq, gc = (own, other) if side == "q" else (other, own)
+            return F.struct(gq.alias("gq"), gc.alias("gc"))
+
+        return df.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).cast("array<double>").alias("__vec"),
+            F.lit(side).alias("__side"),
+            F.pmod(F.col(id_col), F.lit(n_own)).cast("int").alias("__own"),
+        ).withColumn("__cell", F.explode(F.array(*[cell(o) for o in range(n_other)])))
+
+    qs = grid_side(queries, query_id, query_vec, "q", n_query_blocks, n_corpus_blocks)
+    cs = grid_side(corpus, corpus_id, corpus_vec, "c", n_corpus_blocks, n_query_blocks)
     grid = qs.unionByName(cs).select(
         F.col("__cell.gq").alias("__gq"),
         F.col("__cell.gc").alias("__gc"),
@@ -397,38 +428,17 @@ def knn_join_blocked(
     )
 
     def cell_topk(key, pdf):
-        q = pdf[pdf["__side"] == "q"]
-        c = pdf[pdf["__side"] == "c"]
-        if not len(q) or not len(c):
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "sim": []})
-        qids, qmat = _normalized_matrix(list(zip(q["__id"], q["__vec"])))
-        cids, cmat = _normalized_matrix(list(zip(c["__id"], c["__vec"])))
-        sims = cmat @ qmat.T  # (nc, nq)
-        sims[cids[:, None] == qids[None, :]] = -np.inf  # self-match
-        top, take = _partial_topk_rows(sims, cids, k)  # tie-safe cut
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, take),
-                "neighbor_id": cids[top.T.ravel()],
-                "sim": sims[top.T.ravel(), np.repeat(np.arange(len(qids)), take)],
-            }
+        out = _partial_topk_frame(
+            *_id_matrix(pdf[pdf["__side"] == "q"]),
+            *_id_matrix(pdf[pdf["__side"] == "c"]),
+            k,
         )
         return out[out["sim"] != -np.inf]
 
     partial = grid.groupBy("__gq", "__gc").applyInPandas(
         cell_topk, "query_id long, neighbor_id long, sim double"
     )
-    ranked = top_k_per_group(
-        partial,
-        ["query_id"],
-        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select(
-        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
-        F.round("sim", 4).alias("cosine_sim"),
-    )
+    return _rank_neighbors(partial, k)
 
 
 def cosine_topk_bruteforce(
@@ -441,37 +451,14 @@ def cosine_topk_bruteforce(
     k: int,
 ) -> DataFrame:
     """Exact top-k neighbors per query (self-matches excluded)."""
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("__qv"),
-        l2_norm(F.col(query_vec)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(corpus_vec).alias("__cv"),
-        l2_norm(F.col(corpus_vec)).alias("__cn"),
-    )
+    q = _with_norm(queries, query_id, query_vec, "q")
+    c = _with_norm(corpus, corpus_id, corpus_vec, "c")
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "sim",
-            cosine_similarity_prenorm(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ),
-        )
+        .withColumn("sim", _qc_cosine())
     )
-    ranked = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select(
-        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
-        F.round("sim", 4).alias("cosine_sim"),
-    )
+    return _rank_neighbors(scored, k)
 
 
 def hard_negative_topk(
@@ -503,30 +490,12 @@ def hard_negative_topk(
 
     Determinism: ranking on round(sim, 6) desc then neighbor id, the
     catalog-wide ANN convention."""
-    a = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col(label_col).alias("__ql"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.col(label_col).alias("neg_label"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
+    a = _with_norm(anchors, id_col, vec_col, "q", F.col(label_col).alias("__ql"))
+    c = _with_norm(corpus, id_col, vec_col, "c", F.col(label_col).alias("neg_label"))
     scored = (
         c.crossJoin(F.broadcast(a))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "sim6",
-            F.round(
-                cosine_similarity_prenorm(
-                    F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-                ),
-                6,
-            ),
-        )
+        .withColumn("sim6", F.round(_qc_cosine(), 6))
     )
     pos = (
         scored.where(F.col("neg_label") == F.col("__ql"))
@@ -597,6 +566,75 @@ def release_assignment_broadcasts(since: int = 0) -> int:
     return len(released)
 
 
+def _centroid_assigner(
+    centroids: DataFrame, cid_col: str, vec_col: str, cid_out: str
+):
+    """The one Arrow nearest-centroid pass. Collects ``(cid_col, vec_col)``
+    of ``centroids`` once (K ~ sqrt(N) rows), broadcasts the unit matrix
+    and the id rank once, and returns ``(assign, broadcast)``:
+    ``assign(df, id_col, vec_col, n_keep, emit_sim=False)`` maps ``df`` to
+    ``(id_col, vec_col, cid_out[, __simq])`` rows, ``n_keep`` per input row,
+    and may be applied to any number of DataFrames. The caller owns the
+    broadcast's lifecycle."""
+    cid_type = dict(centroids.dtypes)[cid_col]
+    if cid_type not in ("int", "bigint"):
+        raise ValueError(
+            f"the Arrow centroid assigner needs an int/bigint centroid id "
+            f"(got {cid_type}); ivf_topk(assignment='sql') takes other key types"
+        )
+    cent_rows = centroids.select(cid_col, vec_col).collect()  # K ~ sqrt(N)
+    if not cent_rows:
+        raise ValueError("centroid table is empty: nothing to assign rows to")
+    c_ids, c_unit = _normalized_matrix(cent_rows)
+    c_rank = np.empty(len(c_ids), dtype=np.int64)
+    c_rank[np.argsort(c_ids)] = np.arange(len(c_ids))
+    bc = centroids.sparkSession.sparkContext.broadcast((c_ids, c_unit, c_rank))
+    cid_np = np.int32 if cid_type == "int" else np.int64
+
+    def assign(
+        df: DataFrame, id_col: str, vec_col: str, n_keep: int, emit_sim: bool = False
+    ) -> DataFrame:
+        # pass-through columns keep their INPUT types — hardcoding
+        # array<float> here would silently truncate array<double> vectors
+        # in the Arrow cast and break the arrow==sql contract
+        dtypes = dict(df.dtypes)
+        schema = (
+            f"{id_col} {dtypes[id_col]}, {vec_col} {dtypes[vec_col]}, "
+            f"{cid_out} {cid_type}"
+        )
+        if emit_sim:
+            schema += ", __simq bigint"
+
+        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids, unit, rank = bc.value
+            m = min(n_keep, len(ids))
+            for pdf in it:
+                if not len(pdf):
+                    continue
+                sims = _normalized_batch(pdf[vec_col]) @ unit.T  # (batch, K)
+                # same quantize + composite key as _partial_topk_rows:
+                # round(sim,6) half-away-from-zero DESC, centroid id ASC
+                q = _quantize_half_up(sims)
+                comp = q * (1 << 34) - rank[None, :]
+                if m == 1:
+                    pick = np.argmax(comp, axis=1)[:, None]
+                else:
+                    pick = np.argsort(-comp, axis=1)[:, :m]
+                reps = np.repeat(np.arange(len(pdf)), m)
+                out = {
+                    id_col: pdf[id_col].to_numpy()[reps],
+                    vec_col: pdf[vec_col].iloc[reps.tolist()].to_numpy(),
+                    cid_out: ids[pick.ravel()].astype(cid_np),
+                }
+                if emit_sim:
+                    out["__simq"] = q[reps, pick.ravel()]
+                yield pd.DataFrame(out)
+
+        return df.select(id_col, vec_col).mapInPandas(fn, schema)
+
+    return assign, bc
+
+
 def nearest_centroids_arrow(
     df: DataFrame,
     centroids: DataFrame,
@@ -627,9 +665,10 @@ def nearest_centroids_arrow(
 
     Round-9 scale fix: the index builds originally assigned through a SQL
     crossJoin whose N x K interpreted higher-order-function cosines made
-    the decade-3 (20M x 4472) build exceed 30 minutes; this path is the
-    same BLAS assignment ``ivf_topk(assignment="arrow")`` already ships,
-    and the decade-3 measurement is what forced the unification.
+    the decade-3 (20M x 4472) build exceed 30 minutes. There is one Arrow
+    assigner, :func:`_centroid_assigner`: this function and
+    ``ivf_topk(assignment="arrow")`` both call it, so the assignment kernel
+    cannot fork between the index builds and the probe path.
 
     Broadcast lifecycle: each call mints one driver broadcast (K x dim
     floats) that must survive until the returned plan has executed; it is
@@ -638,51 +677,9 @@ def nearest_centroids_arrow(
     (the per-sf_dir index builders do; one-shot query plans let process
     exit reclaim the handful of live blocks).
     """
-    cid_type = dict(centroids.dtypes)[cid_col]
-    if cid_type not in ("int", "bigint"):
-        raise ValueError(
-            "nearest_centroids_arrow needs an int/bigint centroid id "
-            f"(got {cid_type})"
-        )
-    cent_rows = centroids.select(cid_col, vec_col).collect()  # K ~ sqrt(N)
-    c_ids, c_unit = _normalized_matrix(cent_rows)
-    c_rank = np.empty(len(c_ids), dtype=np.int64)
-    c_rank[np.argsort(c_ids)] = np.arange(len(c_ids))
-    bc = df.sparkSession.sparkContext.broadcast((c_ids, c_unit, c_rank))
+    assign, bc = _centroid_assigner(centroids, cid_col, vec_col, cid_col)
     _ASSIGN_BROADCASTS.append(bc)  # released by the caller post-materialize
-    cid_np = np.int32 if cid_type == "int" else np.int64
-    dtypes = dict(df.dtypes)
-    schema = (
-        f"{id_col} {dtypes[id_col]}, {vec_col} {dtypes[vec_col]}, "
-        f"{cid_col} {cid_type}"
-    )
-    if emit_sim:
-        schema += ", __simq bigint"
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, unit, rank = bc.value
-        m = min(n_keep, len(ids))
-        for pdf in it:
-            if not len(pdf):
-                continue
-            sims = _normalized_batch(pdf[vec_col]) @ unit.T  # (batch, K)
-            q = _quantize_half_up(sims)
-            comp = q * (1 << 34) - rank[None, :]
-            if m == 1:
-                pick = np.argmax(comp, axis=1)[:, None]
-            else:
-                pick = np.argsort(-comp, axis=1)[:, :m]
-            reps = np.repeat(np.arange(len(pdf)), m)
-            out = {
-                id_col: pdf[id_col].to_numpy()[reps],
-                vec_col: pdf[vec_col].iloc[reps.tolist()].to_numpy(),
-                cid_col: ids[pick.ravel()].astype(cid_np),
-            }
-            if emit_sim:
-                out["__simq"] = q[reps, pick.ravel()]
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col).mapInPandas(fn, schema)
+    return assign(df, id_col, vec_col, n_keep, emit_sim)
 
 
 def ivf_topk(
@@ -712,8 +709,9 @@ def ivf_topk(
       rows — 10^9 vectors x 64 dims is a 16 MB broadcast) and each Arrow
       batch does one BLAS matmul, emitting its top-1 (corpus) / top-n_probe
       (queries) clusters under the exact engine order — round(sim,6) DESC
-      quantized half-away-from-zero, centroid id ASC — via the same
-      composite integer key as :func:`_partial_topk_rows`. No shuffle at
+      quantized half-away-from-zero, centroid id ASC — through
+      :func:`_centroid_assigner`, the one Arrow assigner, whose composite
+      integer key is that of :func:`_partial_topk_rows`. No shuffle at
       all for the assignment. Measured ~7 us/pair -> BLAS on the sf1
       fixtures (the higher-order-function dot is the cost; SCALING.md).
     - ``"sql"``: pure-codegen zip_with/aggregate cosine; corpus top-1 via
@@ -744,7 +742,7 @@ def ivf_topk(
         l2_norm(F.col(centroid_vec)).alias("__centn"),
     )
 
-    def assign(df: DataFrame, id_out: str, vec_out: str, n_keep: int) -> DataFrame:
+    def assign_sql(df: DataFrame, id_out: str, vec_out: str, n_keep: int) -> DataFrame:
         # Norms hoisted to one evaluation per row/centroid; the N x K pair
         # loop then runs a single array traversal (the cross dot) per pair.
         scored = df.withColumn("__vn", l2_norm(F.col(vec_out))).crossJoin(
@@ -790,56 +788,13 @@ def ivf_topk(
         return ranked.select(id_out, vec_out, "cluster_id")
 
     if assignment == "arrow":
-        cid_type = dict(cent.dtypes)["cluster_id"]
-        if cid_type not in ("int", "bigint"):
-            raise ValueError(
-                f"assignment='arrow' needs an int/bigint centroid id "
-                f"(got {cid_type}); use assignment='sql' for other key types"
-            )
-        cent_rows = cent.select("cluster_id", "__centv").collect()  # K ~ sqrt(N) rows
-        c_ids, c_unit = _normalized_matrix(cent_rows)
-        c_order = np.argsort(c_ids)
-        c_rank = np.empty(len(c_ids), dtype=np.int64)
-        c_rank[c_order] = np.arange(len(c_ids))
-        bc = corpus.sparkSession.sparkContext.broadcast((c_ids, c_unit, c_rank))
-        cid_np = np.int32 if cid_type == "int" else np.int64
-
-        def assign_arrow(df: DataFrame, id_out: str, vec_out: str, n_keep: int) -> DataFrame:
-            # pass-through columns keep their INPUT types — hardcoding
-            # array<float> here would silently truncate array<double>
-            # vectors in the Arrow cast and break the arrow==sql contract
-            dtypes = dict(df.dtypes)
-            schema = (
-                f"{id_out} {dtypes[id_out]}, {vec_out} {dtypes[vec_out]}, "
-                f"cluster_id {cid_type}"
-            )
-
-            def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                ids, unit, rank = bc.value
-                m = min(n_keep, len(ids))
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    sims = _normalized_batch(pdf[vec_out]) @ unit.T  # (batch, K)
-                    # identical quantize + composite key as _partial_topk_rows:
-                    # round(sim,6) half-away-from-zero DESC, centroid id ASC
-                    comp = _quantize_half_up(sims) * (1 << 34) - rank[None, :]
-                    if m == 1:
-                        pick = np.argmax(comp, axis=1)[:, None]
-                    else:
-                        pick = np.argsort(-comp, axis=1)[:, :m]
-                    reps = np.repeat(np.arange(len(pdf)), m)
-                    yield pd.DataFrame(
-                        {
-                            id_out: pdf[id_out].to_numpy()[reps],
-                            vec_out: pdf[vec_out].iloc[reps.tolist()].to_numpy(),
-                            "cluster_id": ids[pick.ravel()].astype(cid_np),
-                        }
-                    )
-
-            return df.mapInPandas(fn, schema)
-
-        assign = assign_arrow
+        # one collect + one broadcast serve both sides; like every one-shot
+        # query plan's broadcast it is left unregistered
+        assign, _ = _centroid_assigner(
+            centroids, centroid_id, centroid_vec, "cluster_id"
+        )
+    else:
+        assign = assign_sql
 
     corpus_assigned = assign(
         corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
@@ -859,24 +814,9 @@ def ivf_topk(
     scored = (
         corpus_assigned.join(probes, on="cluster_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "sim",
-            cosine_similarity_prenorm(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ),
-        )
+        .withColumn("sim", _qc_cosine())
     )
-    ranked = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select(
-        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
-        F.round("sim", 4).alias("cosine_sim"),
-    )
+    return _rank_neighbors(scored, k)
 
 
 def hyperplane_lsh_topk(
@@ -920,15 +860,7 @@ def hyperplane_lsh_topk(
     (±1) signs, which an external oracle can replicate from the same
     literal matrix (any symmetric distribution is a valid SRP draw).
     """
-    if planes is None:
-        rng = np.random.RandomState(seed)
-        planes = rng.normal(size=(dim, n_tables * bits))
-    else:
-        planes = np.asarray(planes, dtype=np.float64)
-        if planes.shape != (dim, n_tables * bits):
-            raise ValueError(
-                f"planes shape {planes.shape} != ({dim}, {n_tables * bits})"
-            )
+    planes = _planes(dim, n_tables, bits, seed, planes)
     qb = _lsh_bucket_table(queries, query_id, vec_col, planes, n_tables, bits)
     cb = _lsh_bucket_table(corpus, corpus_id, vec_col, planes, n_tables, bits)
     cand = qb.alias("q").join(cb.alias("c"), ["table", "bucket"])
@@ -937,37 +869,25 @@ def hyperplane_lsh_topk(
     cand = cand.select(
         F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id")
     ).distinct()
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    cv = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
     scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "sim",
-            cosine_similarity_prenorm(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ),
-        )
+        cand.join(F.broadcast(_with_norm(queries, query_id, vec_col, "q")), "query_id")
+        .join(_with_norm(corpus, corpus_id, vec_col, "c"), "neighbor_id")
+        .withColumn("sim", _qc_cosine())
     )
-    ranked = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.round("sim", 6).desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select(
-        "query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
-        F.round("sim", 4).alias("cosine_sim"),
-    )
+    return _rank_neighbors(scored, k)
+
+
+def _planes(
+    dim: int, n_tables: int, bits: int, seed: int, planes: np.ndarray | None
+) -> np.ndarray:
+    """The ``(dim, n_tables*bits)`` hyperplane matrix: a seeded Gaussian
+    draw, or the caller's explicit ``planes`` after a shape check."""
+    if planes is None:
+        return np.random.RandomState(seed).normal(size=(dim, n_tables * bits))
+    planes = np.asarray(planes, dtype=np.float64)
+    if planes.shape != (dim, n_tables * bits):
+        raise ValueError(f"planes shape {planes.shape} != ({dim}, {n_tables * bits})")
+    return planes
 
 
 def _lsh_bucket_table(
@@ -1031,15 +951,7 @@ def hyperplane_lsh_pairs(
 
     Returns (vec_a, vec_b, cosine_sim) with vec_a < vec_b.
     """
-    if planes is None:
-        rng = np.random.RandomState(seed)
-        planes = rng.normal(size=(dim, n_tables * bits))
-    else:
-        planes = np.asarray(planes, dtype=np.float64)
-        if planes.shape != (dim, n_tables * bits):
-            raise ValueError(
-                f"planes shape {planes.shape} != ({dim}, {n_tables * bits})"
-            )
+    planes = _planes(dim, n_tables, bits, seed, planes)
     # Vectors are attached to the BUCKET rows (N x tables rows, one shuffle
     # of corpus-with-vectors x tables) and pairs are scored inside the
     # (table, bucket) self-join, so the only per-pair state that ever

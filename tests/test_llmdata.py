@@ -675,3 +675,44 @@ def test_ivf_arrow_preserves_double_vectors(spark):
         ).collect()
 
     assert sorted(map(tuple, build("arrow"))) == sorted(map(tuple, build("sql")))
+
+
+def test_cosine_topk_arrow_empty_query_side(spark):
+    """An empty query side yields an empty result with the usual four
+    columns, not a numpy AxisError from normalizing a shape-(0,) matrix."""
+    from bridge_monitoring_pyspark_spark.operators.similarity import (
+        cosine_topk_arrow,
+    )
+
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    got = cosine_topk_arrow(
+        e.where(F.col("vec_id") < 0), e, "vec_id", "vec_id", "embedding",
+        "embedding", k=5,
+    )
+    assert got.columns == ["query_id", "rank", "neighbor_id", "cosine_sim"]
+    assert got.collect() == []
+
+
+def test_empty_centroid_table_raises(spark):
+    """Both callers of the Arrow centroid assigner reject an empty centroid
+    table with a ValueError that names the cause."""
+    import pytest
+
+    from bridge_monitoring_pyspark_spark.operators.similarity import (
+        ivf_topk,
+        nearest_centroids_arrow,
+    )
+
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    cents = e.where(F.col("vec_id") < 0).select(
+        F.col("vec_id").cast("int").alias("cid"), "embedding"
+    )
+    with pytest.raises(ValueError, match="centroid table is empty"):
+        nearest_centroids_arrow(e, cents, "vec_id", "embedding", "cid")
+    with pytest.raises(ValueError, match="centroid table is empty"):
+        ivf_topk(
+            e.where(F.col("vec_id") < 10), e, cents,
+            query_id="vec_id", corpus_id="vec_id", vec_col="embedding",
+            centroid_id="cid", centroid_vec="embedding", k=5,
+            assignment="arrow",
+        )

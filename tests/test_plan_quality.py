@@ -240,6 +240,30 @@ def test_smallside_verifier_not_used_by_plans():
         assert "cosine_pairs_arrow" not in src, py.name
 
 
+def test_similarity_kernels_written_once():
+    """operators/similarity.py holds each ranking decision once: the
+    composite tie-break key ``(1 << 34)`` lives only in the partial top-k
+    cut and the one Arrow centroid assigner, and the final neighbour order
+    ``F.round("sim", 6).desc()`` is written exactly once. A second copy is
+    how the Arrow IVF assignment once drifted from its twin."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark.operators.similarity as sim
+
+    src = pathlib.Path(sim.__file__).read_text()
+    key = "(1 << 34)"
+    holders = {
+        node.name: ast.get_source_segment(src, node).count(key)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    holders = {name: n for name, n in holders.items() if n}
+    assert set(holders) == {"_partial_topk_rows", "_centroid_assigner"}, holders
+    assert sum(holders.values()) == src.count(key)  # none at module level
+    assert src.count('F.round("sim", 6).desc()') == 1
+
+
 def test_neardup_pairs_build_never_touches_driver(spark, monkeypatch):
     """neardup_embedding_pairs must plan without any driver-side
     materialization — the round-2/3 scale-killer was a full-table
