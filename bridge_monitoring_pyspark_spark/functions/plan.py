@@ -2,9 +2,30 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame
+
+# Every temp dir a catalog build makes (sink dirs, checkpoints, fixture copies).
+# bench.py rebuilds each entry many times per process, so a dir per build
+# would pile up in the temp dir; they are removed at process exit.
+_SCRATCH: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir named ``<prefix>*`` that is removed at process exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(d)
+    return d
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    while _SCRATCH:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
 
 
 def sorted_once(df: DataFrame, *cols: Column | str) -> DataFrame:

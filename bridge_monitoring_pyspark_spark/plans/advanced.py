@@ -5,7 +5,6 @@ joins, and iterative connected-components clustering of near-duplicates.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +17,7 @@ from ..operators.dedup import (
 )
 from ..session import pinned_shuffle_partitions
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 from .llmdata import JACCARD_THRESHOLD, SHINGLE_N
 
@@ -109,7 +109,7 @@ def _bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join runs with zero Exchange and zero Sort (asserted in tests) —
     the write-once/join-many trade SCALING.md prescribes for recurring
     fact-fact joins at 100 TB."""
-    base = tempfile.mkdtemp(prefix="eng_bucket_")
+    base = scratch_dir("eng_bucket_")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"

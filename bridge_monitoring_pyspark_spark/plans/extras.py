@@ -5,13 +5,13 @@ approximate distinct — the last capability classes from SURVEY.md §2.11.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.readers import load_table, read_csv_dim
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 
@@ -149,7 +149,7 @@ def _csv_dim_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 static CSV dimension source (reference:
     pipelines/silver_enrichment.py:29-34): write a dimension extract as
     header CSV, read it back with an explicit schema, aggregate."""
-    out = tempfile.mkdtemp(prefix="eng_csv_") + "/dim"
+    out = scratch_dir("eng_csv_") + "/dim"
     dim = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 100).select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_name").alias("name"),
@@ -179,7 +179,7 @@ def _partition_pruned_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     date=... directory (asserted in tests via the FileScan's
     PartitionFilters). Makes the reference's accidental discovered `date`
     column (SURVEY.md §1.2) an explicit engine capability."""
-    out = tempfile.mkdtemp(prefix="eng_part_") + "/events_by_date"
+    out = scratch_dir("eng_part_") + "/events_by_date"
     e = load_table(spark, sf_dir, "events").withColumn(
         "partition_date", F.to_date("ts")
     )

@@ -12,13 +12,13 @@ file-count reduction and row conservation.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_seconds
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 SESSION_LEN_MIN = 5  # each event opens a 5-minute activity interval
@@ -205,7 +205,7 @@ def _small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservation. Exact oracle: both file counts are deterministic —
     round-robin repartition leaves no empty partitions when rows >>
     partitions — and conservation is plain SQL over events."""
-    base = tempfile.mkdtemp(prefix="eng_compact_")
+    base = scratch_dir("eng_compact_")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
     e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     e.repartition(64).write.mode("overwrite").parquet(frag)  # simulate streaming dribble

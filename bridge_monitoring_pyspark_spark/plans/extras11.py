@@ -13,12 +13,12 @@ engine's columnar interchange needs are covered by parquet/ORC/Arrow.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 BINARY_DOC_LIMIT = 200  # files created driver-side; cap the fixture size
@@ -34,7 +34,7 @@ def _binaryfile_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     relationally, proving byte-exact ingestion. At scale the source
     parallelizes over files and prunes on path/length pushdown filters
     (maxBytesPerTrigger exists for the streaming form)."""
-    base = tempfile.mkdtemp(prefix="eng_binf_")
+    base = scratch_dir("eng_binf_")
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < BINARY_DOC_LIMIT)
@@ -77,7 +77,7 @@ def _text_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stray newline would change the line count). This is the interchange
     format for classic text pipelines (one doc per line, tab-prefixed id
     here so lines re-associate)."""
-    base = tempfile.mkdtemp(prefix="eng_text_")
+    base = scratch_dir("eng_text_")
     d = load_table(spark, sf_dir, "documents").select(
         F.concat_ws("\t", F.col("doc_id"), F.col("text")).alias("value")
     )

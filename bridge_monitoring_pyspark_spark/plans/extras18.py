@@ -23,8 +23,10 @@ from pyspark.sql import functions as F
 from ..operators.joins import salted_join
 from ..operators.similarity import knn_join_blocked
 from ..sources.readers import load_table
-from ..functions.plan import sorted_once
+from ..functions.plan import scratch_dir, sorted_once
+from ..streaming.jobs import drain, read_events_stream
 from .catalog import Query
+from .extras4 import click_purchase_sides
 
 SALT_BUCKETS = 8
 
@@ -119,49 +121,17 @@ def _streaming_salted_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
     at the explicit price of STREAM_SALT× purchase-side state. Each
     click–purchase pair matches in exactly one salt copy, so the drained
     result equals the unsalted interval join and shares its batch oracle."""
-    import tempfile
-
-    from ..streaming.jobs import _stream_shuffle_partitions, _write, read_events_stream
-
-    base = tempfile.mkdtemp(prefix="eng_sivj_")
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.pmod(F.xxhash64("event_id"), F.lit(STREAM_SALT))
-            .cast("int")
-            .alias("c_salt"),
-        )
-        .withWatermark("c_ts", "2 minutes")
+    clicks, purchases, within = click_purchase_sides(read_events_stream(spark, sf_dir))
+    clicks = clicks.withColumn(
+        "c_salt", F.pmod(F.xxhash64("click_id"), F.lit(STREAM_SALT)).cast("int")
     )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withColumn(
-            "p_salt",
-            F.explode(F.array(*[F.lit(i).cast("int") for i in range(STREAM_SALT)])),
-        )
-        .withWatermark("p_ts", "2 minutes")
+    purchases = purchases.withColumn(
+        "p_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(STREAM_SALT)]))
     )
     pairs = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_salt") == F.col("p_salt"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "inner",
+        purchases, within & (F.col("c_salt") == F.col("p_salt")), "inner"
     ).select("click_id", "purchase_id", "c_user")
-    with _stream_shuffle_partitions(spark, 8):
-        q = _write(pairs, base, "salted_interval_join", True)
-    q.awaitTermination()
-    out = spark.read.parquet(base + "/salted_interval_join")
+    out = drain(pairs, scratch_dir("eng_sivj_"), "salted_interval_join")
     return (
         out.groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"), F.min("click_id").alias("first_click"))

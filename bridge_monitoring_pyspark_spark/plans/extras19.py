@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import words
-from ..functions.plan import sorted_once
+from ..functions.plan import scratch_dir, sorted_once
 from ..sources.readers import load_table
+from ..streaming.jobs import drain
 from .catalog import Query
 
 DSIR_BUCKETS = 64  # hashed-feature dimensionality (paper uses 10k; 64 keeps the sf0.01 oracle dense)
@@ -456,11 +457,6 @@ def _streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same integer arithmetic as `quality_classifier_scores` (keep iff
     sm > 950·n), so kept doc_ids match the batch entry exactly; the
     drained sink is re-aggregated per language for a compact result."""
-    import tempfile
-
-    from ..streaming.jobs import _write
-
-    base = tempfile.mkdtemp(prefix="eng_squal_")
     schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     docs = (
         spark.readStream.format("parquet")
@@ -479,9 +475,8 @@ def _streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).cast("long").alias("n_tokens"),
         (sm - 950 * F.size(toks)).alias("num"),
     ).where(F.col("num") > 0)
-    q = _write(kept, base, "quality_kept", True)
-    q.awaitTermination()
-    out = spark.read.parquet(base + "/quality_kept")
+    # stateless: no state partitions to pin
+    out = drain(kept, scratch_dir("eng_squal_"), "quality_kept", partitions=None)
     return (
         out.groupBy("lang")
         .agg(

@@ -22,48 +22,34 @@ engine needs at scale.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
-from ..functions.plan import sorted_once
+from ..functions.plan import scratch_dir, sorted_once
 from .catalog import Query
 
 # One parquet materialization per (witness, sf_dir) per process. The lake
-# witnesses re-write the events table into a tempdir to exercise a READ
+# witnesses re-write the events table into a scratch dir to exercise a READ
 # capability (mergeSchema / DPP / manifests / nested pruning); bench.py's
-# repeat-until-budget loop rebuilds each witness many times per run, and a
-# fresh mkdtemp per build leaked a full parquet copy of events into /tmp on
-# every pass (round-7 advice). Rebuilds now reuse the first materialization
-# — which also means re-run timings measure the read path under test, not
-# the fixture write — and atexit removes the dirs at process exit.
+# repeat-until-budget loop rebuilds each witness many times per run, so
+# rebuilds reuse the first materialization — re-run timings measure the
+# read path under test, not the fixture write. scratch_dir removes the
+# dirs at process exit.
 _MATERIALIZED: dict[tuple[str, str], str] = {}
 
 
 def _materialized_dir(witness: str, sf_dir: str, write: Callable[[str], None]) -> str:
     key = (witness, sf_dir)
     if key not in _MATERIALIZED:
-        base = tempfile.mkdtemp(prefix=f"eng_{witness}_")
-        try:
-            write(base)
-        except BaseException:
-            shutil.rmtree(base, ignore_errors=True)
-            raise
+        base = scratch_dir(f"eng_{witness}_")
+        write(base)
         _MATERIALIZED[key] = base
     return _MATERIALIZED[key]
-
-
-@atexit.register
-def _cleanup_materialized() -> None:
-    for d in _MATERIALIZED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _MATERIALIZED.clear()
 
 
 def _schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:

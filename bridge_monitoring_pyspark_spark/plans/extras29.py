@@ -22,10 +22,7 @@ suppression).
 
 from __future__ import annotations
 
-import atexit
 import math
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,20 +35,14 @@ from ..operators.similarity import (
 )
 from ..operators.topk import top_k_per_group
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 from .llmdata import _ANN_IVF_SQL
 
-# One index materialization per (process, sf_dir); atexit cleanup — the
+# One index materialization per (process, sf_dir) in a scratch_dir — the
 # lake-witness pattern (extras22.py): repeat bench passes must measure the
 # probe path, not re-pay the build, and must not leak parquet into /tmp.
 _IVF_INDEX: dict[str, tuple[str, int]] = {}
-
-
-@atexit.register
-def _cleanup_index() -> None:
-    for d, _ in _IVF_INDEX.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _IVF_INDEX.clear()
 
 
 def _nearest_centroids(df: DataFrame, centroids: DataFrame, n: int) -> DataFrame:
@@ -87,12 +78,8 @@ def ivf_index_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     assigned = _nearest_centroids(e, centroids, 1).select(
         "vec_id", "embedding", "cid"
     )
-    base = tempfile.mkdtemp(prefix="eng_ivf_index_")
-    try:
-        assigned.write.partitionBy("cid").parquet(base, mode="overwrite")
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    base = scratch_dir("eng_ivf_index_")
+    assigned.write.partitionBy("cid").parquet(base, mode="overwrite")
     # the write above materialized the only assignment plan minted after
     # `mark`, so THIS build's centroid broadcast is dead weight — free it
     # without touching earlier callers' still-lazy plans (ADVICE r9 for

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.text import winnow_fingerprint_rows, winnow_hash_sql
 from ..operators.similarity import hyperplane_lsh_topk
 from ..sources.readers import load_table
-from ..functions.plan import sorted_once
+from ..functions.plan import scratch_dir, sorted_once
 from .catalog import Query
 
 WINNOW_K = 8
@@ -341,13 +341,12 @@ def _streaming_pyds_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, then the same aggregate over the sink. The source is finite
     (n=1000), so the stream drains to a deterministic end state."""
     import os
-    import tempfile
     import time
 
     from ..sources.pyds import register
 
     register(spark)
-    base = tempfile.mkdtemp(prefix="eng_pyds_")
+    base = scratch_dir("eng_pyds_")
     stream = (
         spark.readStream.format("bridge_events")
         .option("n", 1000)

@@ -25,12 +25,18 @@ pipelines/gold_aggregation.py:82-99).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.plan import scratch_dir
+from ..streaming.jobs import (
+    GOLD_STATE_PARTITIONS,
+    click_error_join,
+    drain,
+    read_events_stream,
+)
 from .catalog import Query
+from .extras4 import click_purchase_sides
 
 
 def _streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,42 +46,9 @@ def _streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter how many purchases match — so the drained sink equals the
     batch EXISTS (the oracle) with no multiplicity to reconcile. Reported
     per user to keep the compare order-stable."""
-    from ..streaming.jobs import (
-        _stream_shuffle_partitions,
-        _write,
-        read_events_stream,
-    )
-
-    base = tempfile.mkdtemp(prefix="eng_semij_")
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 minutes")
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 minutes")
-    )
-    kept = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_semi",
-    )
-    with _stream_shuffle_partitions(spark, 8):
-        q = _write(kept, base, "semi_join", True)
-    q.awaitTermination()
-    out = spark.read.parquet(base + "/semi_join")
+    clicks, purchases, within = click_purchase_sides(read_events_stream(spark, sf_dir))
+    kept = clicks.join(purchases, within, "left_semi")
+    out = drain(kept, scratch_dir("eng_semij_"), "semi_join")
     return (
         out.groupBy(F.col("c_user").alias("user_id"))
         .agg(
@@ -111,38 +84,10 @@ def _streaming_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form as the left-outer witness but applied symmetrically: a
     window emits iff window_end <= min(per-branch max ts) - watermark;
     sides with no state for that window carry NULL."""
-    from ..functions.numeric import exact_avg
-    from ..streaming.jobs import (
-        _stream_shuffle_partitions,
-        _write,
-        read_events_stream,
-    )
-
-    base = tempfile.mkdtemp(prefix="eng_fullj_")
-    events = read_events_stream(spark, sf_dir)
-    win = F.window("ts", "1 hour")
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .withWatermark("ts", "2 minutes")
-        .groupBy(win.alias("window"))
-        .agg(exact_avg("value").alias("avg_click_value"))
-    )
-    errors = (
-        events.where((F.col("event_type") == "error") & (F.col("value") > 90))
-        .withWatermark("ts", "2 minutes")
-        .groupBy(win.alias("window"))
-        .agg(F.max("value").alias("max_error_value"))
-    )
-    flat = clicks.join(errors, on="window", how="full_outer").select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "avg_click_value",
-        "max_error_value",
-    )
-    with _stream_shuffle_partitions(spark, 4):
-        q = _write(flat, base, "full_outer", True)
-    q.awaitTermination()
-    return spark.read.parquet(base + "/full_outer").orderBy("window_start")
+    flat = click_error_join(read_events_stream(spark, sf_dir), "full_outer")
+    return drain(
+        flat, scratch_dir("eng_fullj_"), "full_outer", partitions=GOLD_STATE_PARTITIONS
+    ).orderBy("window_start")
 
 
 _FULL_OUTER_SQL = """

@@ -22,10 +22,7 @@ No counterpart in the 550-LoC reference.
 
 from __future__ import annotations
 
-import atexit
 import math
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import l2_norm
 from ..operators.topk import top_k_per_group
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 from ..operators.similarity import (
     assignment_broadcast_mark,
@@ -41,13 +39,6 @@ from ..operators.similarity import (
 from .extras29 import IVF_IDX_N_QUERIES, IVF_IDX_PROBES, IVF_IDX_TOPK, _nearest_centroids
 
 _APPEND_INDEX: dict[str, tuple[str, int]] = {}
-
-
-@atexit.register
-def _cleanup_append_index() -> None:
-    for d, _ in _APPEND_INDEX.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _APPEND_INDEX.clear()
 
 
 def _frozen_centroids(e: DataFrame, stride: int) -> DataFrame:
@@ -62,28 +53,24 @@ def _frozen_centroids(e: DataFrame, stride: int) -> DataFrame:
 
 def appended_index_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Two-generation index: build from even ids, append odd ids under the
-    frozen centroids. Returns (dir, stride). Cached per process with
-    atexit cleanup (the extras29 pattern)."""
+    frozen centroids. Returns (dir, stride). Cached per process in a
+    scratch_dir (the extras29 pattern)."""
     if sf_dir in _APPEND_INDEX:
         return _APPEND_INDEX[sf_dir]
     e = load_table(spark, sf_dir, "embeddings")
     initial = e.where(F.col("vec_id") % 2 == 0)
     stride = int(math.isqrt(initial.count()))
     cents = _frozen_centroids(e, stride)
-    base = tempfile.mkdtemp(prefix="eng_ivf_append_")
+    base = scratch_dir("eng_ivf_append_")
     mark = assignment_broadcast_mark()  # scope the release to OUR mints
-    try:
-        _nearest_centroids(initial, cents, 1).select(
-            "vec_id", "embedding", "cid"
-        ).write.partitionBy("cid").parquet(base, mode="overwrite")
-        # the increment: assign ONLY the new rows, append into the same
-        # partition layout — existing files untouched
-        _nearest_centroids(e.where(F.col("vec_id") % 2 == 1), cents, 1).select(
-            "vec_id", "embedding", "cid"
-        ).write.partitionBy("cid").parquet(base, mode="append")
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    _nearest_centroids(initial, cents, 1).select(
+        "vec_id", "embedding", "cid"
+    ).write.partitionBy("cid").parquet(base, mode="overwrite")
+    # the increment: assign ONLY the new rows, append into the same
+    # partition layout — existing files untouched
+    _nearest_centroids(e.where(F.col("vec_id") % 2 == 1), cents, 1).select(
+        "vec_id", "embedding", "cid"
+    ).write.partitionBy("cid").parquet(base, mode="append")
     # both generations are written, so the two assignment broadcasts this
     # build minted are unreferenced — free exactly those, leaving earlier
     # callers' lazy plans intact (ADVICE r9 lifecycle, ADVICE r10 scoping)

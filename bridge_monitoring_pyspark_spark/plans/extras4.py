@@ -12,12 +12,13 @@ against exact counts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import winnow_fingerprint_rows, winnow_hash_sql
-from ..functions.plan import sorted_once
+from ..functions.plan import scratch_dir, sorted_once
 from ..sources.readers import load_table
+from ..streaming.jobs import drain, read_events_stream
 from .catalog import Query
 
 from .extras3 import WINNOW_K, WINNOW_W
@@ -148,47 +149,39 @@ ORDER BY doc_id
 
 
 # --- Stream-stream time-interval join -----------------------------------------
+def click_purchase_sides(events: DataFrame) -> tuple[DataFrame, DataFrame, Column]:
+    """The two watermarked sides of the interval-join witnesses —
+    clicks (click_id, c_user, c_ts) and purchases (purchase_id, p_user,
+    p_ts), 2-minute watermarks — and their join condition: same user, the
+    purchase within 10 minutes after the click."""
+    def side(evt_type: str, id_col: str, p: str) -> DataFrame:
+        return (
+            events.where(F.col("event_type") == evt_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "2 minutes")
+        )
+
+    within = (
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 10 MINUTES"))
+    )
+    return side("click", "click_id", "c"), side("purchase", "purchase_id", "p"), within
+
+
 def _streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream INNER join on user_id with an event-time interval
     condition (purchase within 10 min after a click) — the non-windowed
     stateful join. Watermarks + the range condition bound join state; with
     an inner join every match emits, so the drained availableNow sink
     equals the plain batch join (the oracle)."""
-    import tempfile
-
-    from ..streaming.jobs import _stream_shuffle_partitions, _write, read_events_stream
-
-    base = tempfile.mkdtemp(prefix="eng_ivj_")
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 minutes")
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 minutes")
-    )
-    pairs = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "inner",
-    ).select("click_id", "purchase_id", "c_user")
-    with _stream_shuffle_partitions(spark, 8):
-        q = _write(pairs, base, "interval_join", True)
-    q.awaitTermination()
-    out = spark.read.parquet(base + "/interval_join")
+    clicks, purchases, within = click_purchase_sides(read_events_stream(spark, sf_dir))
+    pairs = clicks.join(purchases, within, "inner").select("click_id", "purchase_id", "c_user")
+    out = drain(pairs, scratch_dir("eng_ivj_"), "interval_join")
     return (
         out.groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"), F.min("click_id").alias("first_click"))

@@ -14,12 +14,12 @@ docstring); the drift regime beyond that is pytest-bounded instead.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 
@@ -140,7 +140,7 @@ def _xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events as XML records (Spark 4 native XML source), read them back with
     an explicit schema, aggregate. The oracle reads the original parquet —
     a round-trip that drops or mangles a row breaks the hash."""
-    base = tempfile.mkdtemp(prefix="eng_xml_")
+    base = scratch_dir("eng_xml_")
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     e.write.mode("overwrite").option("rowTag", "event").format("xml").save(
         f"{base}/events"

@@ -13,12 +13,12 @@ single-partition sort.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 BM25_K1 = 1.2
@@ -39,7 +39,7 @@ def _streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     that scales to a 100 TB state table. The events table is pre-split
     into 4 files and streamed with maxFilesPerTrigger=1, so the merge path
     runs on 4 real micro-batches, not one."""
-    base = tempfile.mkdtemp(prefix="eng_upsert_")
+    base = scratch_dir("eng_upsert_")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     ev = load_table(spark, sf_dir, "events").select(

@@ -13,13 +13,14 @@ the identical iterations in numpy.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.plan import scratch_dir
 from ..session import pinned_shuffle_partitions
 from ..sources.readers import load_table
+from ..streaming.jobs import drain
 from .catalog import Query
 
 KMEANS_K = 8
@@ -37,8 +38,8 @@ def _streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     recovery contract a 100 TB pipeline leans on every deploy/failure
     (SURVEY.md §2.9 T4; reference keeps one checkpoint per sink,
     pipelines/bronze_ingest.py:67)."""
-    base = tempfile.mkdtemp(prefix="eng_restart_")
-    src, out, chk = (os.path.join(base, d) for d in ("src", "out", "chk"))
+    base = scratch_dir("eng_restart_")
+    src = os.path.join(base, "src")
     os.makedirs(src)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -46,29 +47,15 @@ def _streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     first, second = ev.where(F.col("event_id") % 2 == 0), ev.where(
         F.col("event_id") % 2 == 1
     )
-    schema = ev.schema
-
-    def drain(tag: str) -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(queryName=f"restart_{tag}")
-        )
-        q.awaitTermination()
+    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
 
     first.repartition(2).write.mode("append").parquet(src)
-    drain("first")  # incarnation 1 commits files 1-2, then exits
+    drain(stream, base, "out", partitions=None)  # incarnation 1 commits files 1-2
     second.repartition(2).write.mode("append").parquet(src)
-    drain("second")  # incarnation 2 must process ONLY the new files
-
+    # incarnation 2, a new query on the same checkpoint, must process ONLY
+    # the new files
     return (
-        spark.read.parquet(out)
+        drain(stream, base, "out", partitions=None)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -15,13 +15,13 @@ to a scan-level filter instead of a driver-seeded RNG.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import anti_join, semi_join
 from ..sources.readers import load_table
+from ..functions.plan import scratch_dir
 from .catalog import Query
 
 
@@ -601,7 +601,7 @@ def _orc_dim_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back, aggregate per nation. Exercises the ORC writer/reader path
     (schema + stats preservation); the oracle reads the original parquet,
     so any round-trip corruption breaks the hash."""
-    base = tempfile.mkdtemp(prefix="eng_orc_")
+    base = scratch_dir("eng_orc_")
     s = _t(spark, sf_dir, "supplier")
     s.write.mode("overwrite").orc(f"{base}/supplier")
     back = spark.read.orc(f"{base}/supplier")

@@ -12,12 +12,12 @@ stay in state and are never emitted. See streaming/jobs.py docstring.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.plan import scratch_dir
 from ..streaming.jobs import (
+    drain,
     read_events_stream,
     run_bronze,
     run_gold,
@@ -34,8 +34,7 @@ from .catalog import Query
 def _streaming_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bronze ingest as a stream: null-split + date-partitioned valid sink
     (T3 append mode, T4 checkpointing, S6 parquet sink)."""
-    out = tempfile.mkdtemp(prefix="eng_bronze_")
-    paths = run_bronze(spark, sf_dir, out)
+    paths = run_bronze(spark, sf_dir, scratch_dir("eng_bronze_"))
     return spark.read.parquet(paths["valid"]).select(
         "event_id", "ts", "user_id", "event_type", "value", "partition_date"
     )
@@ -51,8 +50,7 @@ WHERE ts IS NOT NULL AND value IS NOT NULL
 def _streaming_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Silver enrichment as a stream: DQ range split + broadcast
     stream-static LEFT join (J1 streaming form)."""
-    out = tempfile.mkdtemp(prefix="eng_silver_")
-    paths = run_silver(spark, sf_dir, out, EVENT_RULES)
+    paths = run_silver(spark, sf_dir, scratch_dir("eng_silver_"), EVENT_RULES)
     return spark.read.parquet(paths["valid"]).select(
         "event_id", "ts", "user_id", "event_type", "value", "name", "segment"
     )
@@ -70,8 +68,7 @@ WHERE {_VALID_SQL}
 def _streaming_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold as a stream: 3 watermarked windowed aggregates + 2 stream-stream
     joins (chained stateful operators, T1/T2/T7 + J2), append mode."""
-    out = tempfile.mkdtemp(prefix="eng_gold_")
-    path = run_gold(spark, sf_dir, out, window="1 hour", watermark="2 minutes")
+    path = run_gold(spark, sf_dir, scratch_dir("eng_gold_"))
     return spark.read.parquet(path).select(
         "window_start", "window_end", "avg_click_value", "max_view_value",
         "max_error_value",
@@ -112,7 +109,7 @@ def _streaming_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON lines (the reference generator's layout), streamed back in with an
     explicit schema (S1) + partition discovery (S2), ISO-8601 parse via
     try_to_timestamp, null-split, date-partitioned sink."""
-    base = tempfile.mkdtemp(prefix="eng_json_")
+    base = scratch_dir("eng_json_")
     landing = base + "/landing"
     write_json_landing(spark, sf_dir, landing)
     paths = run_json_ingest(spark, landing, base + "/out")
@@ -128,8 +125,7 @@ def _streaming_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass DQ routing via foreachBatch: one source read per
     micro-batch feeds both the valid and quarantine sinks (vs the
     reference's one-query-per-sink double scan)."""
-    out = tempfile.mkdtemp(prefix="eng_fb_")
-    paths = run_silver_foreachbatch(spark, sf_dir, out, EVENT_RULES)
+    paths = run_silver_foreachbatch(spark, sf_dir, scratch_dir("eng_fb_"), EVENT_RULES)
     valid = spark.read.parquet(paths["valid"]).withColumn("branch", F.lit("valid"))
     rejected = spark.read.parquet(paths["rejected"]).withColumn(
         "branch", F.lit("rejected")
@@ -156,31 +152,17 @@ def _streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first dedup per (user_id, event_type) with the seen-set in
     GroupState — the arbitrary-state surface the built-in windows can't
     express. Output equals the batch keep-first oracle."""
-    out = tempfile.mkdtemp(prefix="eng_state_")
-    stream = read_events_stream(spark, sf_dir)
-    # state partitions sized to the user_id keyspace (~10^2 here), not the
-    # batch shuffle default — see jobs._stream_shuffle_partitions
-    from ..streaming.jobs import _stream_shuffle_partitions
-
     deduped = streaming_keep_first(
-        stream,
+        read_events_stream(spark, sf_dir),
         key_col="user_id",
         dedup_col="event_type",
         order_cols=["ts", "event_id"],
         output_schema="user_id bigint, event_type string, event_id bigint, ts timestamp",
         output_cols=["user_id", "event_type", "event_id", "ts"],
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out + "/dedup")
-            .option("checkpointLocation", out + "/_chk")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.read.parquet(out + "/dedup").select(
+    # 8 state partitions: sized to the user_id keyspace (~10^2 here), not
+    # the batch shuffle default — see jobs._stream_shuffle_partitions
+    return drain(deduped, scratch_dir("eng_state_"), "dedup").select(
         "user_id", "event_type",
         F.col("event_id").alias("first_event_id"),
         F.col("ts").alias("first_ts"),

@@ -1,24 +1,30 @@
 """Second streaming wave: the output modes and built-in stateful operators
 the first wave (streaming_q.py) doesn't cover — dropDuplicatesWithinWatermark
 (built-in streaming dedup), complete and update output modes into the memory
-sink, and the transformWithState arbitrary-state API (Spark 4.x typed state).
+sink, stream-stream outer join, session windows, event-time timers and the
+state-store reader.
 
-Every query drains the driver's events table with an availableNow trigger,
-so streaming semantics collapse to a closed form a DuckDB batch oracle can
-check (see streaming/jobs.py module docstring). Memory-sink queries get a
-unique queryName per run so repeated bench invocations don't collide.
+Every query drains the events table through streaming/jobs.py's
+``drain`` (availableNow trigger), so streaming semantics collapse to a
+closed form a DuckDB batch oracle can check (see the jobs.py module
+docstring). Memory-sink tables get a unique name per run so repeated bench
+invocations don't collide.
 """
 
 from __future__ import annotations
 
-import tempfile
-import uuid
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.jobs import _stream_shuffle_partitions, read_events_stream
-from ..streaming.stateful2 import streaming_running_counts
+from ..functions.plan import scratch_dir
+from ..streaming.jobs import (
+    GOLD_STATE_PARTITIONS,
+    click_error_join,
+    drain,
+    read_events_stream,
+)
 from .catalog import Query
 
 
@@ -28,23 +34,12 @@ def _streaming_dropdup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id back to one row, holding per-key state only within the
     watermark horizon — the bounded-state form of streaming distinct
     (vs. plain dropDuplicates, whose state never expires)."""
-    out = tempfile.mkdtemp(prefix="eng_ddw_")
     s = read_events_stream(spark, sf_dir)
     doubled = s.unionByName(s).withWatermark("ts", "10 minutes")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type", "value"
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out + "/dedup")
-            .option("checkpointLocation", out + "/_chk")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.read.parquet(out + "/dedup")
+    return drain(deduped, scratch_dir("eng_ddw_"), "dedup")
 
 
 _DROPDUP_SQL = """
@@ -57,7 +52,6 @@ def _streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global event-type leaderboard re-emitted in full every trigger into
     the memory sink — the only mode that allows a streaming ORDER BY. The
     final table is the complete aggregate, so the batch oracle is exact."""
-    name = "eng_complete_" + uuid.uuid4().hex[:8]
     agg = (
         read_events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -67,16 +61,7 @@ def _streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("n_events").desc(), F.col("event_type"))
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, scratch_dir("eng_complete_"), "complete_topk", mode="complete")
 
 
 _COMPLETE_SQL = """
@@ -92,22 +77,14 @@ def _streaming_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Update output mode: only keys whose aggregate changed are emitted
     each trigger. Draining in one batch means every key emits exactly its
     final value, so the memory-sink table equals the batch group-by."""
-    name = "eng_update_" + uuid.uuid4().hex[:8]
     agg = (
         read_events_stream(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(name).select("user_id", F.col("n_events").cast("long").alias("n_events"))
+    return drain(agg, scratch_dir("eng_update_"), "update_counts", mode="update").select(
+        "user_id", F.col("n_events").cast("long").alias("n_events")
+    )
 
 
 _UPDATE_SQL = """
@@ -117,36 +94,6 @@ GROUP BY user_id
 """
 
 
-def _streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithState (typed arbitrary state, Spark 4.x): running
-    per-user counter in a ValueState handle. One drain batch → one emitted
-    row per user carrying the final running count == batch count.
-
-    NOT in the catalog: the TransformWithStateInPySpark runner needs a
-    working ``google.protobuf`` and this container's protobuf install is
-    broken (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). The operator
-    and this builder are kept, environment-gated, with a skip-marked test
-    (tests/test_streaming2.py) that activates wherever protobuf works;
-    applyInPandasWithState (streaming_stateful_dedup) covers the
-    arbitrary-state surface in the catalog meanwhile."""
-    name = "eng_tws_" + uuid.uuid4().hex[:8]
-    chk = tempfile.mkdtemp(prefix="eng_tws_chk_")
-    counts = streaming_running_counts(read_events_stream(spark, sf_dir), "user_id")
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", chk)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(name).select(
-        F.col("key").alias("user_id"), F.col("running_count").alias("n_events")
-    )
-
-
 QUERIES = [
     Query("streaming_dropdup_watermark", _streaming_dropdup_watermark, _DROPDUP_SQL,
           ("streaming", "dedup", "dropDuplicatesWithinWatermark")),
@@ -154,19 +101,24 @@ QUERIES = [
           ("streaming", "complete_mode")),
     Query("streaming_update_counts", _streaming_update_counts, _UPDATE_SQL,
           ("streaming", "update_mode")),
-    # streaming_transform_with_state is environment-gated — see its docstring
 ]
 
 
 def _streaming_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER windowed join (run_gold_left_outer):
-    null-padded unmatched windows emit on watermark close."""
-    import tempfile
+    """Stream-stream LEFT OUTER join of two watermarked hourly aggregates
+    (jobs.click_error_join) — the outer-join extension of the gold job.
+    Unmatched left windows emit null-padded once the watermark passes
+    their window end.
 
-    from ..streaming.jobs import run_gold_left_outer
-
-    out = run_gold_left_outer(spark, sf_dir, tempfile.mkdtemp(prefix="eng_outer_"))
-    return spark.read.parquet(out).orderBy("window_start")
+    Emission rule (verified empirically, and what the oracle encodes): a
+    row emits iff window_end <= min(max ts of each branch) - watermark;
+    matched rows carry the right aggregate, unmatched carry NULL — the
+    outer-state eviction happens in the same commit that closes the
+    window, so availableNow drains to the closed-form result."""
+    flat = click_error_join(read_events_stream(spark, sf_dir), "left_outer")
+    return drain(
+        flat, scratch_dir("eng_outer_"), "gold_outer", partitions=GOLD_STATE_PARTITIONS
+    ).orderBy("window_start")
 
 
 _LEFT_OUTER_SQL = """
@@ -210,9 +162,8 @@ def _streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing open sessions stay in state and are withheld — exactly what
     the oracle's gaps-and-islands rewrite + emission filter reproduces.
     Scale: state is one (user, open-session) row per key, bounded by the
-    watermark horizon; shuffle partitions pinned to key cardinality
-    (_stream_shuffle_partitions)."""
-    out = tempfile.mkdtemp(prefix="eng_ssw_")
+    watermark horizon; state partitions pinned to key cardinality
+    (drain's 8)."""
     s = read_events_stream(spark, sf_dir).withWatermark("ts", "2 minutes")
     agg = (
         s.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
@@ -228,17 +179,7 @@ def _streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out + "/sessions")
-            .option("checkpointLocation", out + "/_chk")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.read.parquet(out + "/sessions").orderBy("user_id", "session_start")
+    return drain(agg, scratch_dir("eng_ssw_"), "sessions").orderBy("user_id", "session_start")
 
 
 _SESSION_STREAM_SQL = """
@@ -302,14 +243,13 @@ def _streaming_session_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFr
     timer clock exactly.
     """
     import glob
-    import os
     import shutil
 
     from ..sources.readers import load_table
     from ..streaming.jobs import _NTZ_AS_UTC
     from ..streaming.stateful import streaming_sessionize_timeout
 
-    out = tempfile.mkdtemp(prefix="eng_sess_to_")
+    out = scratch_dir("eng_sess_to_")
     src = os.path.join(out, "src")
     os.makedirs(src)
     ev = (
@@ -351,17 +291,7 @@ def _streaming_session_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFr
     sess = streaming_sessionize_timeout(
         stream.withWatermark("ts", "0 seconds"), "user_id", "us", _SESS_TO_GAP_US
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out + "/sess")
-            .option("checkpointLocation", out + "/_chk")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.read.parquet(out + "/sess")
+    return drain(sess, out, "sess")
 
 
 _SESSION_TIMEOUT_SQL = """
@@ -413,24 +343,14 @@ def _streaming_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     introspection half of the engine's state-store story (RocksDB provider,
     session.py).
     """
-    out = tempfile.mkdtemp(prefix="eng_ssr_")
-    name = "eng_ssr_" + uuid.uuid4().hex[:8]
+    out = scratch_dir("eng_ssr_")
     agg = (
         read_events_stream(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sv"))
     )
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", out + "/_chk")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    state = spark.read.format("statestore").load(out + "/_chk")
+    drain(agg, out, "ssr", mode="complete")
+    state = spark.read.format("statestore").load(os.path.join(out, "_chk_ssr"))
     return state.select(
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").alias("n_events"),

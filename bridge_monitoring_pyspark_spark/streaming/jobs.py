@@ -25,12 +25,18 @@ min over watermarked branches of (max event time) − delay. That closed-form
 is what plans/streaming_q.py's DuckDB oracles encode.
 
 Each query gets its own checkpoint dir (exactly-once restart contract,
-reference README.md:268-270).
+reference README.md:268-270): ``<out>/_chk_<sink>`` next to ``<out>/<sink>``.
+
+:func:`drain` is the one availableNow run-to-closed-form the catalog's
+streaming witnesses use (start, await, read the sink back). The ``run_*``
+jobs start their sinks themselves because bronze/silver/gold also run in
+follow mode (the CLI's ``--follow``, perfbench/live.py).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -110,19 +116,66 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int | None):
 
 
 def _write(
-    df: DataFrame, out_dir: str, name: str, available_now: bool, partition_by: str | None = None
+    df: DataFrame,
+    out_dir: str,
+    name: str,
+    available_now: bool = True,
+    partition_by: str | None = None,
+    mode: str = "append",
 ):
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, name))
-        .option("checkpointLocation", os.path.join(out_dir, f"_chk_{name}"))
-        .outputMode("append")
+    """Start ``df`` with its checkpoint at ``<out_dir>/_chk_<name>``. Append
+    mode writes parquet to ``<out_dir>/<name>``; complete and update modes,
+    which the parquet sink refuses, write a memory table named
+    ``<name>_<random>`` (the query's name), unique per run."""
+    w = df.writeStream.outputMode(mode).option(
+        "checkpointLocation", os.path.join(out_dir, f"_chk_{name}")
     )
+    if mode == "append":
+        w = w.format("parquet").option("path", os.path.join(out_dir, name))
+    else:
+        w = w.format("memory").queryName(f"{name}_{uuid.uuid4().hex[:8]}")
     if partition_by:
         w = w.partitionBy(partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
+
+
+def _await(queries: list, available_now: bool = True) -> None:
+    """Block until each availableNow query has drained. In follow mode
+    return with the queries running: the caller (e.g. the CLI's
+    `all --follow`) starts every layer first, then blocks once on
+    spark.streams.awaitAnyTermination(), so downstream layers aren't
+    starved by an upstream await."""
+    if available_now:
+        for q in queries:
+            q.awaitTermination()
+
+
+def drain(
+    df: DataFrame,
+    out_dir: str,
+    name: str,
+    mode: str = "append",
+    partitions: int | None = 8,
+) -> DataFrame:
+    """Run the stream ``df`` to its closed form and return the sink read
+    back as a batch DataFrame — the catalog's streaming-witness contract.
+
+    The query starts under ``partitions`` state partitions (None leaves
+    the session value; see :func:`_stream_shuffle_partitions`), drains
+    with an availableNow trigger and is awaited. The sink follows
+    :func:`_write`: parquet at ``<out_dir>/<name>`` for append, a memory
+    table for complete/update, checkpoint at ``<out_dir>/_chk_<name>`` —
+    so a second drain into the same dir resumes from the first one's
+    offsets, and the state-store reader can load the checkpoint after."""
+    spark = df.sparkSession
+    with _stream_shuffle_partitions(spark, partitions):
+        q = _write(df, out_dir, name, mode=mode)
+    _await([q])
+    if mode == "append":
+        return spark.read.parquet(os.path.join(out_dir, name))
+    return spark.table(q.name)
 
 
 def write_json_landing(spark: SparkSession, sf_dir: str, landing_dir: str) -> None:
@@ -165,9 +218,7 @@ EVENTS_JSON = T.StructType(
 )
 
 
-def run_json_ingest(
-    spark: SparkSession, landing_dir: str, out_dir: str, available_now: bool = True
-) -> dict[str, str]:
+def run_json_ingest(spark: SparkSession, landing_dir: str, out_dir: str) -> dict[str, str]:
     """Bronze ingest from the JSON landing zone (S1 streaming JSON source +
     S2 partition discovery; reference: pipelines/bronze_ingest.py:26-62):
     explicit schema, try_to_timestamp parse, null-split, date-partitioned
@@ -177,17 +228,10 @@ def run_json_ingest(
     valid, invalid = split_valid_invalid(
         parsed, F.col("event_time_ts").isNotNull() & F.col("value").isNotNull()
     )
-    queries = [
-        _write(valid, out_dir, "json_bronze_valid", available_now, partition_by="date"),
-        _write(invalid, out_dir, "json_bronze_rejected", available_now),
-    ]
-    if available_now:
-        for q in queries:
-            q.awaitTermination()
-    # follow mode: return with the queries running — the caller (e.g. the
-    # CLI's `all --follow`) starts every layer first, then blocks once on
-    # spark.streams.awaitAnyTermination() so downstream layers aren't
-    # starved by an upstream await.
+    _await([
+        _write(valid, out_dir, "json_bronze_valid", partition_by="date"),
+        _write(invalid, out_dir, "json_bronze_rejected"),
+    ])
     return {
         "valid": os.path.join(out_dir, "json_bronze_valid"),
         "rejected": os.path.join(out_dir, "json_bronze_rejected"),
@@ -195,11 +239,7 @@ def run_json_ingest(
 
 
 def run_silver_foreachbatch(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    rules: SensorRules,
-    available_now: bool = True,
+    spark: SparkSession, sf_dir: str, out_dir: str, rules: SensorRules
 ) -> dict[str, str]:
     """Silver DQ routing as ONE streaming query via foreachBatch: each
     micro-batch is persisted once and both branches write from it — halving
@@ -224,16 +264,12 @@ def run_silver_foreachbatch(
         finally:
             batch_df.unpersist()
 
-    w = (
+    _await([
         events.writeStream.foreachBatch(route)
         .option("checkpointLocation", os.path.join(out_dir, "_chk_fb"))
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    q = w.start()
-    if available_now:
-        q.awaitTermination()
-    # follow mode: return with the query running (see run_bronze note).
+        .trigger(availableNow=True)
+        .start()
+    ])
     return {"valid": valid_dir, "rejected": rejected_dir}
 
 
@@ -256,17 +292,10 @@ def run_bronze(
     valid, invalid = split_valid_invalid(
         events, F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
-    queries = [
+    _await([
         _write(valid, out_dir, "bronze_valid", available_now, partition_by="partition_date"),
         _write(invalid.drop("partition_date"), out_dir, "bronze_rejected", available_now),
-    ]
-    if available_now:
-        for q in queries:
-            q.awaitTermination()
-    # follow mode: return with the queries running — the caller (e.g. the
-    # CLI's `all --follow`) starts every layer first, then blocks once on
-    # spark.streams.awaitAnyTermination() so downstream layers aren't
-    # starved by an upstream await.
+    ], available_now)
     return {
         "valid": os.path.join(out_dir, "bronze_valid"),
         "rejected": os.path.join(out_dir, "bronze_rejected"),
@@ -294,21 +323,51 @@ def run_silver(
         )
     )
     enriched = valid.join(F.broadcast(dim), on="user_id", how="left")
-    queries = [
+    _await([
         _write(enriched, out_dir, "silver_valid", available_now),
         _write(invalid, out_dir, "silver_rejected", available_now),
-    ]
-    if available_now:
-        for q in queries:
-            q.awaitTermination()
-    # follow mode: return with the queries running — the caller (e.g. the
-    # CLI's `all --follow`) starts every layer first, then blocks once on
-    # spark.streams.awaitAnyTermination() so downstream layers aren't
-    # starved by an upstream await.
+    ], available_now)
     return {
         "valid": os.path.join(out_dir, "silver_valid"),
         "rejected": os.path.join(out_dir, "silver_rejected"),
     }
+
+
+# Gold's state partitions: state-store instance count = partitions ×
+# stateful operators (3 aggs + 2 joins in run_gold), and the hourly-window
+# key space is O(hundreds) — measured 14s → 5s at sf0.1 going 8 → 4. Size
+# it up with real key cardinality on a cluster.
+GOLD_STATE_PARTITIONS = 4
+
+
+def _window_agg(events: DataFrame, cond, agg, window: str, watermark: str) -> DataFrame:
+    """One watermarked tumbling-window aggregate of the rows matching
+    ``cond``, keyed by the ``window`` struct."""
+    return (
+        events.where(cond)
+        .withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("window"))
+        .agg(agg)
+    )
+
+
+def _click_avg(events: DataFrame, window: str, watermark: str) -> DataFrame:
+    # exact_avg (fixed-point sum + one division) instead of round(avg, 4):
+    # order- and partitioning-independent, so restarts / repartitions of
+    # this stateful job reproduce byte-identical gold output and the sf0.1
+    # oracle replay has no rounding boundary (see functions/numeric.py).
+    return _window_agg(
+        events, F.col("event_type") == "click",
+        exact_avg("value").alias("avg_click_value"), window, watermark,
+    )
+
+
+def _flat_windows(joined: DataFrame, *cols: str) -> DataFrame:
+    return joined.select(
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        *cols,
+    )
 
 
 def run_gold(
@@ -318,98 +377,46 @@ def run_gold(
     window: str = "1 hour",
     watermark: str = "2 minutes",
     available_now: bool = True,
-    shuffle_partitions: int | None = 4,
 ) -> str:
     """Gold: three watermarked tumbling-window aggregates stream-stream
     INNER-joined on the window struct, flattened, one checkpointed sink —
     the chained-stateful-operators flagship
-    (reference: pipelines/gold_aggregation.py:52-118).
-
-    shuffle_partitions defaults to 4: state-store instance count =
-    partitions × stateful operators (3 aggs + 2 joins here), and the
-    hourly-window key space is O(hundreds) — measured 14s → 5s at sf0.1
-    going 8 → 4. Size it up with real key cardinality on a cluster."""
+    (reference: pipelines/gold_aggregation.py:52-118). Starts under
+    GOLD_STATE_PARTITIONS state partitions."""
     events = read_events_stream(spark, sf_dir)
-    win = F.window("ts", window)
-
-    def branch(evt_type: str, agg, out_name: str) -> DataFrame:
-        return (
-            events.where(F.col("event_type") == evt_type)
-            .withWatermark("ts", watermark)
-            .groupBy(win.alias("window"))
-            .agg(agg.alias(out_name))
+    clicks = _click_avg(events, window, watermark)
+    views, errors = (
+        _window_agg(
+            events, F.col("event_type") == t, F.max("value").alias(f"max_{t}_value"),
+            window, watermark,
         )
-
-    # exact_avg (fixed-point sum + one division) instead of round(avg, 4):
-    # order- and partitioning-independent, so restarts / repartitions of
-    # this stateful job reproduce byte-identical gold output and the sf0.1
-    # oracle replay has no rounding boundary (see functions/numeric.py).
-    clicks = branch("click", exact_avg("value"), "avg_click_value")
-    views = branch("view", F.max("value"), "max_view_value")
-    errors = branch("error", F.max("value"), "max_error_value")
+        for t in ("view", "error")
+    )
     joined = clicks.join(views, on="window", how="inner").join(
         errors, on="window", how="inner"
     )
-    flat = joined.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "avg_click_value",
-        "max_view_value",
-        "max_error_value",
-    )
-    with _stream_shuffle_partitions(spark, shuffle_partitions):
+    flat = _flat_windows(joined, "avg_click_value", "max_view_value", "max_error_value")
+    with _stream_shuffle_partitions(spark, GOLD_STATE_PARTITIONS):
         q = _write(flat, out_dir, "gold_metrics", available_now)
-    if available_now:
-        q.awaitTermination()
-    # follow mode: return with the query running (see run_bronze note).
+    _await([q], available_now)
     return os.path.join(out_dir, "gold_metrics")
 
 
-def run_gold_left_outer(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 minutes",
-    available_now: bool = True,
-    shuffle_partitions: int | None = 4,
-) -> str:
-    """Stream-stream LEFT OUTER join of two watermarked windowed aggregates
-    — the outer-join extension of :func:`run_gold` (the reference only
-    inner-joins, pipelines/gold_aggregation.py:82-99). Unmatched left
-    windows emit null-padded once the watermark passes their window end;
-    the error branch is filtered sparse (value > 90) so outer rows actually
-    occur.
-
-    Emission rule (verified empirically, and what the oracle encodes): a
-    row emits iff window_end <= min(max ts of each branch) - watermark;
-    matched rows carry the right aggregate, unmatched carry NULL — the
-    outer-state eviction happens in the same commit that closes the
-    window, so availableNow drains to the closed-form result."""
-    events = read_events_stream(spark, sf_dir)
-    win = F.window("ts", window)
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .withWatermark("ts", watermark)
-        .groupBy(win.alias("window"))
-        # deterministic fixed-point average — see run_gold / functions/numeric.py
-        .agg(exact_avg("value").alias("avg_click_value"))
+def click_error_join(events: DataFrame, how: str) -> DataFrame:
+    """The hourly click average (as in :func:`run_gold`) ``how``-joined on
+    the window to the hourly max of errors with value > 90 — filtered
+    sparse on purpose so unmatched windows occur — and flattened to
+    (window_start, window_end, avg_click_value, max_error_value): the body
+    of the outer-join witnesses (the reference only inner-joins,
+    pipelines/gold_aggregation.py:82-99)."""
+    clicks = _click_avg(events, "1 hour", "2 minutes")
+    errors = _window_agg(
+        events,
+        (F.col("event_type") == "error") & (F.col("value") > 90),
+        F.max("value").alias("max_error_value"),
+        "1 hour",
+        "2 minutes",
     )
-    errors = (
-        events.where((F.col("event_type") == "error") & (F.col("value") > 90))
-        .withWatermark("ts", watermark)
-        .groupBy(win.alias("window"))
-        .agg(F.max("value").alias("max_error_value"))
+    return _flat_windows(
+        clicks.join(errors, on="window", how=how), "avg_click_value", "max_error_value"
     )
-    flat = clicks.join(errors, on="window", how="left_outer").select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "avg_click_value",
-        "max_error_value",
-    )
-    with _stream_shuffle_partitions(spark, shuffle_partitions):
-        q = _write(flat, out_dir, "gold_outer", available_now)
-    if available_now:
-        q.awaitTermination()
-    # follow mode: return with the query running (see run_bronze note).
-    return os.path.join(out_dir, "gold_outer")

@@ -264,6 +264,37 @@ def test_similarity_kernels_written_once():
     assert src.count('F.round("sim", 6).desc()') == 1
 
 
+def test_streaming_drain_written_once():
+    """Streaming witnesses run to their closed form through
+    streaming/jobs.py's drain: the availableNow trigger is written only
+    there and in the extras6 foreachBatch upsert, awaits only there and in
+    the extras3 pyds poll, plans never reach for jobs.py's private sink
+    plumbing, and every temp dir comes from the one scratch_dir."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+
+    def holders(needle: str) -> set[str]:
+        return {name for name, src in srcs.items() if needle in src}
+
+    assert holders("trigger(availableNow=True)") == {"streaming/jobs.py", "plans/extras6.py"}
+    assert holders("awaitTermination(") == {
+        "streaming/jobs.py", "plans/extras6.py", "plans/extras3.py"
+    }
+    assert sum(src.count("tempfile.mkdtemp") for src in srcs.values()) == 1
+    private_imports = {
+        (name, alias.name)
+        for name, src in srcs.items() if name.startswith("plans/")
+        for node in ast.walk(ast.parse(src)) if isinstance(node, ast.ImportFrom)
+        for alias in node.names if alias.name in {"_write", "_stream_shuffle_partitions"}
+    }
+    assert not private_imports
+
+
 def test_neardup_pairs_build_never_touches_driver(spark, monkeypatch):
     """neardup_embedding_pairs must plan without any driver-side
     materialization — the round-2/3 scale-killer was a full-table

@@ -1,6 +1,6 @@
 """Tests for the second streaming wave (plans/streaming_q2.py): output-mode
-semantics vs batch equivalents, plan checks for the hint/cache queries, and
-the environment-gated transformWithState operator."""
+semantics vs batch equivalents, plan checks for the hint/cache queries, the
+state-store reader, and streaming/jobs.py's drain helper."""
 
 from __future__ import annotations
 
@@ -85,41 +85,6 @@ def test_cached_reuse_hits_memory_scan_then_releases(spark):
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     new = set(jmap.keySet().toArray()) - before
     assert len(new) <= 1, f"cached join leaked into session storage: {new}"
-
-
-def _protobuf_ok() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_ok(),
-    # Re-checked every round; as of round 8 `import google.protobuf` still
-    # raises ModuleNotFoundError (the package is absent, not merely broken).
-    # Semantics stay covered by the applyInPandasWithState twins.
-    reason="transformWithState needs google.protobuf; absent in this container",
-)
-def test_transform_with_state_running_counts(spark):
-    from bridge_monitoring_pyspark_spark.plans.streaming_q2 import (
-        _streaming_transform_with_state,
-    )
-
-    got = {
-        r.user_id: r.n_events
-        for r in _streaming_transform_with_state(spark, SF_SMOKE).collect()
-    }
-    want = {
-        r.user_id: r.n
-        for r in load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
 
 
 def test_streaming_session_window_matches_batch_closed_sessions(spark):
@@ -409,3 +374,53 @@ def test_statestore_reader_join_side_exposes_buffered_rows(spark, tmp_path):
     # partitioned by (generically named field0 in join state)
     assert len(left.schema["key"].dataType.fieldNames()) == 1
     assert {r["key"][0] for r in rows} <= {u for _, u in actual}
+
+
+def test_drain_restores_shuffle_partitions_when_start_raises(spark, tmp_path):
+    """An append-mode aggregate without a watermark is rejected at start();
+    the state-partition pin drain set for that start must still be undone."""
+    from pyspark.errors import AnalysisException
+
+    from bridge_monitoring_pyspark_spark.streaming.jobs import drain, read_events_stream
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        drain(agg, str(tmp_path), "no_watermark", partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_drain_complete_mode_pins_state_partitions(spark, tmp_path):
+    """A drained complete-mode aggregate reads back as the batch aggregate,
+    and its checkpoint (<out>/_chk_<name>) records the pinned partition
+    count."""
+    from bridge_monitoring_pyspark_spark.streaming.jobs import drain, read_events_stream
+
+    agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    got = drain(agg, str(tmp_path), "agg", mode="complete", partitions=3)
+    want = load_table(spark, SF_SMOKE, "events").groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    assert sorted(got.collect()) == sorted(want.collect())
+    meta = spark.read.format("state-metadata").load(str(tmp_path / "_chk_agg")).collect()
+    assert [(m.operatorName, m.numPartitions) for m in meta] == [("stateStoreSave", 3)]
+
+
+def test_scratch_dirs_removed_by_cleanup(spark, monkeypatch):
+    """Witness sink dirs and checkpoints — including the memory-sink
+    drain's, which Spark would otherwise put in an unmanaged temp dir —
+    live in scratch dirs that the exit cleanup removes."""
+    import os
+
+    from bridge_monitoring_pyspark_spark.functions import plan
+
+    monkeypatch.setattr(plan, "_SCRATCH", [])
+    for name in ("streaming_complete_topk", "streaming_interval_join"):
+        assert CATALOG[name].build(spark, SF_SMOKE).count() > 0
+    dirs = list(plan._SCRATCH)
+    assert len(dirs) == 2
+    assert all(any(f.startswith("_chk_") for f in os.listdir(d)) for d in dirs)
+    plan._remove_scratch()
+    assert not any(os.path.exists(d) for d in dirs)
