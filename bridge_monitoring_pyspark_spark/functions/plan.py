@@ -64,7 +64,10 @@ def sorted_once(df: DataFrame, *cols: Column | str) -> DataFrame:
       long pipelines on preemptible nodes or under dynamic allocation.
       There, set ``SPARK_GRAFT_SAFE_SORT=1`` to fall back to a plain
       ``orderBy`` (recomputable lineage, at the price of the double
-      execution this helper removes).
+      execution this helper removes). The switch covers THIS helper
+      only: the roughly 30 direct ``localCheckpoint``/``persist`` calls
+      elsewhere in the package still truncate lineage under it, until
+      they are routed through one ``checkpoint_once`` (ROADMAP item 3).
     * MEMORY: the pre-sort child materializes fully to executor storage
       (memory, then disk) — a deliberate space-for-compute trade; see
       SCALING.md's memory-bounds table for the 100 TB posture.

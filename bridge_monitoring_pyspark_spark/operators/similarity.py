@@ -17,9 +17,10 @@ Four tiers (brute-force / IVF / hyperplane-LSH / product quantization):
 * **IVF (inverted-file) top-k** — the sub-linear path: partition the corpus
   by nearest centroid (broadcast centroid table, one narrow pass), then
   search only the ``n_probe`` closest clusters per query. Recall < 1 by
-  construction; measured in tests against brute force. Centroid selection
-  here is deterministic (fixed ids) so results are stable; production
-  would k-means on a sample.
+  construction; measured in tests against brute force. The caller picks
+  the centroids: the catalog's deterministic stride rule, the trained
+  Lloyd model and the cid-partitioned index build and probe live in
+  plans/clustering.py.
 * **Hyperplane LSH** — :func:`hyperplane_lsh_topk` / :func:`hyperplane_lsh_pairs`
   bucket by random-projection sign bits and exactly re-score the bucket
   collisions.
@@ -30,9 +31,14 @@ Shared kernels — each similarity decision is written once:
 :func:`_normalized_batch` (unit rows, zero-norm guard),
 :func:`_quantize_half_up` + :func:`_partial_topk_rows` (the tie-safe
 composite-key cut), :func:`_partial_topk_frame` (one query x corpus block
-to partial top-k rows), :func:`_centroid_assigner` (the one Arrow
+to partial top-k rows), :func:`centroid_assigner` (the one Arrow
 nearest-centroid pass), :func:`_rank_neighbors` (the final per-query rank
 and output columns) and :func:`_planes` (the LSH hyperplanes).
+
+Broadcast lifetime: each function here that broadcasts a small side lets
+the broadcast live as long as the plan it returns; no module state holds
+one. Only :func:`centroid_assigner` hands its broadcast to the caller, so
+an eager caller can destroy it once its write or collect is done.
 
 Ranking determinism: ordering is on round(sim, 6) desc then neighbor id, so
 double-precision noise below 1e-6 can't reorder results across engines.
@@ -528,45 +534,7 @@ def hard_negative_topk(
     )
 
 
-# Broadcasts created by nearest_centroids_arrow, oldest first. A broadcast
-# must outlive every job that executes its mapInPandas plan, so the function
-# cannot unpersist eagerly; without cleanup, repeated index builds in one
-# process accumulate broadcast blocks on driver and executors (ADVICE r9).
-# Callers that have MATERIALIZED the returned DataFrame (parquet write,
-# collect, localCheckpoint) take a mark first and release only their own
-# mints (ADVICE r10: a blanket clear would destroy broadcasts referenced by
-# OTHER callers' still-lazy plans) — see ivf_index_dir / appended_index_dir.
-_ASSIGN_BROADCASTS: list = []
-
-
-def assignment_broadcast_mark() -> int:
-    """Registry watermark. Take before minting assignment plans; pass to
-    :func:`release_assignment_broadcasts` to free only the broadcasts
-    created after the mark, leaving earlier callers' live plans intact."""
-    return len(_ASSIGN_BROADCASTS)
-
-
-def release_assignment_broadcasts(since: int = 0) -> int:
-    """Unpersist + destroy the broadcasts minted by
-    :func:`nearest_centroids_arrow` at registry position ``since`` or
-    later (default: all of them), returning how many were released. Only
-    release broadcasts whose DataFrames have been materialized (written,
-    collected, or checkpointed) — a lazy plan re-executed after release
-    would fail to fetch its broadcast. Scoped callers pair this with
-    :func:`assignment_broadcast_mark` so unrelated callers' pending plans
-    survive (ADVICE r10)."""
-    released = _ASSIGN_BROADCASTS[since:]
-    for bc in released:
-        try:
-            bc.unpersist()
-            bc.destroy()
-        except Exception:
-            pass  # context already stopped — nothing to free
-    del _ASSIGN_BROADCASTS[since:]
-    return len(released)
-
-
-def _centroid_assigner(
+def centroid_assigner(
     centroids: DataFrame, cid_col: str, vec_col: str, cid_out: str
 ):
     """The one Arrow nearest-centroid pass. Collects ``(cid_col, vec_col)``
@@ -575,7 +543,9 @@ def _centroid_assigner(
     ``assign(df, id_col, vec_col, n_keep, emit_sim=False)`` maps ``df`` to
     ``(id_col, vec_col, cid_out[, __simq])`` rows, ``n_keep`` per input row,
     and may be applied to any number of DataFrames. The caller owns the
-    broadcast's lifecycle."""
+    broadcast: it must outlive every job that executes an assigned plan,
+    so destroy it only once those plans are materialized (written or
+    collected) — or let it live as long as the plan."""
     cid_type = dict(centroids.dtypes)[cid_col]
     if cid_type not in ("int", "bigint"):
         raise ValueError(
@@ -645,14 +615,14 @@ def nearest_centroids_arrow(
     emit_sim: bool = False,
 ) -> DataFrame:
     """Top-``n_keep`` nearest centroids per row via one BLAS matmul per
-    Arrow batch — the standalone N x K assignment pass used by the IVF
-    index builds (plans/extras29.py build + probe, extras33.py append).
+    Arrow batch — the standalone, lazy N x K assignment pass of the
+    SemDeDup entries (plans/clustering.py).
 
     ``emit_sim=True`` appends a ``__simq`` bigint column — the winning
     centroid's cosine quantized exactly like the assignment key
     (round(cos, 6) half-away-from-zero × 1e6) — for callers that order
     members within a cluster by proximity to its centroid (the
-    locality-preserving capped-SemDeDup split, plans/extras24.py).
+    locality-preserving capped-SemDeDup split).
 
     Same ordering contract as the SQL crossJoin form it replaces —
     round(cosine, 6) DESC half-away-from-zero then centroid id ASC, via
@@ -666,19 +636,17 @@ def nearest_centroids_arrow(
     Round-9 scale fix: the index builds originally assigned through a SQL
     crossJoin whose N x K interpreted higher-order-function cosines made
     the decade-3 (20M x 4472) build exceed 30 minutes. There is one Arrow
-    assigner, :func:`_centroid_assigner`: this function and
-    ``ivf_topk(assignment="arrow")`` both call it, so the assignment kernel
-    cannot fork between the index builds and the probe path.
+    assigner, :func:`centroid_assigner`: this function, the IVF index
+    writer and probe, and ``ivf_topk(assignment="arrow")`` all call it, so
+    the assignment kernel cannot fork between them.
 
-    Broadcast lifecycle: each call mints one driver broadcast (K x dim
-    floats) that must survive until the returned plan has executed; it is
-    registered in ``_ASSIGN_BROADCASTS`` and freed when a caller that has
-    materialized its results calls :func:`release_assignment_broadcasts`
-    (the per-sf_dir index builders do; one-shot query plans let process
-    exit reclaim the handful of live blocks).
+    Broadcast lifetime: the call mints one K x dim broadcast that lives as
+    long as the returned plan (it must survive every job that executes
+    it). Callers that materialize their assignment at once and want the
+    block freed right after call :func:`centroid_assigner` themselves and
+    destroy the broadcast it returns.
     """
-    assign, bc = _centroid_assigner(centroids, cid_col, vec_col, cid_col)
-    _ASSIGN_BROADCASTS.append(bc)  # released by the caller post-materialize
+    assign, _ = centroid_assigner(centroids, cid_col, vec_col, cid_col)
     return assign(df, id_col, vec_col, n_keep, emit_sim)
 
 
@@ -710,7 +678,7 @@ def ivf_topk(
       batch does one BLAS matmul, emitting its top-1 (corpus) / top-n_probe
       (queries) clusters under the exact engine order — round(sim,6) DESC
       quantized half-away-from-zero, centroid id ASC — through
-      :func:`_centroid_assigner`, the one Arrow assigner, whose composite
+      :func:`centroid_assigner`, the one Arrow assigner, whose composite
       integer key is that of :func:`_partial_topk_rows`. No shuffle at
       all for the assignment. Measured ~7 us/pair -> BLAS on the sf1
       fixtures (the higher-order-function dot is the cost; SCALING.md).
@@ -788,9 +756,9 @@ def ivf_topk(
         return ranked.select(id_out, vec_out, "cluster_id")
 
     if assignment == "arrow":
-        # one collect + one broadcast serve both sides; like every one-shot
-        # query plan's broadcast it is left unregistered
-        assign, _ = _centroid_assigner(
+        # one collect + one broadcast serve both sides; it lives as long as
+        # the returned plan
+        assign, _ = centroid_assigner(
             centroids, centroid_id, centroid_vec, "cluster_id"
         )
     else:

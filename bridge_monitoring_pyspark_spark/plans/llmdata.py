@@ -14,8 +14,6 @@ scale path, pytest-validated.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +33,7 @@ from ..operators.dedup import (
     verify_candidates_jaccard,
 )
 from ..operators.multimodal import extract_features, with_binary_payload
-from ..operators.similarity import cosine_pairs_blocked, cosine_topk_arrow, ivf_topk
+from ..operators.similarity import cosine_pairs_blocked, cosine_topk_arrow
 from ..sources.readers import load_table
 from .catalog import Query
 
@@ -345,82 +343,6 @@ ORDER BY query_id, rank
 """
 
 
-def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5 (fixed centroids = every floor(sqrt(N))-th
-    vector, 3 probes). Fully deterministic given the centroids, so the
-    DuckDB oracle replays the identical algorithm (nearest-centroid
-    assignment with the same round(·,6)/cluster-asc tie-break, probe
-    filter, exact re-rank) — hash-match needs no recall assumption. Recall
-    vs brute force is additionally measured in pytest.
-
-    The centroid count is the scaling decision: K = ceil(N/stride) with
-    stride = floor(sqrt(N)) keeps K ~ sqrt(N), so assignment work is
-    N*K ~ N^1.5 — the textbook flat-IVF shape. The earlier fixed
-    every-50th rule made K proportional to N (quadratic assignment), which
-    the sf0.1 -> sf1 scale run measured as a x63.7 blowup at x10 data
-    (SCALING.md). The one eager action here is a count() for the stride —
-    a single scalar, same class as the k-means centroid fetch."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10)
-    stride = int(math.isqrt(e.count()))
-    centroids = e.where(F.col("vec_id") % stride == 0).select(
-        (F.col("vec_id") / stride).cast("int").alias("cid"), "embedding"
-    )
-    return sorted_once(
-        ivf_topk(
-            q, e, centroids,
-            query_id="vec_id", corpus_id="vec_id", vec_col="embedding",
-            centroid_id="cid", centroid_vec="embedding", k=5, n_probe=3,
-        ),
-        "query_id", "rank",
-    )
-
-
-# Same algorithm replayed: corpus→nearest centroid (top-1 by round(csim,6)
-# desc, cid asc), query→3 probe centroids (same ordering), candidates =
-# corpus rows in a probed cluster minus self, exact top-5 re-rank with the
-# engine's tie-break. Centroids are the every-floor(sqrt(N))-th-vector rule
-# (K ~ sqrt(N); see _ann_ivf docstring), so the oracle derives them from
-# the table itself — no literals needed.
-_ANN_IVF_SQL = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-s AS (SELECT CAST(floor(sqrt(count(*))) AS BIGINT) AS stride FROM e),
-cent AS (SELECT CAST(vec_id // (SELECT stride FROM s) AS INT) AS cid, v AS cv
-         FROM e WHERE vec_id % (SELECT stride FROM s) = 0),
-corpus_assign AS (
-  SELECT vec_id AS neighbor_id, v, cid FROM (
-    SELECT e.vec_id, e.v, cent.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, cent.cv), 6) DESC,
-                      cent.cid ASC) AS rn
-    FROM e CROSS JOIN cent
-  ) WHERE rn = 1
-),
-query_probes AS (
-  SELECT vec_id AS query_id, v AS qv, cid FROM (
-    SELECT e.vec_id, e.v, cent.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, cent.cv), 6) DESC,
-                      cent.cid ASC) AS rn
-    FROM e CROSS JOIN cent
-    WHERE e.vec_id < 10
-  ) WHERE rn <= 3
-),
-scored AS (
-  SELECT q.query_id, c.neighbor_id, list_cosine_similarity(q.qv, c.v) AS s
-  FROM query_probes q JOIN corpus_assign c
-    ON q.cid = c.cid AND c.neighbor_id != q.query_id
-)
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(s, 6) DESC, neighbor_id ASC) AS INT) AS rank,
-       neighbor_id, round(s, 4) AS cosine_sim
-FROM scored
-QUALIFY rank <= 5
-ORDER BY query_id, rank
-"""
-
-
 # --- Multimodal --------------------------------------------------------------------
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload plumbing + Arrow-batched feature extraction
@@ -455,6 +377,5 @@ QUERIES = [
           simhash63_oracle_sql("documents", "doc_id", "text"),
           ("llm", "dedup")),
     Query("ann_cosine_topk", _ann_bruteforce, _ANN_SQL, ("llm", "ann")),
-    Query("ann_ivf_topk", _ann_ivf, _ANN_IVF_SQL, ("llm", "ann", "ivf")),
     Query("multimodal_features", _multimodal_features, _MULTIMODAL_SQL, ("llm", "multimodal")),
 ]

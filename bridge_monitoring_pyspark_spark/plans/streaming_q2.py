@@ -1,8 +1,8 @@
 """Second streaming wave: the output modes and built-in stateful operators
 the first wave (streaming_q.py) doesn't cover — dropDuplicatesWithinWatermark
 (built-in streaming dedup), complete and update output modes into the memory
-sink, stream-stream outer join, session windows, event-time timers and the
-state-store reader.
+sink, stream-stream outer join, session windows, event-time timers, the
+state-store reader, and exactly-once across a query restart.
 
 Every query drains the events table through streaming/jobs.py's
 ``drain`` (availableNow trigger), so streaming semantics collapse to a
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.plan import scratch_dir
+from ..sources.readers import load_table
 from ..streaming.jobs import (
     GOLD_STATE_PARTITIONS,
     click_error_join,
@@ -369,4 +370,57 @@ GROUP BY event_type
 QUERIES.append(
     Query("streaming_statestore_read", _streaming_statestore_read,
           _STATESTORE_SQL, ("streaming", "statestore", "observability"))
+)
+
+
+def _streaming_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-once across RESTARTS: drain half the input files with one
+    streaming query, stop it, add the other half, then start a NEW query
+    object on the same checkpoint. The offset WAL must resume after the
+    files the first incarnation committed — reprocessing doubles counts,
+    dropping loses them, and either breaks the oracle. This is the
+    recovery contract a 100 TB pipeline leans on every deploy/failure
+    (SURVEY.md §2.9 T4; reference keeps one checkpoint per sink,
+    pipelines/bronze_ingest.py:67) and the strongest streaming-semantics
+    check in the catalog."""
+    base = scratch_dir("eng_restart_")
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    first, second = ev.where(F.col("event_id") % 2 == 0), ev.where(
+        F.col("event_id") % 2 == 1
+    )
+    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+    first.repartition(2).write.mode("append").parquet(src)
+    drain(stream, base, "out", partitions=None)  # incarnation 1 commits files 1-2
+    second.repartition(2).write.mode("append").parquet(src)
+    # incarnation 2, a new query on the same checkpoint, must process ONLY
+    # the new files
+    return (
+        drain(stream, base, "out", partitions=None)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct("event_id").alias("n_unique"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+        .orderBy("event_type")
+    )
+
+
+_RESTART_SQL = """
+SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+       CAST(count(DISTINCT event_id) AS BIGINT) AS n_unique,
+       round(sum(value), 4) AS sum_value
+FROM events
+GROUP BY event_type
+ORDER BY event_type
+"""
+
+QUERIES.append(
+    Query("streaming_restart_exactly_once", _streaming_restart_exactly_once,
+          _RESTART_SQL, ("streaming", "checkpoint", "exactly_once"))
 )

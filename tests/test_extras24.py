@@ -7,7 +7,7 @@ import math
 import numpy as np
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras24 import SEMDEDUP_TAU
+from bridge_monitoring_pyspark_spark.plans.clustering import SEMDEDUP_TAU
 from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
 from testdata_paths import SF_ORACLE, SF_SMOKE
@@ -85,7 +85,7 @@ def _plain_sort(monkeypatch):
     for a plain orderBy. Execution-path correctness of the checkpointed
     form is covered by the oracle gate and the numpy-replay tests, which
     run the shipped builders unpatched."""
-    from bridge_monitoring_pyspark_spark.plans import extras24 as _m
+    from bridge_monitoring_pyspark_spark.plans import clustering as _m
 
     monkeypatch.setattr(_m, "sorted_once", lambda df, *cols: df.orderBy(*cols))
 
@@ -110,7 +110,7 @@ def test_semdedup_plan_assigns_via_arrow_not_crossjoin(spark, monkeypatch):
 def test_semdedup_kmeans_matches_numpy_replay(spark):
     """Fixed-K variant: replay Lloyd (L2 argmin, init = K lowest ids) in
     numpy, then the cosine assignment + keep-first sweep — end to end."""
-    from bridge_monitoring_pyspark_spark.plans.extras9 import (
+    from bridge_monitoring_pyspark_spark.plans.clustering import (
         KMEANS_ITERS,
         KMEANS_K,
     )
@@ -160,11 +160,11 @@ def test_semdedup_kmeans_matches_numpy_replay(spark):
 def test_semdedup_kmeans_capped_matches_numpy_replay(spark):
     """Capped variant: same Lloyd + assignment replay, then the
     vec_id % ceil(c/CAP) split and the sweep restricted to (cid, sub)."""
-    from bridge_monitoring_pyspark_spark.plans.extras9 import (
+    from bridge_monitoring_pyspark_spark.plans.clustering import (
         KMEANS_ITERS,
         KMEANS_K,
     )
-    from bridge_monitoring_pyspark_spark.plans.extras24 import SEMDEDUP_CAP
+    from bridge_monitoring_pyspark_spark.plans.clustering import SEMDEDUP_CAP
 
     rows = load_table(spark, SF_SMOKE, "embeddings").collect()
     rows.sort(key=lambda r: r.vec_id)
@@ -312,11 +312,11 @@ def test_semdedup_kmeans_capped_proj_matches_numpy_replay(spark):
     members per cluster by (quantized cosine-to-centroid DESC, vec_id
     ASC), chunk consecutive runs of CAP into subs, and sweep per
     (cid, sub) — the full proj pipeline re-derived in pure numpy."""
-    from bridge_monitoring_pyspark_spark.plans.extras9 import (
+    from bridge_monitoring_pyspark_spark.plans.clustering import (
         KMEANS_ITERS,
         KMEANS_K,
     )
-    from bridge_monitoring_pyspark_spark.plans.extras24 import SEMDEDUP_CAP
+    from bridge_monitoring_pyspark_spark.plans.clustering import SEMDEDUP_CAP
 
     rows = load_table(spark, SF_SMOKE, "embeddings").collect()
     rows.sort(key=lambda r: r.vec_id)
@@ -387,7 +387,7 @@ def test_semdedup_capped_recall_planted_tau09(spark, tmp_path):
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.gen_scale import scale
 
-    from bridge_monitoring_pyspark_spark.plans.extras24 import (
+    from bridge_monitoring_pyspark_spark.plans.clustering import (
         _semdedup_prune_kmeans,
         _semdedup_prune_kmeans_capped,
         _semdedup_prune_kmeans_capped_proj,
@@ -424,7 +424,7 @@ def test_sweep_block_auto_sizing():
     output + int64 quantized copy) stay under _SWEEP_BYTES — the fixed
     2048 block was what made the uncapped decade-3 sweep exceed worker
     memory. Block size never affects results, only BLAS granularity."""
-    from bridge_monitoring_pyspark_spark.plans.extras24 import (
+    from bridge_monitoring_pyspark_spark.plans.clustering import (
         _SWEEP_BLOCK,
         _SWEEP_BYTES,
         _sweep_block,

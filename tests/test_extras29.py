@@ -5,10 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras29 import (
-    K_ANON,
-    ivf_index_dir,
-)
+from bridge_monitoring_pyspark_spark.plans.clustering import ivf_index_dir
+from bridge_monitoring_pyspark_spark.plans.extras29 import K_ANON
 
 from testdata_paths import SF_SMOKE
 
@@ -84,23 +82,31 @@ def test_k_anonymity_doc_counts_conserved(spark):
     assert sum(r.n_docs for r in rows) == total
 
 
-def test_assignment_broadcasts_released_after_index_build(spark):
-    """ADVICE r9: repeated index builds must not accumulate centroid
-    broadcasts. A FRESH ivf_index_dir build ends with an empty registry,
-    and assignment still works afterwards (new broadcast, releasable)."""
+def test_assignment_broadcasts_released_after_index_build(spark, monkeypatch):
+    """Repeated index builds must not accumulate centroid broadcasts: a
+    FRESH ivf_index_dir build destroys the broadcast it minted once its
+    write is done, a lazy assignment plan minted before the build still
+    executes after it (its broadcast untouched), and assignment still works
+    afterwards (new broadcast)."""
     import shutil
 
     import pyspark.sql.functions as F
 
     from bridge_monitoring_pyspark_spark.operators import similarity as sim
-    from bridge_monitoring_pyspark_spark.plans import extras29
+    from bridge_monitoring_pyspark_spark.plans import clustering
     from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
-    sim.release_assignment_broadcasts()  # earlier tests' probe plans
-    cached = extras29._IVF_INDEX.pop(SF_SMOKE, None)
-    # ADVICE r10: a build's release must be scoped to its OWN mints. Mint
-    # an unrelated lazy assignment plan first; it must survive the build
-    # and still execute afterwards (its broadcast not destroyed).
+    minted = []
+
+    def spy(*args):
+        assign, bc = sim.centroid_assigner(*args)
+        minted.append(bc)
+        return assign, bc
+
+    monkeypatch.setattr(clustering, "centroid_assigner", spy)
+    key = ("build", SF_SMOKE)
+    cached = clustering._INDEX.pop(key, None)
+    # an unrelated lazy assignment plan, minted before the build
     e0 = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
     c0 = e0.where(F.col("vec_id") < 2).select(
         F.col("vec_id").cast("int").alias("cid"), "embedding"
@@ -108,27 +114,20 @@ def test_assignment_broadcasts_released_after_index_build(spark):
     pending = sim.nearest_centroids_arrow(
         e0.where(F.col("vec_id") < 8), c0, "vec_id", "embedding", "cid", 1
     )
-    assert len(sim._ASSIGN_BROADCASTS) == 1  # ours, still lazy
     try:
-        fresh_dir, _ = extras29.ivf_index_dir(spark, SF_SMOKE)
-        # build released its own mint only; the pending plan's survives
-        assert len(sim._ASSIGN_BROADCASTS) == 1
-        assert pending.count() == 8  # executes fine post-build-release
-        assert sim.release_assignment_broadcasts() == 1
-        assert sim._ASSIGN_BROADCASTS == []
+        clustering.ivf_index_dir(spark, SF_SMOKE)
+        assert len(minted) == 1  # one collect + broadcast per index
+        assert not minted[0]._jbroadcast.isValid()  # the build's own: destroyed
+        assert pending.count() == 8  # executes fine after the build
     finally:
-        rebuilt = extras29._IVF_INDEX.pop(SF_SMOKE, None)
+        rebuilt = clustering._INDEX.pop(key, None)
         if rebuilt:
             shutil.rmtree(rebuilt[0], ignore_errors=True)
         if cached:
-            extras29._IVF_INDEX[SF_SMOKE] = cached
-    # a fresh assignment after release must still compute (new broadcast)
-    e = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-    cents = e.where(F.col("vec_id") < 4).select(
+            clustering._INDEX[key] = cached
+    # a fresh assignment after the build must still compute (new broadcast)
+    cents = e0.where(F.col("vec_id") < 4).select(
         F.col("vec_id").cast("int").alias("cid"), "embedding"
     )
-    got = sim.nearest_centroids_arrow(e, cents, "vec_id", "embedding", "cid", 1)
-    assert got.count() == e.count()
-    assert len(sim._ASSIGN_BROADCASTS) == 1
-    assert sim.release_assignment_broadcasts() == 1
-    assert sim._ASSIGN_BROADCASTS == []
+    got = sim.nearest_centroids_arrow(e0, cents, "vec_id", "embedding", "cid", 1)
+    assert got.count() == e0.count()

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from bridge_monitoring_pyspark_spark.operators.similarity import ivf_topk
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras33 import (
+from bridge_monitoring_pyspark_spark.plans.clustering import (
     _frozen_centroids,
     appended_index_dir,
 )
@@ -25,7 +25,7 @@ def test_append_probe_equals_single_shot_ivf(spark):
     assert got
     e = load_table(spark, SF_SMOKE, "embeddings")
     _, stride = appended_index_dir(spark, SF_SMOKE)
-    cents = _frozen_centroids(e, stride)
+    cents, _ = _frozen_centroids(e, stride)
     want = (
         ivf_topk(
             e.where(F.col("vec_id") < 10), e, cents,

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras9 import (
+from bridge_monitoring_pyspark_spark.plans.clustering import (
     KMEANS_DIM,
     KMEANS_ITERS,
     KMEANS_K,

@@ -259,9 +259,68 @@ def test_similarity_kernels_written_once():
         if isinstance(node, ast.FunctionDef)
     }
     holders = {name: n for name, n in holders.items() if n}
-    assert set(holders) == {"_partial_topk_rows", "_centroid_assigner"}, holders
+    assert set(holders) == {"_partial_topk_rows", "centroid_assigner"}, holders
     assert sum(holders.values()) == src.count(key)  # none at module level
     assert src.count('F.round("sim", 6).desc()') == 1
+
+
+def test_clustering_written_once():
+    """The clustering decisions live once, in plans/clustering.py: the
+    stride rule's ``math.isqrt(`` sits in one function, Lloyd is fitted
+    at one call site, the cid-partitioned index is written by one writer
+    (the capped-SemDeDup rank window also partitions by cid — a different
+    decision, so ``Window.partitionBy`` is not counted), no module-level
+    broadcast registry survives, and the retired wave modules are gone."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    trees = {name: ast.parse(src) for name, src in srcs.items()}
+
+    isqrt_fns = [
+        (name, node.name)
+        for name, tree in trees.items() if name.startswith("plans/")
+        for node in ast.walk(tree) if isinstance(node, ast.FunctionDef)
+        if "math.isqrt(" in ast.get_source_segment(srcs[name], node)
+    ]
+    assert len(isqrt_fns) == 1, isqrt_fns
+    assert sum(src.count("math.isqrt(") for src in srcs.values()) == 1
+
+    lloyd_calls = [
+        name
+        for name, tree in trees.items()
+        for node in ast.walk(tree) if isinstance(node, ast.Call)
+        if getattr(node.func, "id", getattr(node.func, "attr", None)) == "lloyd_centroids"
+    ]
+    assert len(lloyd_calls) == 1, lloyd_calls
+
+    cid_parts = sum(
+        src.count('.partitionBy("cid")') - src.count('Window.partitionBy("cid")')
+        for src in srcs.values()
+    )
+    assert cid_parts == 1, cid_parts
+
+    for needle in ("_ASSIGN_BROADCASTS", "release_assignment_broadcasts"):
+        assert not [name for name, src in srcs.items() if needle in src], needle
+
+    retired = {"extras9", "extras24", "extras33"}
+    imports = {
+        (name, mod.rsplit(".", 1)[-1])
+        for name, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for mod in (
+            [a.name for a in node.names] if isinstance(node, ast.Import)
+            else [node.module or ""] + [a.name for a in node.names]
+        )
+    }
+    assert not {(n, m) for n, m in imports if m in retired}
+    from bridge_monitoring_pyspark_spark.plans.catalog import _PLAN_MODULES
+
+    assert not retired & set(_PLAN_MODULES)
 
 
 def test_streaming_drain_written_once():
@@ -330,9 +389,9 @@ def test_ivf_assignment_never_windows_nxk(spark, monkeypatch):
     final per-query re-rank. The JVM-only fallback (`assignment="sql"`)
     is pinned separately: corpus top-1 must aggregate (max_by, map-side
     combine), allowing one more Window for the n_probe query side."""
-    from bridge_monitoring_pyspark_spark.plans import llmdata as _llm
+    from bridge_monitoring_pyspark_spark.plans import clustering as _m
 
-    monkeypatch.setattr(_llm, "sorted_once", lambda d, *c: d.orderBy(*c))
+    monkeypatch.setattr(_m, "sorted_once", lambda d, *c: d.orderBy(*c))
     df = CATALOG["ann_ivf_topk"].build(spark, SF_SMOKE)
     plan = _executed_plan(df)
     assert "MapInPandas" in plan

@@ -49,7 +49,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bridge_monitoring_pyspark_spark.plans.extras24 import (  # noqa: E402
+from bridge_monitoring_pyspark_spark.plans.clustering import (  # noqa: E402
     _semdedup_prune_kmeans,
     _semdedup_prune_kmeans_capped,
     _semdedup_prune_kmeans_capped_proj,
