@@ -46,7 +46,6 @@ def _streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
         "event_id", "ts", "user_id", "value"
     )
     ev.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
 
     old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -104,7 +103,7 @@ def _streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
 
     try:
         q = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .writeStream.foreachBatch(merge)

@@ -69,17 +69,3 @@ GOLD = T.StructType(
         T.StructField("max_tilt_angle", T.DoubleType()),
     ]
 )
-
-# Driver testdata tables (TESTDATA.md) — names only; parquet carries types.
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -1,9 +1,8 @@
-from .readers import load_table, load_tables, read_csv_dim, read_json_stream, read_parquet_stream
+from .readers import SourceLayoutError, load_table, read_csv_dim, read_parquet_stream
 
 __all__ = [
+    "SourceLayoutError",
     "load_table",
-    "load_tables",
     "read_csv_dim",
-    "read_json_stream",
     "read_parquet_stream",
 ]

@@ -1,10 +1,11 @@
 """Batch + streaming source readers.
 
 Reference parity (SURVEY.md §2.1):
-  S1 streaming JSON source   -> read_json_stream
+  S1 streaming JSON source   -> streaming/jobs.run_json_ingest
+  S2 partition discovery     -> Spark's file source (run_json_ingest)
   S3 streaming parquet source-> read_parquet_stream
   S4 static CSV dimension    -> read_csv_dim
-  S5 static parquet          -> load_table / load_tables
+  S5 static parquet          -> load_table
 
 Scale notes (100 TB): all readers take explicit schemas — schema inference
 over an unbounded landing zone is both non-deterministic and a full-scan cost.
@@ -15,12 +16,13 @@ deliberate via ``partitionBy``.
 
 from __future__ import annotations
 
+import fnmatch
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pyspark.sql import functions as F
-
-from ..schemas import TESTDATA_TABLES
 
 # Timestamp columns in the driver testdata. Current layout: parquet
 # timestamp[us] with isAdjustedToUTC=false, which Spark reads natively as
@@ -70,24 +72,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Batch-read all driver testdata tables as a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def read_csv_dim(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Static dimension table: header CSV with explicit schema
     (reference: pipelines/silver_enrichment.py:29-34)."""
     return spark.read.option("header", "true").schema(schema).csv(path)
 
 
-def read_json_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Unbounded JSON-lines directory with explicit schema
-    (reference: pipelines/bronze_ingest.py:26-42)."""
-    return spark.readStream.schema(schema).json(path)
+class SourceLayoutError(ValueError):
+    """A stream source dir holds a directory named like its table's files."""
 
 
-def read_parquet_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Growing parquet directory as a stream
-    (reference: pipelines/silver_enrichment.py:48-67)."""
-    return spark.readStream.format("parquet").schema(schema).load(path)
+def read_parquet_stream(
+    spark: SparkSession, src_dir: str, table: str, schema: T.StructType | str
+) -> DataFrame:
+    """The ``<table>*.parquet`` files of a growing directory as a stream
+    (reference: pipelines/silver_enrichment.py:48-67): the directory plus a
+    file-name filter, never a glob path, and at most
+    ``parallelPartitionDiscovery.threshold`` files per micro-batch, because
+    Spark lists more paths than that with a job, on every micro-batch
+    (SCALING.md "Scans, sources, pruning"). The filter skips the contents
+    of directories, so one named like the files raises instead of
+    streaming no rows."""
+    pattern = f"{table}*.parquet"
+    nested = [e.name for e in os.scandir(src_dir) if e.is_dir() and fnmatch.fnmatch(e.name, pattern)]
+    if nested:
+        raise SourceLayoutError(f"{src_dir}: {nested} match {pattern!r} but are directories")
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("pathGlobFilter", pattern)
+        .option("maxFilesPerTrigger", threshold)
+        .load(src_dir)
+    )

@@ -45,6 +45,7 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import exact_avg
 from ..operators.dq import SensorRules, split_valid_invalid
+from ..sources.readers import load_table, read_parquet_stream
 
 # Streaming-side schema for the driver's events table: parquet timestamp[us]
 # with isAdjustedToUTC=false → TIMESTAMP_NTZ (see sources/readers.py).
@@ -78,15 +79,10 @@ _NTZ_AS_UTC = (
 
 
 def read_events_stream_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming parquet source over the events table, timestamps left NTZ
-    (S3 in SURVEY.md §2.1)."""
-    return (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_RAW)
-        # the driver testdata is a single file, not a directory; a glob path
-        # makes the file-stream source anchor its basePath at the parent dir
-        .load(f"{sf_dir}/events*.parquet")
-    )
+    """Streaming parquet source over the events files in ``sf_dir`` (the
+    testdata's one ``events.parquet``, or a landing directory's growing
+    ``events_*.parquet``), timestamps left NTZ (S3 in SURVEY.md §2.1)."""
+    return read_parquet_stream(spark, sf_dir, "events", EVENTS_RAW)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,8 +179,6 @@ def write_json_landing(spark: SparkSession, sf_dir: str, landing_dir: str) -> No
     Hive-style date partitions — the reference's generator layout
     (data_generator/data_generator.py:72-81: streams/<sensor>/date=.../*.json).
     Test fixture only; production landing zones are written by producers."""
-    from ..sources.readers import load_table
-
     # ts is NTZ: date_format renders its naive fields verbatim (no zone
     # pattern letter, so no session-tz dependence) and the literal 'Z'
     # stamps them as UTC — try_to_timestamp downstream recovers the same

@@ -56,3 +56,12 @@ def test_bm25_ranks_relevant_docs(spark):
     }
     for i in ids:
         assert any(t in docs[i].lower() for t in BM25_TERMS)
+
+
+def test_upsert_stream_schema_needs_no_reread(spark, tmp_path):
+    """streaming_foreachbatch_upsert streams the events it pre-split to
+    parquet with the schema of the frame it wrote. A read-back of those
+    files infers the same schema, so re-reading them only cost a job."""
+    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "ts", "user_id", "value")
+    ev.repartition(4).write.parquet(str(tmp_path / "src"))
+    assert spark.read.parquet(str(tmp_path / "src")).schema == ev.schema

@@ -354,6 +354,47 @@ def test_streaming_drain_written_once():
     assert not private_imports
 
 
+def test_file_stream_sources_read_one_way():
+    """A file-stream source is a directory plus a file-name filter, never
+    a glob path: a glob makes each landed file a root path, which Spark
+    lists with a job on every micro-batch once there are more than 32. No
+    readStream in the package loads a path holding ``*``, and the two
+    testdata file-stream sources (events, documents) call the one reader."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    trees = {name: ast.parse(src) for name, src in srcs.items()}
+
+    globbed = [
+        (name, node.lineno)
+        for name, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"load", "parquet", "json", "csv", "text", "orc"}
+        and "readStream" in ast.get_source_segment(srcs[name], node.func.value)
+        for arg in node.args + [k.value for k in node.keywords]
+        for part in ast.walk(arg)
+        if isinstance(part, ast.Constant) and "*" in str(part.value)
+    ]
+    assert not globbed, globbed
+
+    callers = {
+        (name, fn.name)
+        for name, tree in trees.items()
+        for fn in ast.walk(tree) if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn) if isinstance(node, ast.Call)
+        if getattr(node.func, "id", None) == "read_parquet_stream"
+    }
+    assert callers == {
+        ("streaming/jobs.py", "read_events_stream_ntz"),
+        ("plans/extras19.py", "_streaming_quality_filter"),
+    }, callers
+
+
 def test_neardup_pairs_build_never_touches_driver(spark, monkeypatch):
     """neardup_embedding_pairs must plan without any driver-side
     materialization — the round-2/3 scale-killer was a full-table
