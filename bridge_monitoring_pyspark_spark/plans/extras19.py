@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words
 from ..functions.plan import scratch_dir, sorted_once
+from ..schemas import TABLES
 from ..sources.readers import load_table, read_parquet_stream
 from ..streaming.jobs import drain
 from .catalog import Query
@@ -457,10 +458,7 @@ def _streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same integer arithmetic as `quality_classifier_scores` (keep iff
     sm > 950·n), so kept doc_ids match the batch entry exactly; the
     drained sink is re-aggregated per language for a compact result."""
-    docs = read_parquet_stream(
-        spark, sf_dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
-    )
+    docs = read_parquet_stream(spark, sf_dir, "documents", TABLES["documents"])
     toks = words(F.col("text"))
     m = F.transform(
         toks,

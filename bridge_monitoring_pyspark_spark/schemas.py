@@ -1,71 +1,44 @@
-"""Static schema registry.
+"""Declared schemas of the ten driver testdata tables (TESTDATA.md).
 
-The reference declares every streaming schema inline in each pipeline file
-(reference: pipelines/bronze_ingest.py:18-24, pipelines/silver_enrichment.py:22-27,
-37-46) and — problematically — *infers* the gold input schema by batch-reading
-silver at startup (pipelines/gold_aggregation.py:27-28), creating a process
-ordering dependency. The new engine fixes that with a central registry: every
-layer's schema is declared once, here, and streaming readers never sample data
-to learn their own input shape.
+Every batch and stream read of a testdata table uses these: no reader
+samples data to learn its input shape (the reference declares its streaming
+schemas inline in each pipeline, pipelines/bronze_ingest.py:18-24, and
+infers gold's input by batch-reading silver at startup,
+pipelines/gold_aggregation.py:27-28). Each declaration is exactly what Spark
+infers from the parquet files: every field nullable, ``timestamp[us]``
+without a UTC adjustment as ``TIMESTAMP_NTZ`` (the oracle engine's naive
+TIMESTAMP), ``list<float>`` as ``array<float>``.
+``sources.readers.load_table`` checks each file's footer against its
+declaration before the read.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# Raw sensor event as emitted by a generator / landing zone
-# (reference: data_generator/data_generator.py:46-52).
-RAW_EVENT = T.StructType(
-    [
-        T.StructField("event_time", T.StringType()),
-        T.StructField("bridge_id", T.IntegerType()),
-        T.StructField("sensor_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("ingest_time", T.StringType()),
-    ]
-)
+_INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_TS = T.TimestampNTZType()
 
-# Bronze = raw + derived event-time/ingest-time timestamps + partition date
-# (reference: pipelines/bronze_ingest.py:44-49).
-BRONZE = T.StructType(
-    list(RAW_EVENT.fields)
-    + [
-        T.StructField("event_time_ts", T.TimestampType()),
-        T.StructField("ingest_time_ts", T.TimestampType()),
-        T.StructField("partition_date", T.DateType()),
-    ]
-)
 
-# Static bridge dimension (reference: pipelines/silver_enrichment.py:22-27).
-BRIDGES = T.StructType(
-    [
-        T.StructField("bridge_id", T.IntegerType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("location", T.StringType()),
-        T.StructField("installation_date", T.StringType()),
-    ]
-)
+def _table(**fields: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in fields.items()])
 
-# Silver = bronze (minus raw strings per reference silver schema,
-# pipelines/silver_enrichment.py:37-46) + dimension attributes.
-SILVER = T.StructType(
-    list(BRONZE.fields)
-    + [
-        T.StructField("name", T.StringType()),
-        T.StructField("location", T.StringType()),
-        T.StructField("installation_date", T.StringType()),
-    ]
-)
 
-# Gold metric row (reference: pipelines/gold_aggregation.py:102-109;
-# schema confirmed in demo.ipynb cell 6b5d81c4).
-GOLD = T.StructType(
-    [
-        T.StructField("bridge_id", T.IntegerType()),
-        T.StructField("window_start", T.TimestampType()),
-        T.StructField("window_end", T.TimestampType()),
-        T.StructField("avg_temperature", T.DoubleType()),
-        T.StructField("max_vibration", T.DoubleType()),
-        T.StructField("max_tilt_angle", T.DoubleType()),
-    ]
-)
+TABLES: dict[str, T.StructType] = {
+    "region": _table(r_regionkey=_INT, r_name=_STR),
+    "nation": _table(n_nationkey=_INT, n_name=_STR, n_regionkey=_INT),
+    "customer": _table(c_custkey=_LONG, c_name=_STR, c_nationkey=_INT, c_acctbal=_DOUBLE,
+                       c_mktsegment=_STR),
+    "supplier": _table(s_suppkey=_LONG, s_name=_STR, s_nationkey=_INT, s_acctbal=_DOUBLE),
+    "part": _table(p_partkey=_LONG, p_name=_STR, p_brand=_STR, p_type=_STR, p_size=_INT,
+                   p_retailprice=_DOUBLE),
+    "orders": _table(o_orderkey=_LONG, o_custkey=_LONG, o_orderstatus=_STR, o_totalprice=_DOUBLE,
+                     o_orderdate=_TS, o_orderpriority=_STR),
+    "lineitem": _table(l_orderkey=_LONG, l_partkey=_LONG, l_suppkey=_LONG, l_linenumber=_INT,
+                       l_quantity=_DOUBLE, l_extendedprice=_DOUBLE, l_discount=_DOUBLE,
+                       l_tax=_DOUBLE, l_returnflag=_STR, l_linestatus=_STR, l_shipdate=_TS),
+    "events": _table(event_id=_LONG, ts=_TS, user_id=_LONG, event_type=_STR, value=_DOUBLE,
+                     props=_STR),
+    "documents": _table(doc_id=_LONG, text=_STR, lang=_STR, source=_STR, n_chars=_LONG),
+    "embeddings": _table(vec_id=_LONG, embedding=T.ArrayType(T.FloatType(), True), label=_INT),
+}

@@ -76,11 +76,6 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         # migration would drain-and-restart, the standard format-bump
         # path.
         "spark.sql.streaming.join.stateFormatVersion": "3",
-        # The driver testdata stores timestamp[us], which Spark reads
-        # natively. Older layouts stored TIMESTAMP(NANOS), which Spark has no
-        # native type for: this reads them as long, and the loader converts
-        # (sources/readers.py TIMESTAMP_COLS).
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Quieter local runs.
         "spark.ui.showConsoleProgress": "false",
         # Local-mode heap. local[32] runs the driver AND all 32 task slots in

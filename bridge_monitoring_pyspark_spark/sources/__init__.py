@@ -1,7 +1,8 @@
-from .readers import SourceLayoutError, load_table, read_csv_dim, read_parquet_stream
+from .readers import SourceLayoutError, TableSchemaError, load_table, read_csv_dim, read_parquet_stream
 
 __all__ = [
     "SourceLayoutError",
+    "TableSchemaError",
     "load_table",
     "read_csv_dim",
     "read_parquet_stream",

@@ -7,8 +7,14 @@ Reference parity (SURVEY.md §2.1):
   S4 static CSV dimension    -> read_csv_dim
   S5 static parquet          -> load_table
 
-Scale notes (100 TB): all readers take explicit schemas — schema inference
-over an unbounded landing zone is both non-deterministic and a full-scan cost.
+Scale notes (100 TB): every reader takes a declared schema (schemas.TABLES
+for the testdata tables). Inference would run a Spark job per read, and
+over an unbounded landing zone it is a full footer scan whose answer
+depends on which files happen to be there. A declared read returns a
+missing column as all-null instead of failing, so ``load_table`` first
+checks the parquet footers on the driver (pyarrow reads only the footer;
+no Spark job), once per file version, and raises :class:`TableSchemaError`
+on a missing, extra, renamed or retyped column.
 Partition discovery (reference data layout ``date=YYYY-MM-DD``, SURVEY.md §1.2)
 is left to Spark's file source; writers in sinks.py make the partition column
 deliberate via ``partitionBy``.
@@ -19,57 +25,53 @@ from __future__ import annotations
 import fnmatch
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from pyspark.sql import functions as F
+from ..schemas import TABLES
 
-# Timestamp columns in the driver testdata. Current layout: parquet
-# timestamp[us] with isAdjustedToUTC=false, which Spark reads natively as
-# TIMESTAMP_NTZ — kept NTZ downstream because it matches the oracle engine's
-# naive TIMESTAMP semantics exactly, independent of session timezone.
-# Older layouts stored TIMESTAMP(NANOS), readable only as long under
-# spark.sql.legacy.parquet.nanosAsLong; the bigint branch below converts
-# that shape for compatibility.
-TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
-    "events": ("ts",),
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-}
+
+class TableSchemaError(ValueError):
+    """A testdata table's parquet footer differs from its declaration."""
+
+
+# (file, mtime_ns, size) of every file whose footer matched its declaration.
+_CHECKED: set[tuple[str, int, int]] = set()
+
+
+def _check_footers(path: str, name: str) -> None:
+    """Compare the footer of each parquet file at ``path`` (one file, or a
+    Spark-written directory of part files) with ``TABLES[name]``."""
+    files = [path] if not os.path.isdir(path) else sorted(
+        e.path for e in os.scandir(path)
+        if e.name.endswith(".parquet") and not e.name.startswith(("_", "."))
+    )
+    for f in files:
+        st = os.stat(f)
+        key = (f, st.st_mtime_ns, st.st_size)
+        if key in _CHECKED:
+            continue
+        want = {c.name: to_arrow_type(c.dataType) for c in TABLES[name]}
+        found = {c.name: c.type for c in pq.read_schema(f)}
+        problems = [f"missing {c}" for c in want if c not in found]
+        problems += [f"extra {c}" for c in found if c not in want]
+        problems += [
+            f"{c} is {found[c]}, declared {want[c]}"
+            for c in want if c in found and not found[c].equals(want[c])
+        ]
+        if problems:
+            raise TableSchemaError(f"{f}: {'; '.join(problems)} (schemas.TABLES[{name!r}])")
+        _CHECKED.add(key)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Batch-read one driver testdata table (TESTDATA.md)."""
-    # Runtime-settable; harmless for micros data, required for the legacy
-    # TIMESTAMP(NANOS) layout (which fails with PARQUET_TYPE_ILLEGAL
-    # otherwise). External harnesses build vanilla sessions, so this cannot
-    # live only in session.py.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in TIMESTAMP_COLS.get(name, ()):
-        if c not in df.columns:
-            continue
-        if dict(df.dtypes)[c] == "bigint":
-            # Legacy nanos-as-long → NTZ via timestampadd against the naive
-            # epoch (timezone-free), matching the native NTZ read exactly.
-            df = df.withColumn(
-                c,
-                F.expr(
-                    f"timestampadd(MICROSECOND, {c} div 1000,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        got = dict(df.dtypes)[c]
-        # Fail loudly on a silently-wrong layout: every downstream epoch
-        # helper and oracle assumes a timestamp type here, and a bigint
-        # slipping through surfaces only as far-away analysis errors.
-        if got not in ("timestamp", "timestamp_ntz"):
-            raise TypeError(
-                f"{name}.{c}: expected a timestamp type after load, got {got} "
-                f"— testdata layout at {sf_dir} changed; update TIMESTAMP_COLS"
-                " handling in sources/readers.py"
-            )
-    return df
+    """Batch-read one driver testdata table (TESTDATA.md) with its declared
+    schema, after the footer check."""
+    path = f"{sf_dir}/{name}.parquet"
+    _check_footers(path, name)
+    return spark.read.schema(TABLES[name]).parquet(path)
 
 
 def read_csv_dim(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

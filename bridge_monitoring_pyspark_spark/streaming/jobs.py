@@ -45,26 +45,8 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import exact_avg
 from ..operators.dq import SensorRules, split_valid_invalid
+from ..schemas import TABLES
 from ..sources.readers import load_table, read_parquet_stream
-
-# Streaming-side schema for the driver's events table: parquet timestamp[us]
-# with isAdjustedToUTC=false → TIMESTAMP_NTZ (see sources/readers.py).
-# Deliberate asymmetry with load_table: the batch reader also converts the
-# legacy TIMESTAMP(NANOS)-as-long layout, but this streaming schema pins NTZ
-# µs only — on a nanos layout the stream fails loudly at first batch (schema
-# mismatch) instead of silently mis-typing; extend here if that layout ever
-# returns to the driver testdata.
-EVENTS_RAW = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
 
 # NTZ wall-clock → zoned TIMESTAMP at the same absolute instant (naive read
 # as UTC). The *instant* is session-timezone-independent — timestamp_micros
@@ -82,7 +64,7 @@ def read_events_stream_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming parquet source over the events files in ``sf_dir`` (the
     testdata's one ``events.parquet``, or a landing directory's growing
     ``events_*.parquet``), timestamps left NTZ (S3 in SURVEY.md §2.1)."""
-    return read_parquet_stream(spark, sf_dir, "events", EVENTS_RAW)
+    return read_parquet_stream(spark, sf_dir, "events", TABLES["events"])
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,7 +291,7 @@ def run_silver(
     events = read_events_stream(spark, sf_dir)
     valid, invalid = split_valid_invalid(events, rules.valid_condition())
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_name").alias("name"),

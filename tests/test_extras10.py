@@ -21,7 +21,7 @@ def test_compaction_shrinks_files_conserves_rows(spark):
     assert abs(row.sum_value - want) < 1e-6
 
 
-def test_bucketed_sweep_equals_keyed_sweep(spark):
+def test_bucketed_sweep_equals_keyed_sweep(spark, tmp_path):
     """The two-level bucketed sweep must produce exactly the one-level
     keyed sweep's peaks on real data, and on a crafted stream where
     back-to-back intervals straddle a bucket boundary (end marker and next
@@ -43,12 +43,15 @@ def test_bucketed_sweep_equals_keyed_sweep(spark):
         ("x", "2024-01-01 02:01:00"),
     ]
     df = spark.createDataFrame(rows, "event_type string, ts string").select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts")
+        F.monotonically_increasing_id().alias("event_id"),
+        F.col("ts").cast("timestamp_ntz").alias("ts"),
+        F.lit(1).cast("long").alias("user_id"),
+        "event_type",
+        F.lit(1.0).alias("value"),
+        F.lit("{}").alias("props"),
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sweep_tie_")
-    df.write.mode("overwrite").parquet(d + "/events.parquet")
+    d = str(tmp_path)
+    df.write.parquet(d + "/events.parquet")
     got = {r.event_type: r.peak_concurrent
            for r in cat["sweep_concurrency_bucketed"].build(spark, d).collect()}
     ref = {r.event_type: r.peak_concurrent

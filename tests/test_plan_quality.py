@@ -10,7 +10,6 @@ TakeOrderedAndProject instead of a global sort.
 from __future__ import annotations
 
 import re
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -68,8 +67,8 @@ def test_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan, "top-k degenerated into a global sort"
 
 
-def test_partition_pruning(spark):
-    out = tempfile.mkdtemp(prefix="t_prune_") + "/by_date"
+def test_partition_pruning(spark, tmp_path):
+    out = str(tmp_path / "by_date")
     e = load_table(spark, SF_SMOKE, "events").withColumn(
         "partition_date", F.to_date("ts")
     )
@@ -393,6 +392,34 @@ def test_file_stream_sources_read_one_way():
         ("streaming/jobs.py", "read_events_stream_ntz"),
         ("plans/extras19.py", "_streaming_quality_filter"),
     }, callers
+
+
+def test_testdata_tables_read_through_load_table():
+    """A testdata table is batch-read only by sources/readers.load_table,
+    with its declared schema after the footer check. No other module hands
+    a ``sf_dir`` path to a batch ``.read`` (that infers the schema, one
+    Spark job per read), and nothing sets ``nanosAsLong`` (a per-read
+    session conf write that leaks into harnesses' sessions)."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+    from bridge_monitoring_pyspark_spark.schemas import TABLES
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    table_file = re.compile(rf"sf_dir|\b({'|'.join(TABLES)})\.parquet")
+    direct = [
+        (name, node.lineno)
+        for name, src in srcs.items() if name != "sources/readers.py"
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"parquet", "load"}
+        and re.search(r"\.read\b", ast.get_source_segment(src, node.func.value))
+        and any(table_file.search(ast.get_source_segment(src, a)) for a in node.args)
+    ]
+    assert not direct, direct
+    assert not [name for name, src in srcs.items() if "nanosAsLong" in src]
 
 
 def test_neardup_pairs_build_never_touches_driver(spark, monkeypatch):

@@ -4,7 +4,6 @@ append-mode watermark holdback, and the file-stream source's listing."""
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -23,8 +22,8 @@ from bridge_monitoring_pyspark_spark.streaming.jobs import (
 from testdata_paths import SF_SMOKE
 
 
-def test_bronze_routing_partitions_completely(spark):
-    out = tempfile.mkdtemp(prefix="t_bronze_")
+def test_bronze_routing_partitions_completely(spark, tmp_path):
+    out = str(tmp_path)
     paths = run_bronze(spark, SF_SMOKE, out)
     valid = spark.read.parquet(paths["valid"])
     total = load_table(spark, SF_SMOKE, "events").count()
@@ -34,8 +33,8 @@ def test_bronze_routing_partitions_completely(spark):
     assert "partition_date" in valid.columns  # deliberate partitionBy
 
 
-def test_silver_stream_equals_batch(spark):
-    out = tempfile.mkdtemp(prefix="t_silver_")
+def test_silver_stream_equals_batch(spark, tmp_path):
+    out = str(tmp_path)
     paths = run_silver(spark, SF_SMOKE, out, EVENT_RULES)
     stream_valid = spark.read.parquet(paths["valid"])
     events = load_table(spark, SF_SMOKE, "events")
@@ -49,8 +48,8 @@ def test_silver_stream_equals_batch(spark):
         assert rejected.count() == events.count() - batch_valid.count()
 
 
-def test_gold_watermark_holds_back_open_windows(spark):
-    out = tempfile.mkdtemp(prefix="t_gold_")
+def test_gold_watermark_holds_back_open_windows(spark, tmp_path):
+    out = str(tmp_path)
     path = run_gold(spark, SF_SMOKE, out, window="1 hour", watermark="2 minutes")
     got = spark.read.parquet(path)
     events = load_table(spark, SF_SMOKE, "events")
