@@ -3,8 +3,9 @@ distributed exact k-NN join.
 
 AQE's skew-join split (tests/test_skew_and_properties.py) is the first
 answer to a hot join key; this module witnesses the *manual* salting
-pattern for where AQE can't reach: stateful/streaming stages, or a dim too
-big to broadcast whose hot-key partition is the state store itself. The
+pattern for where AQE can't reach: a dim too big to broadcast, or a
+stateful streaming stage whose hot-key partition is the state store
+itself (``streaming_salted_interval_join``, plans/streaming.py). The
 salt is a deterministic hash (operators/joins.py:salted_join), so the
 result is bit-identical to the plain join and the DuckDB oracle is simply
 that plain join.
@@ -23,10 +24,8 @@ from pyspark.sql import functions as F
 from ..operators.joins import salted_join
 from ..operators.similarity import knn_join_blocked
 from ..sources.readers import load_table
-from ..functions.plan import scratch_dir, sorted_once
-from ..streaming.jobs import drain, read_events_stream
+from ..functions.plan import sorted_once
 from .catalog import Query
-from .extras4 import click_purchase_sides
 
 SALT_BUCKETS = 8
 
@@ -105,52 +104,9 @@ ORDER BY query_id, rank
 """
 
 
-STREAM_SALT = 4
-
-
-def _streaming_salted_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted stream-stream interval join — the hot-key tool where AQE
-    genuinely cannot help, because the straggler is a *state store*
-    partition, not a shuffle block (AQE is disabled in stateful streaming).
-
-    Clicks carry a deterministic salt from xxhash64(click_id); purchases
-    explode into STREAM_SALT copies (stateless, pre-join) so every
-    (user, salt) partition still sees all of that user's purchases. The
-    join keys on (user, salt) + the event-time interval: a hot user's
-    click state and throughput spread over STREAM_SALT state partitions,
-    at the explicit price of STREAM_SALT× purchase-side state. Each
-    click–purchase pair matches in exactly one salt copy, so the drained
-    result equals the unsalted interval join and shares its batch oracle."""
-    clicks, purchases, within = click_purchase_sides(read_events_stream(spark, sf_dir))
-    clicks = clicks.withColumn(
-        "c_salt", F.pmod(F.xxhash64("click_id"), F.lit(STREAM_SALT)).cast("int")
-    )
-    purchases = purchases.withColumn(
-        "p_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(STREAM_SALT)]))
-    )
-    pairs = clicks.join(
-        purchases, within & (F.col("c_salt") == F.col("p_salt")), "inner"
-    ).select("click_id", "purchase_id", "c_user")
-    out = drain(pairs, scratch_dir("eng_sivj_"), "salted_interval_join")
-    return (
-        out.groupBy(F.col("c_user").alias("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_pairs"), F.min("click_id").alias("first_click"))
-        .orderBy("user_id")
-    )
-
-
-# Identical result to the unsalted stream-stream interval join — the salt
-# only reshapes partitioning — so the oracle IS the unsalted query's
-# oracle, imported rather than duplicated: if the interval-join semantics
-# ever change, both entries move together or fail together.
-from .extras4 import _INTERVAL_JOIN_SQL as _SALTED_INTERVAL_SQL  # noqa: E402
-
-
 QUERIES = [
     Query("salted_skew_join_revenue", _salted_skew_join_revenue, _SALTED_SQL,
           ("join", "skew", "salting")),
     Query("knn_join_blocked", _knn_join_blocked, _KNN_JOIN_SQL,
           ("llm", "ann", "knn_join")),
-    Query("streaming_salted_interval_join", _streaming_salted_interval_join,
-          _SALTED_INTERVAL_SQL, ("streaming", "join", "skew", "salting")),
 ]

@@ -1,5 +1,7 @@
 """Fifth extension wave: winnowing-based near-dup pairs, PII scrubbing,
-stream-stream time-interval join, and mergeable distinct-count sketches.
+and mergeable distinct-count sketches. (The wave's stream-stream
+time-interval join lives with the other streaming witnesses in
+plans/streaming.py.)
 
 Oracle notes: the PII query *injects* deterministic synthetic PII (the
 fixture corpus has none) with the same concat on both sides, so the scrub
@@ -12,13 +14,12 @@ against exact counts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import winnow_fingerprint_rows, winnow_hash_sql
-from ..functions.plan import scratch_dir, sorted_once
+from ..functions.plan import sorted_once
 from ..sources.readers import load_table
-from ..streaming.jobs import drain, read_events_stream
 from .catalog import Query
 
 from .extras3 import WINNOW_K, WINNOW_W
@@ -148,63 +149,6 @@ ORDER BY doc_id
 """
 
 
-# --- Stream-stream time-interval join -----------------------------------------
-def click_purchase_sides(events: DataFrame) -> tuple[DataFrame, DataFrame, Column]:
-    """The two watermarked sides of the interval-join witnesses —
-    clicks (click_id, c_user, c_ts) and purchases (purchase_id, p_user,
-    p_ts), 2-minute watermarks — and their join condition: same user, the
-    purchase within 10 minutes after the click."""
-    def side(evt_type: str, id_col: str, p: str) -> DataFrame:
-        return (
-            events.where(F.col("event_type") == evt_type)
-            .select(
-                F.col("event_id").alias(id_col),
-                F.col("user_id").alias(f"{p}_user"),
-                F.col("ts").alias(f"{p}_ts"),
-            )
-            .withWatermark(f"{p}_ts", "2 minutes")
-        )
-
-    within = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    return side("click", "click_id", "c"), side("purchase", "purchase_id", "p"), within
-
-
-def _streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream INNER join on user_id with an event-time interval
-    condition (purchase within 10 min after a click) — the non-windowed
-    stateful join. Watermarks + the range condition bound join state; with
-    an inner join every match emits, so the drained availableNow sink
-    equals the plain batch join (the oracle)."""
-    clicks, purchases, within = click_purchase_sides(read_events_stream(spark, sf_dir))
-    pairs = clicks.join(purchases, within, "inner").select("click_id", "purchase_id", "c_user")
-    out = drain(pairs, scratch_dir("eng_ivj_"), "interval_join")
-    return (
-        out.groupBy(F.col("c_user").alias("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_pairs"), F.min("click_id").alias("first_click"))
-        .orderBy("user_id")
-    )
-
-
-_INTERVAL_JOIN_SQL = """
-WITH c AS (
-  SELECT event_id AS click_id, user_id, ts FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT event_id AS purchase_id, user_id, ts FROM events WHERE event_type = 'purchase'
-)
-SELECT c.user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-       min(c.click_id) AS first_click
-FROM c JOIN p ON c.user_id = p.user_id
- AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
-GROUP BY c.user_id
-ORDER BY c.user_id
-"""
-
-
 # --- Mergeable distinct-count sketches ----------------------------------------
 def _sketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type HLL sketches + a union-merged overall estimate
@@ -259,8 +203,6 @@ QUERIES = [
     Query("winnow_neardup_pairs", _winnow_neardup_pairs, _WINNOW_PAIRS_SQL,
           ("llm", "dedup", "fingerprint")),
     Query("pii_scrub_stats", _pii_scrub_stats, _PII_SQL, ("llm", "text", "pii")),
-    Query("streaming_interval_join", _streaming_interval_join, _INTERVAL_JOIN_SQL,
-          ("streaming", "join", "interval")),
     Query("sketch_distinct_users", _sketch_distinct_users, _SKETCH_DISTINCT_SQL,
           ("agg", "sketch")),
 ]

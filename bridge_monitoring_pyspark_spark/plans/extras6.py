@@ -1,9 +1,8 @@
-"""Seventh extension wave: foreachBatch keyed upsert (streaming
-materialized view with partition-pruned merge), BM25 ranked retrieval,
-and scalable global index assignment without a global sort.
+"""Seventh extension wave: BM25 ranked retrieval and scalable global index
+assignment without a global sort. (The wave's foreachBatch keyed upsert
+lives with the other streaming witnesses in plans/streaming.py.)
 
-Oracle notes: the upsert's final state table must equal a plain batch
-last-per-key query (row_number oracle); BM25 is written out long-hand in
+Oracle notes: BM25 is written out long-hand in
 DuckDB (same k1/b and the Lucene idf form); stable-id assignment oracles
 against ``row_number() OVER (ORDER BY doc_id) - 1``, which is exactly the
 semantics the distributed offset pattern reproduces without the
@@ -12,135 +11,17 @@ single-partition sort.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
-from ..functions.plan import scratch_dir
 from .catalog import Query
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TERMS = ("hash", "join", "vector")
 BM25_TOPK = 20
-UPSERT_BUCKETS = 16
 STABLE_ID_PARTS = 8
-
-
-# --- foreachBatch keyed upsert --------------------------------------------------
-def _streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming materialized view: latest event + running count per user,
-    maintained by a foreachBatch merge into a bucket-partitioned parquet
-    table with DYNAMIC partition overwrite — each micro-batch reads and
-    rewrites only the buckets its keys touch (partition-pruned on read,
-    partial overwrite on write), which is the idempotent upsert pattern
-    that scales to a 100 TB state table. The events table is pre-split
-    into 4 files and streamed with maxFilesPerTrigger=1, so the merge path
-    runs on 4 real micro-batches, not one."""
-    base = scratch_dir("eng_upsert_")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        latest = (
-            batch.groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct("ts", "event_id", "value"), F.struct("ts", "event_id")
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .select(
-                "user_id",
-                F.col("s.ts").alias("last_ts"),
-                F.col("s.event_id").alias("last_event_id"),
-                F.col("s.value").alias("last_value"),
-                "n_events",
-                (F.col("user_id") % UPSERT_BUCKETS).alias("bucket"),
-            )
-        )
-        touched = [r.bucket for r in latest.select("bucket").distinct().collect()]
-        if os.path.exists(state):
-            # partition-pruned read: only the buckets this batch touches
-            cur = spark.read.parquet(state).where(F.col("bucket").isin(touched))
-        else:
-            cur = spark.createDataFrame([], latest.schema)
-        merged = (
-            cur.unionByName(latest)
-            .groupBy("user_id", "bucket")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col("last_ts").alias("ts"),
-                        F.col("last_event_id").alias("event_id"),
-                        F.col("last_value").alias("value"),
-                    ),
-                    F.struct(F.col("last_ts"), F.col("last_event_id")),
-                ).alias("s"),
-                F.sum("n_events").alias("n_events"),
-            )
-            .select(
-                "user_id",
-                F.col("s.ts").alias("last_ts"),
-                F.col("s.event_id").alias("last_event_id"),
-                F.col("s.value").alias("last_value"),
-                "n_events",
-                "bucket",
-            )
-            # materialize BEFORE overwriting the directory being read
-            .localCheckpoint()
-        )
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(state)
-
-    try:
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(base, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-
-    return (
-        spark.read.parquet(state)
-        .select(
-            "user_id",
-            "last_ts",
-            "last_event_id",
-            F.round("last_value", 4).alias("last_value"),
-            "n_events",
-        )
-        .orderBy("user_id")
-    )
-
-
-_UPSERT_SQL = """
-WITH r AS (
-  SELECT user_id, ts, event_id, value,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-),
-n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events FROM events GROUP BY user_id)
-SELECT r.user_id, r.ts AS last_ts, r.event_id AS last_event_id,
-       round(r.value, 4) AS last_value, n.n_events
-FROM r JOIN n ON r.user_id = n.user_id
-WHERE r.rn = 1
-ORDER BY r.user_id
-"""
 
 
 # --- BM25 ranked retrieval ------------------------------------------------------
@@ -280,8 +161,6 @@ ORDER BY doc_id
 
 
 QUERIES = [
-    Query("streaming_foreachbatch_upsert", _streaming_foreachbatch_upsert,
-          _UPSERT_SQL, ("streaming", "foreachBatch", "upsert")),
     Query("bm25_retrieval", _bm25_retrieval, _BM25_SQL, ("llm", "text", "ranking")),
     Query("stable_doc_ids", _stable_doc_ids, _STABLE_ID_SQL, ("llm", "index", "scale")),
 ]

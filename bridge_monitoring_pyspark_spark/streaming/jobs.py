@@ -22,15 +22,16 @@ source drains in one batch, then the engine runs a no-data flush batch once
 the watermark advances — so append-mode output contains exactly the windows
 whose end <= global watermark, where the global watermark is
 min over watermarked branches of (max event time) − delay. That closed-form
-is what plans/streaming_q.py's DuckDB oracles encode.
+is what plans/streaming.py's DuckDB oracles encode.
 
 Each query gets its own checkpoint dir (exactly-once restart contract,
 reference README.md:268-270): ``<out>/_chk_<sink>`` next to ``<out>/<sink>``.
 
 :func:`drain` is the one availableNow run-to-closed-form the catalog's
-streaming witnesses use (start, await, read the sink back). The ``run_*``
-jobs start their sinks themselves because bronze/silver/gold also run in
-follow mode (the CLI's ``--follow``, perfbench/live.py).
+streaming witnesses use (start, await, read the sink back), and
+:func:`drain_batches` its foreachBatch twin. The ``run_*`` jobs start
+their sinks through the same :func:`_write` because bronze/silver/gold
+also run in follow mode (the CLI's ``--follow``, perfbench/live.py).
 """
 
 from __future__ import annotations
@@ -100,15 +101,19 @@ def _write(
     available_now: bool = True,
     partition_by: str | None = None,
     mode: str = "append",
+    each_batch=None,
 ):
-    """Start ``df`` with its checkpoint at ``<out_dir>/_chk_<name>``. Append
-    mode writes parquet to ``<out_dir>/<name>``; complete and update modes,
-    which the parquet sink refuses, write a memory table named
+    """Start ``df`` with its checkpoint at ``<out_dir>/_chk_<name>``. With
+    ``each_batch`` the sink is ``foreachBatch(each_batch)``. Otherwise
+    append mode writes parquet to ``<out_dir>/<name>``; complete and update
+    modes, which the parquet sink refuses, write a memory table named
     ``<name>_<random>`` (the query's name), unique per run."""
     w = df.writeStream.outputMode(mode).option(
         "checkpointLocation", os.path.join(out_dir, f"_chk_{name}")
     )
-    if mode == "append":
+    if each_batch is not None:
+        w = w.foreachBatch(each_batch)
+    elif mode == "append":
         w = w.format("parquet").option("path", os.path.join(out_dir, name))
     else:
         w = w.format("memory").queryName(f"{name}_{uuid.uuid4().hex[:8]}")
@@ -146,14 +151,23 @@ def drain(
     :func:`_write`: parquet at ``<out_dir>/<name>`` for append, a memory
     table for complete/update, checkpoint at ``<out_dir>/_chk_<name>`` —
     so a second drain into the same dir resumes from the first one's
-    offsets, and the state-store reader can load the checkpoint after."""
+    offsets, and the state-store reader can load the checkpoint after.
+    The parquet sink is read back with ``df``'s schema: no inference job,
+    and a drain that wrote no file reads as empty."""
     spark = df.sparkSession
     with _stream_shuffle_partitions(spark, partitions):
         q = _write(df, out_dir, name, mode=mode)
     _await([q])
     if mode == "append":
-        return spark.read.parquet(os.path.join(out_dir, name))
+        return spark.read.schema(df.schema).parquet(os.path.join(out_dir, name))
     return spark.table(q.name)
+
+
+def drain_batches(df: DataFrame, out_dir: str, name: str, each_batch) -> None:
+    """Run the stream ``df`` to completion with an availableNow trigger,
+    handing each micro-batch to ``each_batch(batch_df, batch_id)``, which
+    writes the results itself; checkpoint at ``<out_dir>/_chk_<name>``."""
+    _await([_write(df, out_dir, name, each_batch=each_batch)])
 
 
 def write_json_landing(spark: SparkSession, sf_dir: str, landing_dir: str) -> None:
@@ -181,7 +195,8 @@ def write_json_landing(spark: SparkSession, sf_dir: str, landing_dir: str) -> No
 
 
 # Landing-zone schema: ts is an ISO-8601 string (parsed downstream — parse
-# failure routes to quarantine), `date` arrives via partition discovery.
+# failure routes to quarantine). `date` is the partition column: declared so
+# it is typed DATE and present even when no date= directory has landed yet.
 EVENTS_JSON = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -190,6 +205,7 @@ EVENTS_JSON = T.StructType(
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),
         T.StructField("props", T.StringType()),
+        T.StructField("date", T.DateType()),
     ]
 )
 
@@ -240,12 +256,7 @@ def run_silver_foreachbatch(
         finally:
             batch_df.unpersist()
 
-    _await([
-        events.writeStream.foreachBatch(route)
-        .option("checkpointLocation", os.path.join(out_dir, "_chk_fb"))
-        .trigger(availableNow=True)
-        .start()
-    ])
+    drain_batches(events, out_dir, "fb", route)
     return {"valid": valid_dir, "rejected": rejected_dir}
 
 

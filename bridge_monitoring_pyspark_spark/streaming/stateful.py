@@ -79,7 +79,7 @@ def streaming_sessionize_timeout(
     engine's timer clock. Spark's watermark/timer clock is **millisecond**-
     floored, so the timer registers at ``(end_us + gap_us) // 1000`` and
     fires strictly after the watermark passes it — the DuckDB oracle
-    replays exactly this flooring (see plans/streaming_q2.py).
+    replays exactly this flooring (see plans/streaming.py).
 
     Output is batching-independent under an availableNow drain because the
     emission rule is watermark-pure: a session row is emitted exactly when

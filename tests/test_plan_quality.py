@@ -324,10 +324,10 @@ def test_clustering_written_once():
 
 def test_streaming_drain_written_once():
     """Streaming witnesses run to their closed form through
-    streaming/jobs.py's drain: the availableNow trigger is written only
-    there and in the extras6 foreachBatch upsert, awaits only there and in
-    the extras3 pyds poll, plans never reach for jobs.py's private sink
-    plumbing, and every temp dir comes from the one scratch_dir."""
+    streaming/jobs.py: the availableNow trigger and the foreachBatch sink
+    are written only there, awaits only there and in the extras3 pyds
+    poll, plans never reach for jobs.py's private sink plumbing, and every
+    temp dir comes from the one scratch_dir."""
     import ast
     import pathlib
 
@@ -339,10 +339,9 @@ def test_streaming_drain_written_once():
     def holders(needle: str) -> set[str]:
         return {name for name, src in srcs.items() if needle in src}
 
-    assert holders("trigger(availableNow=True)") == {"streaming/jobs.py", "plans/extras6.py"}
-    assert holders("awaitTermination(") == {
-        "streaming/jobs.py", "plans/extras6.py", "plans/extras3.py"
-    }
+    assert holders("trigger(availableNow=True)") == {"streaming/jobs.py"}
+    assert holders(".foreachBatch(") == {"streaming/jobs.py"}
+    assert holders("awaitTermination(") == {"streaming/jobs.py", "plans/extras3.py"}
     assert sum(src.count("tempfile.mkdtemp") for src in srcs.values()) == 1
     private_imports = {
         (name, alias.name)
@@ -351,6 +350,53 @@ def test_streaming_drain_written_once():
         for alias in node.names if alias.name in {"_write", "_stream_shuffle_partitions"}
     }
     assert not private_imports
+
+
+def test_streaming_written_once():
+    """Every streaming witness but the Python data source's (extras3) and
+    the quality classifier's (extras19) is built in plans/streaming.py;
+    the streaming bronze and silver witnesses are checked by the batch
+    layers' own oracles; the hourly windowed-join oracles come from one
+    template and the salted interval join shares the unsalted oracle; and
+    the three modules the witnesses came from stay gone."""
+    import ast
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+    from bridge_monitoring_pyspark_spark.plans import bridge, catalog
+
+    queries = catalog.all_queries()
+    home = "bridge_monitoring_pyspark_spark.plans."
+    elsewhere = {
+        n: q.build.__module__.removeprefix(home)
+        for n, q in queries.items()
+        if n.startswith("streaming_") and q.build.__module__ != home + "streaming"
+    }
+    assert elsewhere == {
+        "streaming_pyds_ingest": "extras3", "streaming_quality_filter": "extras19"
+    }
+    assert queries["streaming_bronze_valid"].oracle is bridge._BRONZE_VALID_SQL
+    assert queries["streaming_json_ingest"].oracle is bridge._BRONZE_VALID_SQL
+    assert queries["streaming_silver_enriched"].oracle is bridge._SILVER_ENRICHED_SQL
+    assert (
+        queries["streaming_salted_interval_join"].oracle
+        is queries["streaming_interval_join"].oracle
+    )
+    root = pathlib.Path(pkg.__file__).parent
+    assert (root / "plans" / "streaming.py").read_text().count("date_trunc('hour'") == 1
+
+    gone = {"streaming_q", "streaming_q2", "extras30"}
+    assert not gone & set(catalog._PLAN_MODULES)
+    imported = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                imported.add((node.module or "").rsplit(".", 1)[-1])
+                imported.update(alias.name for alias in node.names)
+            elif isinstance(node, ast.Import):
+                imported.update(alias.name.rsplit(".", 1)[-1] for alias in node.names)
+    assert not gone & imported
+    assert not [m for m in gone if (root / "plans" / f"{m}.py").exists()]
 
 
 def test_file_stream_sources_read_one_way():

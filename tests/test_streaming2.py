@@ -1,9 +1,15 @@
-"""Tests for the second streaming wave (plans/streaming_q2.py): output-mode
-semantics vs batch equivalents, plan checks for the hint/cache queries, the
-state-store reader, and streaming/jobs.py's drain helper."""
+"""Tests for the streaming witnesses (plans/streaming.py): output-mode
+semantics vs batch equivalents, the state-store reader, streaming/jobs.py's
+drain helper, and the witnesses over a zero-row events table; plus plan
+checks for the hint/cache queries (plans/relational2.py)."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -136,8 +142,6 @@ def test_sessionize_timer_evicts_idle_key(spark, tmp_path):
     must be evicted. Key 2's sessions also prove cross-batch continuation:
     its batch-0 and batch-1 events are within the gap and must merge into
     ONE session spanning the micro-batch boundary."""
-    import os
-
     from bridge_monitoring_pyspark_spark.streaming.stateful import (
         streaming_sessionize_timeout,
     )
@@ -201,7 +205,6 @@ def test_sessionize_merges_late_but_valid_events(spark, tmp_path):
     interval merge must fold the late event into the open session exactly
     as a globally-sorted sessionization would."""
     import glob as g
-    import os
     import shutil
 
     from bridge_monitoring_pyspark_spark.streaming.stateful import (
@@ -261,8 +264,6 @@ def test_statestore_reader_matches_batch_agg(spark, tmp_path):
     checkpoint must expose exactly the final aggregate (one state row per
     key), and state-metadata must describe the single stateStoreSave
     operator with the pinned partition count."""
-    import uuid
-
     from bridge_monitoring_pyspark_spark.streaming.jobs import (
         _stream_shuffle_partitions,
         read_events_stream,
@@ -412,8 +413,6 @@ def test_scratch_dirs_removed_by_cleanup(spark, monkeypatch):
     """Witness sink dirs and checkpoints — including the memory-sink
     drain's, which Spark would otherwise put in an unmanaged temp dir —
     live in scratch dirs that the exit cleanup removes."""
-    import os
-
     from bridge_monitoring_pyspark_spark.functions import plan
 
     monkeypatch.setattr(plan, "_SCRATCH", [])
@@ -424,3 +423,53 @@ def test_scratch_dirs_removed_by_cleanup(spark, monkeypatch):
     assert all(any(f.startswith("_chk_") for f in os.listdir(d)) for d in dirs)
     plan._remove_scratch()
     assert not any(os.path.exists(d) for d in dirs)
+
+
+def test_drain_reads_its_sink_back_without_a_job(spark):
+    """A drained append sink is read back with the stream's own schema,
+    so building an append-sink witness starts no Spark job on the calling
+    thread (its micro-batches run on the stream's thread, in the stream's
+    own job group); inferring the sink's schema ran one."""
+    sc = spark.sparkContext
+    group = f"drain_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build streaming_dropdup_watermark")
+    try:
+        out = CATALOG["streaming_dropdup_watermark"].build(spark, SF_SMOKE)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.columns == ["event_id", "user_id", "event_type", "value"]
+
+
+@pytest.fixture(scope="module")
+def empty_events_sf(tmp_path_factory):
+    """The smoke fixture with a zero-row events table (same schema)."""
+    d = tmp_path_factory.mktemp("empty_events")
+    for f in os.listdir(SF_SMOKE):
+        if f != "events.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), d / f)
+    t = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    pq.write_table(t.slice(0, 0), d / "events.parquet")
+    return str(d)
+
+
+_EMPTY_CASES = sorted(
+    n for n, q in CATALOG.items()
+    if q.build.__module__.endswith(".plans.streaming")
+)
+
+
+@pytest.mark.parametrize("name", _EMPTY_CASES)
+def test_zero_row_events_give_the_empty_oracle_result(spark, empty_events_sf, name):
+    """Every witness in plans/streaming.py drains a zero-row events table
+    to its oracle's result over the same files: no rows, same columns."""
+    con = duckdb.connect()
+    for f in os.listdir(empty_events_sf):
+        table = f.removesuffix(".parquet")
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{empty_events_sf}/{f}'")
+    want = con.execute(CATALOG[name].oracle)
+    got = CATALOG[name].build(spark, empty_events_sf)
+    assert sorted(got.columns) == sorted(d[0] for d in want.description)
+    assert got.collect() == want.fetchall() == []

@@ -19,7 +19,7 @@ count per hash bucket (update mode), so the run also reports state-store
 rows/bytes from ``stateOperators`` — the state-size datapoint.
 
 ``--mode interval-join`` is the heaviest stateful pattern the engine ships
-(plans/extras18.py): a salted stream-stream event-time interval join of two
+(plans/streaming.py): a salted stream-stream event-time interval join of two
 rate sources — the left side carries an xxhash64 salt, the right side
 explodes into STREAM_SALT copies, the join keys on (user, salt) plus a
 5-second event-time band, and both sides are watermarked so join state is
@@ -37,7 +37,7 @@ throughput directly. The first batch is excluded (cold codegen + worker
 spin-up).
 
 ``--mode semi-join`` / ``--mode full-outer-join`` (round 9) are the
-sustained-rate twins of the plans/extras30.py stream-stream join matrix —
+sustained-rate twins of the plans/streaming.py stream-stream join matrix —
 see ``build_semi_or_outer``.
 
 ``--mode timer-sessionize`` (round 10, VERDICT r9 item 5) is the
@@ -114,13 +114,13 @@ def score_and_filter(df):
 
 
 JOIN_USERS = 4096  # key cardinality of the interval-join mode
-JOIN_SALT = 4  # mirrors plans/extras18.STREAM_SALT
+JOIN_SALT = 4  # mirrors plans/streaming.STREAM_SALT
 JOIN_RIGHT_KEEP = 100  # right side keeps 1 row in JOIN_RIGHT_KEEP
 
 
 def build_interval_join(spark, rows_per_batch: int, partitions: int):
     """Salted stream-stream interval join at sustained rate — the
-    plans/extras18.py pattern driven by two lockstep rate-micro-batch
+    plans/streaming.py pattern driven by two lockstep rate-micro-batch
     sources. Left rows are salted via xxhash64; right rows (1% of the
     stream — purchases are rare next to clicks) explode into JOIN_SALT
     copies so each (user, salt) state partition sees all of that user's
@@ -171,7 +171,7 @@ def build_interval_join(spark, rows_per_batch: int, partitions: int):
 
 
 def build_semi_or_outer(spark, rows_per_batch: int, partitions: int, mode: str):
-    """Sustained-rate twins of the plans/extras30.py stream-stream join
+    """Sustained-rate twins of the plans/streaming.py stream-stream join
     matrix entries (VERDICT r8 item 6):
 
     * ``semi-join`` — LEFT SEMI with the same event-time interval
@@ -179,7 +179,7 @@ def build_semi_or_outer(spark, rows_per_batch: int, partitions: int, mode: str):
       emit at most once; right rows are never emitted, so output traffic
       is bounded by the left rate regardless of match fan-out.
     * ``full-outer-join`` — FULL OUTER on (user, 5-second event-time
-      window) equality, the extras30 window-equality shape at row level:
+      window) equality, the full-outer witness's window-equality shape at row level:
       both sides' unmatched rows null-pad and emit when the watermark
       closes their window, so emission (and state eviction) is
       continuous. The right side is ~1% of the stream, making the
@@ -317,7 +317,7 @@ def build_native_sessionize(
     0.5 s gap, but sessionized with ``session_window`` + codegen
     aggregates instead of applyInPandasWithState — the high-cardinality
     scale path the catalog's ``streaming_session_window`` entry
-    (plans/streaming_q2.py) witnesses at fixture scale. No Python worker
+    (plans/streaming.py) witnesses at fixture scale. No Python worker
     anywhere: per-key rows never cross Arrow, so throughput should not
     collapse with key cardinality the way the per-group-invocation timer
     form does. What it gives up is the timer form's arbitrary per-session
