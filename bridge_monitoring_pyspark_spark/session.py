@@ -15,6 +15,13 @@ tests, streaming jobs) gets the same deliberately-chosen configs:
 * **shuffle.partitions** sized for the test harness (local[32]); on a real
   cluster this is superseded by AQE's coalescing from
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``.
+* **Own Python worker daemon** — ``spark.python.daemon.module`` names
+  ``pyworker``, which runs ``pyspark.daemon`` after making the per-task
+  ``importlib.invalidate_caches()`` stat ``pyspark.zip`` instead of
+  re-reading its directory (16 reads, 0.13-0.27 s per Python task on
+  Python 3.11, 4 cores). The daemon starts before any task, so the executor's
+  Python must import the package from its install or ``PYTHONPATH``
+  (SCALING.md, "Known local-vs-cluster deltas").
 """
 
 from __future__ import annotations
@@ -53,6 +60,9 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         ),
         # Arrow for the pandas_udf extension surface.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Python workers fork from the engine's daemon (pyworker.py), whose
+        # zip importers stat pyspark.zip instead of re-reading it per task.
+        "spark.python.daemon.module": "bridge_monitoring_pyspark_spark.pyworker",
         # Parquet scans: vectorized reader + pushdown are defaults, stated
         # explicitly because the bench depends on them.
         "spark.sql.parquet.filterPushdown": "true",
