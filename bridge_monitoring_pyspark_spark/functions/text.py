@@ -58,6 +58,11 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(F.encode(F.lower(F.trim(text)), "UTF-8"))
 
 
+# fingerprint_md5 of a ``text`` column as engine-neutral SQL (used to build
+# the DuckDB oracle strings).
+FINGERPRINT_MD5_SQL = "md5(lower(trim(text)))"
+
+
 def kgram_md5(text: Column, k: int) -> Column:
     """Rolling k-gram hash sequence: md5 of every k-char window (position
     order preserved). Empty array for texts shorter than k."""
@@ -86,7 +91,7 @@ def winnow_from_hashes(h: Column, w: int = 4) -> Column:
 
 
 # Winnowing hash parameters, shared with the DuckDB oracle strings in
-# plans/extras3.py / extras4.py. Exact int64 arithmetic on both sides —
+# plans/dedup.py. Exact int64 arithmetic on both sides —
 # Horner's rule over the k-gram's bytes, reduced mod P each step, then one
 # multiplicative mix:
 #   hv_0 = 0;  hv_{m+1} = (hv_m * 256 + byte_m) mod P

@@ -1,25 +1,18 @@
 """Advanced engine-surface queries: the SQL string interface, correlated
-subqueries, skew-resistant salted aggregation, bucketed (shuffle-free)
-joins, and iterative connected-components clustering of near-duplicates.
+subqueries, skew-resistant salted aggregation, and bucketed (shuffle-free)
+joins. (Near-dup connected components and the dedup pipeline's survivors
+live in plans/dedup.py.)
 """
 
 from __future__ import annotations
-
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import salted_agg, write_bucketed
-from ..operators.dedup import (
-    jaccard_pairs_bruteforce,
-    neardup_components,
-    shingle_postings,
-)
-from ..session import pinned_shuffle_partitions
 from ..sources.readers import load_table
 from ..functions.plan import scratch_dir
 from .catalog import Query
-from .llmdata import JACCARD_THRESHOLD, SHINGLE_N
 
 
 # --- SQL string interface ------------------------------------------------------
@@ -141,160 +134,9 @@ ORDER BY o_orderpriority
 """
 
 
-# --- Connected components over near-dup pairs ------------------------------------------
-def _neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup clustering: iterative min-label propagation over the Jaccard
-    near-dup pair graph (the step after pair generation in a real dedup
-    pipeline — keep one doc per component). The oracle computes the same
-    components with a recursive CTE."""
-    # lazy-checkpoint the postings: the bruteforce self-join + sizes lookup
-    # evaluate the posexplode+window+distinct subtree three times in one
-    # action otherwise (r15 plan audit; same fix as the llmdata pair entries)
-    p = shingle_postings(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", SHINGLE_N
-    ).localCheckpoint(eager=False)
-    pairs = jaccard_pairs_bruteforce(p, JACCARD_THRESHOLD)
-    return neardup_components(pairs).orderBy("doc_id")
-
-
-_COMPONENTS_SQL = rf"""
-WITH RECURSIVE
-t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') w FROM documents),
-sh AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) s
-  FROM t
-),
-post AS (SELECT doc_id, len(s) AS n, unnest(s) AS g FROM sh),
-jp AS (
-  -- postings self-join instead of all-pairs list_intersect (round 9:
-  -- the all-pairs form exceeded 420 s at sf0.1, this runs in seconds;
-  -- identical pairs verified at sf0.01 before the swap)
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           count(*) AS ni, any_value(a.n) AS na, any_value(b.n) AS nb
-    FROM post a JOIN post b ON a.g = b.g AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) WHERE ni::DOUBLE / (na + nb - ni) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM jp
-  UNION SELECT doc_b, doc_a FROM jp
-),
-reach(node, other) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.other FROM edges e JOIN reach r ON e.dst = r.node
-)
-SELECT node AS doc_id, min(other) AS component_id
-FROM reach
-GROUP BY node
-ORDER BY doc_id
-"""
-
-
-def _dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full dedup pipeline, end to end: exact fingerprint dedup →
-    MinHash-LSH near-dup pairs (exactly verified) → connected components →
-    keep the min-id representative per cluster. Output: surviving doc_ids —
-    what a training-data pipeline would actually feed downstream."""
-    from ..operators.dedup import (
-        exact_dedup_min_by,
-        minhash_lsh_candidates,
-        verify_candidates_jaccard,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    # the pipeline's eager stages (checkpoints + the CC loop) materialize
-    # through the RDD path, bypassing AQE coalescing: pin the shuffle
-    # partition count for their duration (session.pinned_shuffle_partitions)
-    from pyspark import StorageLevel
-
-    with pinned_shuffle_partitions(spark):
-        # materialize both reused stages once: `exact` feeds the postings
-        # AND the final anti-join; `p` is read by candidate generation,
-        # verify, and both size lookups — without persistence each
-        # reference re-runs the dedup window + full-corpus shingling.
-        # DISK_ONLY, not localCheckpoint (round 10): these two stages are
-        # corpus-sized (full text + all shingle postings), and
-        # localCheckpoint's deserialized MEMORY_AND_DISK blocks OOM'd the
-        # 16 GB single-JVM heap at sf100 (5M docs) before spilling —
-        # serialized disk blocks bound the heap at any corpus size, which
-        # is also the durable-staging posture a 100 TB pipeline runs.
-        exact = exact_dedup_min_by(
-            docs, "text", "doc_id", ["doc_id", "text"]
-        ).persist(StorageLevel.DISK_ONLY)
-        p = shingle_postings(exact, "doc_id", "text", SHINGLE_N).persist(
-            StorageLevel.DISK_ONLY
-        )
-        cands = minhash_lsh_candidates(p, num_hashes=128, rows_per_band=4)
-        pairs = verify_candidates_jaccard(cands, p, JACCARD_THRESHOLD)
-        comps = neardup_components(pairs)
-    dropped = comps.where(F.col("doc_id") != F.col("component_id")).select("doc_id")
-    # Materialize the (small: one long per survivor) result eagerly, then
-    # drop the two corpus-sized staged blocks before returning (ADVICE
-    # r10): without the unpersist, Spark's CacheManager matches the
-    # canonicalized plans on the NEXT build of this query and serves the
-    # first run's disk blocks — bench reruns would time a warm-stage-cache
-    # semantic, and the corpus-sized blocks would stay allocated for the
-    # rest of the suite.
-    survivors = (
-        exact.join(dropped, "doc_id", "left_anti")
-        .select("doc_id")
-        .localCheckpoint()  # eager; breaks lineage into the staged blocks
-    )
-    exact.unpersist()
-    p.unpersist()
-    return survivors.orderBy("doc_id")
-
-
-_SURVIVORS_SQL = rf"""
-WITH RECURSIVE
-exact AS (
-  SELECT doc_id, text FROM documents
-  QUALIFY row_number() OVER (PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) = 1
-),
-t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') w FROM exact),
-sh AS (
-  SELECT doc_id,
-         list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                        for i in range(1, len(w) - 1)]) s
-  FROM t
-),
-post AS (SELECT doc_id, len(s) AS n, unnest(s) AS g FROM sh),
-jp AS (
-  -- postings self-join, same rewrite as _COMPONENTS_SQL (round 9)
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           count(*) AS ni, any_value(a.n) AS na, any_value(b.n) AS nb
-    FROM post a JOIN post b ON a.g = b.g AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) WHERE ni::DOUBLE / (na + nb - ni) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM jp
-  UNION SELECT doc_b, doc_a FROM jp
-),
-reach(node, other) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.other FROM edges e JOIN reach r ON e.dst = r.node
-),
-comps AS (
-  SELECT node AS doc_id, min(other) AS component_id FROM reach GROUP BY node
-)
-SELECT e.doc_id FROM exact e
-WHERE e.doc_id NOT IN (SELECT doc_id FROM comps WHERE doc_id != component_id)
-ORDER BY e.doc_id
-"""
-
-
 QUERIES = [
     Query("sql_correlated_subquery", _sql_correlated_subquery, _CORRELATED_SQL, ("sql", "subquery")),
-    Query("dedup_pipeline_survivors", _dedup_pipeline_survivors, _SURVIVORS_SQL, ("llm", "dedup", "pipeline")),
     Query("sql_ntile_quartiles", _sql_ntile_quartiles, _NTILE_SQL, ("sql", "window")),
     Query("salted_revenue_by_flag", _salted_revenue, _SALTED_SQL, ("agg", "skew")),
     Query("bucketed_join_revenue", _bucketed_join_revenue, _BUCKETED_SQL, ("join", "bucketed")),
-    Query("neardup_components", _neardup_clusters, _COMPONENTS_SQL, ("llm", "dedup", "iterative")),
 ]

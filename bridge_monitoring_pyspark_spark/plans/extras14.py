@@ -1,13 +1,13 @@
 """Fifteenth extension wave: data profiling, trend analytics, EWMA
-smoothing, PageRank, and benchmark decontamination.
+smoothing, and PageRank.
 
-Rounds out the warehouse-utilities and LLM-data-pipeline surfaces:
-a single-pass column profiler (the `DESCRIBE`-on-steroids every ingest
-needs), period-over-period trend deltas, exponentially-weighted smoothing
-(the canonical not-quite-SQL window op, done as Arrow grouped-map with a
-closed-form SQL oracle), PageRank as the second iterative-algorithm
-witness (after `kmeans_embeddings`), and n-gram benchmark decontamination
-— the training-data hygiene step that removes eval-set leakage.
+Rounds out the warehouse-utilities surface: a single-pass column profiler
+(the `DESCRIBE`-on-steroids every ingest needs), period-over-period trend
+deltas, exponentially-weighted smoothing (the canonical not-quite-SQL
+window op, done as Arrow grouped-map with a closed-form SQL oracle), and
+PageRank as the second iterative-algorithm witness (after
+`kmeans_embeddings`). The wave's n-gram benchmark decontamination lives
+in plans/dedup.py.
 """
 
 from __future__ import annotations
@@ -263,6 +263,8 @@ def _pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.select("dst")
         ).distinct().localCheckpoint()
         n = nodes.count()
+    if n == 0:  # no transitions, so no nodes to rank (and no 1 / n)
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     # Loop partitioning sized by the DATA, not the session (round 14, the
     # scale-adaptive rule pinned_shuffle_partitions' docstring promises):
     # the checkpointed edges' partition count already reflects AQE's
@@ -300,75 +302,6 @@ def _pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECONTAM_N = 4  # words per shingle; production decontamination uses 8-13
-
-
-def _decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: flag training documents sharing any
-    word n-gram with a held-out benchmark set (here docs with
-    doc_id % 50 == 0 stand in for the eval suite). Normalization, word
-    split, and shingle construction are all higher-order array functions
-    (codegen, no UDF); the benchmark gram set is DISTINCT'd then
-    broadcast — training-side grams never shuffle, which is the entire
-    scale story: a 100 TB corpus joins against a few-MB broadcast of
-    benchmark shingles (hash the grams to xxhash64 to shrink it
-    further). Reports contaminated doc ids with shared-gram counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.regexp_replace("text", "[^a-z0-9 ]", " ")), " +"),
-            lambda x: x != "",
-        ).alias("w"),
-    )
-    grams = words.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("w") >= _DECONTAM_N,
-                F.expr(
-                    f"transform(sequence(1, size(w) - {_DECONTAM_N - 1}),"
-                    f" i -> concat_ws(' ', slice(w, i, {_DECONTAM_N})))"
-                ),
-            ).otherwise(F.array())
-        ).alias("gram"),
-    ).distinct()
-    # NOT checkpointed (r15 audit): both branches evaluate the gram
-    # explode+distinct, but it is pure codegen — the interleaved A/B read
-    # a within-action checkpoint as a slight loss (see OPTIMIZATION_r15.md)
-    bench = (
-        grams.where(F.col("doc_id") % 50 == 0).select("gram").distinct()
-    )
-    return (
-        grams.where(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench), "gram")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_shared_grams"))
-        .orderBy("doc_id")
-    )
-
-
-_DECONTAM_SQL = f"""
-WITH norm AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(
-             lower(regexp_replace(text, '[^a-z0-9 ]', ' ', 'g')), ' +'),
-           x -> x <> '') AS w
-  FROM documents),
-grams AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(w) - {_DECONTAM_N - 1}),
-                i -> array_to_string(list_slice(w, i, i + {_DECONTAM_N - 1}), ' ')))
-           AS gram
-  FROM norm),
-bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 50 = 0)
-SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_shared_grams
-FROM grams g JOIN bench USING (gram)
-WHERE g.doc_id % 50 <> 0
-GROUP BY 1 ORDER BY 1
-"""
-
-
 QUERIES = [
     Query("column_profile_summary", _column_profile, _profile_oracle(),
           ("profiling", "utility")),
@@ -378,6 +311,4 @@ QUERIES = [
           ("timeseries", "pandas-udf", "smoothing")),
     Query("pagerank_transitions", _pagerank_transitions, _pagerank_oracle_sql(),
           ("graph", "iterative")),
-    Query("decontaminate_ngram_overlap", _decontaminate_ngrams, _DECONTAM_SQL,
-          ("llmdata", "dedup", "decontamination")),
 ]

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import token_count_estimate, words
+from ..functions.text import FINGERPRINT_MD5_SQL, token_count_estimate, words
 from ..sources.readers import load_table
 from ..functions.plan import sorted_once
 from .catalog import Query
@@ -297,7 +297,7 @@ WITH scored AS MATERIALIZED (
              AS n_tok,
          round(len(list_distinct(string_split_regex(trim(text), '\s+')))::DOUBLE
                / len(string_split_regex(trim(text), '\s+')), 4) AS quality,
-         md5(lower(trim(text))) AS fp
+         {FINGERPRINT_MD5_SQL} AS fp
   FROM documents
 ),
 flagged AS MATERIALIZED (

@@ -1,124 +1,19 @@
-"""Eighteenth extension wave: incremental-corpus and vector-compression
-operators — the two patterns that keep a petabyte pipeline from reprocessing
-itself.
+"""Eighteenth extension wave: vector compression.
 
-- ``incremental_dedup_new_docs`` — dedup the DAILY INCREMENT against the
-  historical fingerprint index instead of re-deduping the whole corpus:
-  at 100 TB nobody rescans history; the index is a (fingerprint -> min id)
-  table the increment anti-joins / first-wins against.
-- ``embedding_int8_quantize`` — symmetric per-vector int8 quantization of
-  the embedding column with reconstruction-error accounting: the standard
-  4x memory cut that makes a 100 TB ANN corpus fit its serving tier.
+``embedding_int8_quantize`` — symmetric per-vector int8 quantization of
+the embedding column with reconstruction-error accounting: the standard
+4x memory cut that makes a 100 TB ANN corpus fit its serving tier. (The
+wave's incremental dedup against a history index lives in
+plans/dedup.py.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_md5
 from ..sources.readers import load_table
 from .catalog import Query
-
-INCR_SPLIT = 250  # doc_id < INCR_SPLIT is "history", >= is new content
-INCR_RECRAWL_N = 20  # history docs that re-arrive in the batch (new ids)
-INCR_INTRA_N = 10  # batch docs that also arrive twice within the batch
-RECRAWL_OFFSET = 100_000
-INTRA_OFFSET = 200_000
-
-
-def _incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup the incoming batch against the historical index, never
-    rescanning history's text: history contributes only its fingerprint
-    index (fp -> min doc_id, what a production pipeline persists between
-    runs); the new batch keeps a document iff its fingerprint is absent
-    from the index AND it is the first occurrence within the batch.
-    Emits the batch audit: every new doc with its verdict and, for
-    rejects, the id of the document it duplicates.
-
-    The corpus has no naturally identical texts, so the batch is built
-    like a real daily increment: fresh docs (id >= INCR_SPLIT), re-crawled
-    history (copies of the first INCR_RECRAWL_N history docs under new
-    ids -> 'dup_of_history'), and an internally-duplicated slice (copies
-    of the first INCR_INTRA_N fresh docs -> 'dup_in_batch') — all
-    deterministic, so the oracle replays the same union.
-
-    Plan shape: one groupBy to (re)build the index slice, one window for
-    within-batch first-wins, one LEFT join on fingerprint. At scale the
-    index join is a shuffle on fp (or a bucketed/bloom-pruned probe); the
-    batch side is the small one — days, not corpora."""
-    d = load_table(spark, sf_dir, "documents")
-    fp = fingerprint_md5(F.col("text"))
-    hist_index = (
-        d.where(F.col("doc_id") < INCR_SPLIT)
-        .select(fp.alias("fp"), "doc_id")
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("hist_doc_id"))
-    )
-    fresh = d.where(F.col("doc_id") >= INCR_SPLIT).select("doc_id", "text")
-    recrawl = d.where(F.col("doc_id") < INCR_RECRAWL_N).select(
-        (F.col("doc_id") + RECRAWL_OFFSET).alias("doc_id"), "text"
-    )
-    intra = d.where(
-        (F.col("doc_id") >= INCR_SPLIT) & (F.col("doc_id") < INCR_SPLIT + INCR_INTRA_N)
-    ).select((F.col("doc_id") + INTRA_OFFSET).alias("doc_id"), "text")
-    batch = (
-        fresh.unionByName(recrawl)
-        .unionByName(intra)
-        .select("doc_id", fp.alias("fp"))
-    )
-    rn = F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
-    batch_first = batch.withColumn("batch_rank", rn)
-    joined = batch_first.join(hist_index, "fp", "left")
-    first_in_batch = F.min("doc_id").over(Window.partitionBy("fp"))
-    verdict = (
-        F.when(F.col("hist_doc_id").isNotNull(), "dup_of_history")
-        .when(F.col("batch_rank") > 1, "dup_in_batch")
-        .otherwise("keep")
-    )
-    dup_of = F.when(F.col("hist_doc_id").isNotNull(), F.col("hist_doc_id")).when(
-        F.col("batch_rank") > 1, first_in_batch
-    )
-    return (
-        joined.select(
-            "doc_id", verdict.alias("verdict"), dup_of.alias("dup_of")
-        )
-        .orderBy("doc_id")
-    )
-
-
-_INCR_SQL = f"""
-WITH fps AS (
-  SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents
-),
-hist AS (
-  SELECT fp, min(doc_id) AS hist_doc_id FROM fps
-  WHERE doc_id < {INCR_SPLIT} GROUP BY fp
-),
-incoming AS (
-  SELECT doc_id, fp FROM fps WHERE doc_id >= {INCR_SPLIT}
-  UNION ALL
-  SELECT doc_id + {RECRAWL_OFFSET}, fp FROM fps WHERE doc_id < {INCR_RECRAWL_N}
-  UNION ALL
-  SELECT doc_id + {INTRA_OFFSET}, fp FROM fps
-  WHERE doc_id >= {INCR_SPLIT} AND doc_id < {INCR_SPLIT} + {INCR_INTRA_N}
-),
-batch AS (
-  SELECT doc_id, fp,
-         row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS batch_rank,
-         min(doc_id) OVER (PARTITION BY fp) AS first_in_batch
-  FROM incoming
-)
-SELECT b.doc_id,
-       CASE WHEN h.hist_doc_id IS NOT NULL THEN 'dup_of_history'
-            WHEN b.batch_rank > 1 THEN 'dup_in_batch'
-            ELSE 'keep' END AS verdict,
-       CASE WHEN h.hist_doc_id IS NOT NULL THEN h.hist_doc_id
-            WHEN b.batch_rank > 1 THEN b.first_in_batch END AS dup_of
-FROM batch b LEFT JOIN hist h ON b.fp = h.fp
-ORDER BY b.doc_id
-"""
-
 
 QUANT_BITS_MAX = 127  # symmetric int8 range
 
@@ -196,8 +91,6 @@ ORDER BY vec_id
 
 
 QUERIES = [
-    Query("incremental_dedup_new_docs", _incremental_dedup_new_docs, _INCR_SQL,
-          ("llm", "dedup", "incremental")),
     Query("embedding_int8_quantize", _embedding_int8_quantize, _QUANT_SQL,
           ("llm", "vectors", "quantization")),
 ]

@@ -1,16 +1,15 @@
 """Data-selection operators for pretraining corpora: DSIR importance
-weights, hashed linear quality classification, duplicated-substring run
-detection, and deterministic weighted sampling.
+weights, hashed linear quality classification, and deterministic weighted
+sampling. (The wave's duplicated-substring runs and their removal live in
+plans/dedup.py.)
 
 These close the "which documents do we keep?" gap between the dedup suite
 (what is redundant) and the mixture/curation entries (how much of each
 domain): importance resampling scores every document against a target
 distribution (DSIR, Xie et al. 2023, arXiv:2302.03169), the classifier
-witnesses fasttext-shaped model-based filtering as pure codegen, the
-run detector is the per-document half of exact-substring dedup (Lee et
-al. 2021, arXiv:2107.06499 — find maximal duplicated spans, not just
-duplicated shingles), and A-ES sampling (Efraimidis & Spirakis 2006) is
-the one-pass weighted-without-replacement draw a mixture executor needs.
+witnesses fasttext-shaped model-based filtering as pure codegen, and A-ES
+sampling (Efraimidis & Spirakis 2006) is the one-pass
+weighted-without-replacement draw a mixture executor needs.
 
 Engine-neutral determinism: every hash is an md5 hex slice (the one hash
 Spark and DuckDB share — see operators/dedup.py:simhash63_agg for the
@@ -28,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import words
-from ..functions.plan import scratch_dir, sorted_once
+from ..functions.plan import scratch_dir
 from ..schemas import TABLES
 from ..sources.readers import load_table, read_parquet_stream
 from ..streaming.jobs import drain
@@ -37,7 +36,6 @@ from .catalog import Query
 DSIR_BUCKETS = 64  # hashed-feature dimensionality (paper uses 10k; 64 keeps the sf0.01 oracle dense)
 CLS_BUCKETS = 256  # classifier hashed-vocabulary size
 CLS_BIAS = 0.05  # fixed intercept of the synthetic linear model
-DUP_GRAM_WORDS = 8  # duplicated-substring unit (words per gram)
 SAMPLE_N = 20  # weighted-sample size
 _U48 = float(1 << 48)  # md5 48-bit slice → uniform (0, 1] denominator
 
@@ -206,200 +204,6 @@ ORDER BY doc_id
 """
 
 
-def _positioned_grams(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, g): md5 of every ``DUP_GRAM_WORDS``-word gram with its
-    1-based start position. The gram key is its hash, so the wide 8-word
-    string never crosses a shuffle."""
-    k = DUP_GRAM_WORDS
-    d = docs.select("doc_id", words(F.col("text")).alias("ws"))
-    idx = F.sequence(F.lit(1), F.size("ws") - (k - 1))
-    gram = lambda i: F.md5(  # noqa: E731
-        F.encode(F.concat_ws(" ", *[F.element_at(F.col("ws"), i + j) for j in range(k)]), "UTF-8")
-    )
-    grams = F.when(
-        F.size("ws") >= k,
-        F.transform(idx, lambda i: F.struct(i.alias("pos"), gram(i).alias("g"))),
-    ).otherwise(F.array().cast("array<struct<pos:int,g:string>>"))
-    return d.select("doc_id", F.explode(grams).alias("s")).select(
-        "doc_id", F.col("s.pos").cast("long").alias("pos"), F.col("s.g").alias("g")
-    )
-
-
-def _substring_dup_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicated-substring runs — the span half of exact
-    substring dedup (Lee et al. 2021): an 8-word gram is *duplicated* if
-    it appears in >= 2 distinct documents, and consecutive duplicated gram
-    positions form a run (a maximal shared span, the unit that paper
-    removes). Emits, per document that has any, the total duplicated-gram
-    count, the longest run, and the run count.
-
-    100 TB shape: positioned grams -> gram-df aggregation (map-side
-    combine; the gram key is its md5, never the 8-word string) -> postings
-    join back -> per-doc window. The window partitions by doc_id, so state
-    is one document's duplicated positions; the df table shuffles on the
-    gram hash — the same postings discipline as the Jaccard/winnowing
-    entries, nothing all-pairs. "appears in >= 2 distinct documents" is
-    computed as min(doc_id) != max(doc_id) — a plain map-side-combined
-    agg, ONE shuffle on hash(g) — instead of countDistinct, whose expand
-    path costs a second (g, doc_id) shuffle; the join back is hinted
-    shuffled-hash so the 8-grams-per-word probe side is never sorted
-    (decade-3 lesson: SMJ external sort is what breaks first at scale).
-    """
-    # NOT checkpointed (r15 audit): the gram-df build and the postings
-    # join back both evaluate this explode chain, but an interleaved A/B
-    # measured the materialization costing as much as the recompute — the
-    # chain is pure codegen (scan+explode), the class where within-action
-    # checkpointing is a wash (it pays only for Python-boundary or
-    # multi-shuffle subtrees; see OPTIMIZATION_r15.md).
-    sh = _positioned_grams(load_table(spark, sf_dir, "documents"))
-    dup = (
-        sh.groupBy("g")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .select("g")
-    )
-    marked = sh.join(dup.hint("shuffle_hash"), "g").select("doc_id", "pos")
-    run_key = F.col("pos") - F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("pos")
-    )
-    runs = (
-        marked.withColumn("island", run_key)
-        .groupBy("doc_id", "island")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    return (
-        runs.groupBy("doc_id")
-        .agg(
-            F.sum("run_len").alias("n_dup_grams"),
-            F.max("run_len").alias("longest_run"),
-            F.count(F.lit(1)).alias("n_runs"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-_DUP_RUNS_SQL = f"""
-WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
-sh AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(ws[i:i + {DUP_GRAM_WORDS - 1}], ' ')) AS g
-  FROM w, UNNEST(range(1, len(ws) - {DUP_GRAM_WORDS - 2})) AS t(i)
-  WHERE len(ws) >= {DUP_GRAM_WORDS}
-),
-dup AS (SELECT g FROM sh GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-m AS (SELECT doc_id, pos FROM sh JOIN dup USING (g)),
-isl AS (
-  SELECT doc_id, pos,
-         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM m
-),
-runs AS (SELECT doc_id, island, count(*) AS run_len FROM isl GROUP BY doc_id, island)
-SELECT doc_id, CAST(sum(run_len) AS BIGINT) AS n_dup_grams,
-       CAST(max(run_len) AS BIGINT) AS longest_run,
-       CAST(count(*) AS BIGINT) AS n_runs
-FROM runs GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-def _substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The removal half of exact substring dedup (Lee et al. 2021):
-    actually CUT the duplicated spans, keep-first policy — a word survives
-    unless it is covered by a duplicated 8-gram whose first holder
-    (min doc_id) is some *earlier* document. Emits per-doc word counts
-    before/after and the md5 of the cleaned text, so the rewrite is
-    checkable without shipping full documents around.
-
-    100 TB shape: positioned grams -> per-gram (first/last holder)
-    aggregation (map-side combine on the gram *hash*; ">= 2 docs" is
-    min != max, avoiding countDistinct's extra expand shuffle) ->
-    shuffled-hash postings join back (probe side never sorted) -> per-doc
-    set of duplicated gram START positions (8x fewer rows than exploding
-    every covered word index, and no distinct shuffle) -> coverage is
-    decided per word IN-ROW with a higher-order exists over the starts
-    (word i covered iff some start s in [i-k+1, i]), and one filter per
-    row rebuilds the text with zero additional shuffle. Nothing is
-    all-pairs and no per-doc state exceeds the document's own gram count.
-    Round-7 decade-3 measurement caught the previous form superlinear
-    (x13.77 at 10x rows, 5M docs): the explode+distinct shuffles and the
-    countDistinct expand were the cost; this shape removes three of the
-    five shuffles.
-    """
-    k = DUP_GRAM_WORDS
-    docs = load_table(spark, sf_dir, "documents")
-    # NOT checkpointed — same adjudication as _substring_dup_runs above:
-    # the duplicated chain is pure codegen, and the interleaved A/B read
-    # the checkpoint as a wash-to-loss (r15 audit)
-    sh = _positioned_grams(docs)
-    gstats = sh.groupBy("g").agg(
-        F.min("doc_id").alias("first_holder"),
-        F.max("doc_id").alias("last_holder"),
-    )
-    removable = (
-        sh.join(
-            gstats.where(F.col("first_holder") != F.col("last_holder")).hint(
-                "shuffle_hash"
-            ),
-            "g",
-        )
-        .where(F.col("doc_id") > F.col("first_holder"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("pos").alias("starts"))
-    )
-    d = docs.select("doc_id", words(F.col("text")).alias("ws")).join(
-        removable, "doc_id", "left"
-    ).withColumn(
-        "starts", F.coalesce(F.col("starts"), F.array().cast("array<long>"))
-    )
-
-    def covered(i):  # word index i (1-based long) inside a duplicated gram?
-        return F.exists(
-            F.col("starts"), lambda s: (i >= s) & (i <= s + F.lit(k - 1))
-        )
-
-    kept = F.filter(F.col("ws"), lambda w, i: ~covered((i + 1).cast("long")))
-    # sorted_once: the per-row HOF coverage filter + md5 rebuild sit above
-    # the last exchange, so the sort's sampling pass ran them twice (see
-    # functions/plan.py)
-    return sorted_once(
-        d.select(
-            "doc_id",
-            F.size("ws").cast("long").alias("n_words"),
-            (F.size("ws") - F.size(kept)).cast("long").alias("n_removed"),
-            F.md5(F.encode(F.concat_ws(" ", kept), "UTF-8")).alias("cleaned_md5"),
-        ),
-        "doc_id",
-    )
-
-
-_DEDUP_CLEAN_SQL = f"""
-WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
-sh AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(ws[i:i + {DUP_GRAM_WORDS - 1}], ' ')) AS g
-  FROM w, UNNEST(range(1, len(ws) - {DUP_GRAM_WORDS - 2})) AS t(i)
-  WHERE len(ws) >= {DUP_GRAM_WORDS}
-),
-gstats AS (
-  SELECT g, count(DISTINCT doc_id) AS df, min(doc_id) AS first_holder
-  FROM sh GROUP BY g
-),
-removable AS (
-  SELECT DISTINCT sh.doc_id, CAST(u.widx AS BIGINT) AS widx
-  FROM sh JOIN gstats USING (g), UNNEST(range(sh.pos, sh.pos + {DUP_GRAM_WORDS})) AS u(widx)
-  WHERE gstats.df >= 2 AND sh.doc_id > gstats.first_holder
-),
-covered AS (SELECT doc_id, list(widx) AS cov FROM removable GROUP BY doc_id)
-SELECT w.doc_id,
-       CAST(len(w.ws) AS BIGINT) AS n_words,
-       CAST(coalesce(len(c.cov), 0) AS BIGINT) AS n_removed,
-       md5(coalesce(array_to_string(
-         [w.ws[i] FOR i IN range(1, len(w.ws) + 1)
-          IF NOT coalesce(list_contains(c.cov, i), false)], ' '), '')) AS cleaned_md5
-FROM w LEFT JOIN covered c ON w.doc_id = c.doc_id
-ORDER BY w.doc_id
-"""
-
-
 def _weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sample without replacement (Efraimidis &
     Spirakis A-ES): each doc draws u in (0, 1] as a pure md5 function of
@@ -562,10 +366,6 @@ QUERIES = [
           ("llm", "selection", "dsir", "training-data")),
     Query("quality_classifier_scores", _quality_classifier_scores, _CLS_SQL,
           ("llm", "selection", "quality", "classifier")),
-    Query("substring_dup_runs", _substring_dup_runs, _DUP_RUNS_SQL,
-          ("llm", "dedup", "substring", "spans")),
-    Query("substring_dedup_clean", _substring_dedup_clean, _DEDUP_CLEAN_SQL,
-          ("llm", "dedup", "substring", "rewrite")),
     Query("weighted_sample_docs", _weighted_sample_docs, _WEIGHTED_SAMPLE_SQL,
           ("llm", "sampling", "weighted", "training-data")),
     Query("streaming_quality_filter", _streaming_quality_filter, _STREAM_QUAL_SQL,

@@ -1,16 +1,13 @@
-"""Fourth extension wave: rolling-hash winnowing fingerprints, random-
-hyperplane LSH ANN, unpivot/melt, and Arrow-native (mapInArrow) vector
-analytics.
+"""Fourth extension wave: random-hyperplane LSH ANN, unpivot/melt,
+Arrow-native (mapInArrow) vector analytics, and the Python data source.
+(The wave's winnowing fingerprints live in plans/dedup.py.)
 
-Oracle notes: winnowing is mirrored in DuckDB with list comprehensions over
-the shared Horner polynomial hash (functions/text.py:winnow_hash_sql) —
-exact int64 arithmetic on both sides, so window minima agree bit-for-bit
-(the corpus is ASCII, making DuckDB's ord() the byte value). The LSH query
-is approximate *relative to exact top-k*, but fully deterministic given its
-hyperplanes: the catalog entry pins a seeded Rademacher (±1) plane matrix
-and the DuckDB oracle replays the identical algorithm (same planes → same
-buckets → same candidates → same exact re-rank), so hash-match holds without
-the oracle needing any LSH recall assumption.
+Oracle notes: the LSH query is approximate *relative to exact top-k*, but
+fully deterministic given its hyperplanes: the catalog entry pins a seeded
+Rademacher (±1) plane matrix and the DuckDB oracle replays the identical
+algorithm (same planes → same buckets → same candidates → same exact
+re-rank), so hash-match holds without the oracle needing any LSH recall
+assumption.
 """
 
 from __future__ import annotations
@@ -19,64 +16,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import winnow_fingerprint_rows, winnow_hash_sql
 from ..operators.similarity import hyperplane_lsh_topk
 from ..sources.readers import load_table
 from ..functions.plan import scratch_dir, sorted_once
 from .catalog import Query
-
-WINNOW_K = 8
-WINNOW_W = 4
-
-
-# --- Winnowing rolling-hash fingerprints --------------------------------------
-def _winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document winnowing fingerprint summary (count + extremes of the
-    fingerprint set), on the vectorized Arrow rows path
-    (winnow_fingerprint_rows: one mapInPandas pass, numpy Horner hashing +
-    sliding-window minima — the measured-justified UDF exception; see its
-    docstring for why the pure-JVM forms lose here), then a plain codegen
-    count/min/max roll-up. Docs too short to fingerprint re-enter via a
-    left join to the doc-id spine (n_fps=0, NULL extremes), matching the
-    array form exactly."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    fpr = winnow_fingerprint_rows(d, "doc_id", "text", k=WINNOW_K, w=WINNOW_W)
-    stats = fpr.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_fps"),
-        F.min("fp").alias("min_fp"),
-        F.max("fp").alias("max_fp"),
-    )
-    return sorted_once(
-        d.select("doc_id")
-        .join(stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_fps", F.lit(0)).alias("n_fps"),
-            "min_fp",
-            "max_fp",
-        ),
-        "doc_id",
-    )
-
-
-_WINNOW_SQL = f"""
-WITH g AS (
-  SELECT doc_id,
-         [CAST({winnow_hash_sql("text", "i", WINNOW_K)} AS BIGINT)
-          for i in range(1, length(text) - {WINNOW_K} + 2)] AS h
-  FROM documents
-),
-w AS (
-  SELECT doc_id,
-         list_distinct([list_min(h[j:j+{WINNOW_W - 1}])
-                        for j in range(1, len(h) - {WINNOW_W} + 2)]) AS fps
-  FROM g
-)
-SELECT doc_id, CAST(len(fps) AS INT) AS n_fps,
-       list_min(fps) AS min_fp, list_max(fps) AS max_fp
-FROM w
-ORDER BY doc_id
-"""
 
 
 # --- Random-hyperplane LSH ANN ------------------------------------------------
@@ -276,7 +219,6 @@ ORDER BY vec_a, vec_b
 
 
 QUERIES = [
-    Query("winnow_fingerprint_stats", _winnow_fingerprint_stats, _WINNOW_SQL, ("llm", "dedup", "fingerprint")),
     Query("ann_lsh_topk", _ann_lsh_topk, _ANN_LSH_SQL, ("llm", "ann", "lsh")),
     Query("neardup_embedding_lsh_pairs", _neardup_embedding_lsh_pairs,
           _NEARDUP_LSH_SQL, ("llm", "dedup", "ann", "lsh", "scale_path")),

@@ -1,15 +1,13 @@
-"""Fifth extension wave: winnowing-based near-dup pairs, PII scrubbing,
-and mergeable distinct-count sketches. (The wave's stream-stream
-time-interval join lives with the other streaming witnesses in
+"""Fifth extension wave: PII scrubbing and mergeable distinct-count
+sketches. (The wave's winnowing near-dup pairs live in plans/dedup.py, and
+its stream-stream time-interval join with the other streaming witnesses in
 plans/streaming.py.)
 
 Oracle notes: the PII query *injects* deterministic synthetic PII (the
 fixture corpus has none) with the same concat on both sides, so the scrub
-is non-vacuous and exactly mirrored; the winnow pair query inherits the
-polynomial-hash/list-min parity of `winnow_fingerprint_stats`
-(functions/text.py:winnow_hash_sql). The HLL sketch query is
-rows-only (DataSketches has no DuckDB twin) with a pytest accuracy bound
-against exact counts.
+is non-vacuous and exactly mirrored. The HLL sketch query is rows-only
+(DataSketches has no DuckDB twin) with a pytest accuracy bound against
+exact counts.
 """
 
 from __future__ import annotations
@@ -17,86 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import winnow_fingerprint_rows, winnow_hash_sql
-from ..functions.plan import sorted_once
 from ..sources.readers import load_table
 from .catalog import Query
 
-from .extras3 import WINNOW_K, WINNOW_W
-
-MIN_SHARED_FPS = 3
-MAX_FP_DF = 5  # document-frequency cap: fingerprints in more docs are corpus noise
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
 URL_RE = r"https?://[A-Za-z0-9./-]+"
-
-
-# --- Winnowing near-dup pairs -------------------------------------------------
-def _winnow_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup candidate pairs via shared winnowing fingerprints — the
-    fingerprint operator put to its real use: explode the per-doc
-    fingerprint sets into an inverted index, document-frequency-filter the
-    hot fingerprints, and count pair overlaps. Same shuffle shape as the
-    shingle postings path, but the index is ~2/(w+1) the size (winnowing's
-    sampling guarantee) and the df cap removes the skewed keys that would
-    otherwise dominate the self-join at 100 TB."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # codegen rows path (winnow_fingerprint_rows); materialized once because
-    # the index is read three more times below (df counts + filter join +
-    # both sides of the pair self-join)
-    idx0 = winnow_fingerprint_rows(
-        d, "doc_id", "text", k=WINNOW_K, w=WINNOW_W
-    ).localCheckpoint()
-    # document-frequency filter: a fingerprint present in many documents is
-    # corpus boilerplate, not duplication signal — and it is exactly the hot
-    # key that blows up the pair join (df=100k => 5e9 pairs from ONE
-    # fingerprint at scale). Cap df BEFORE the self-join.
-    rare = (
-        idx0.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= MAX_FP_DF)
-        .select("fp")
-    )
-    idx = idx0.join(rare, "fp")
-    return (
-        idx.alias("a")
-        .join(
-            idx.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= MIN_SHARED_FPS)
-        # sorted_once: the sort's sampling pass re-ran the pair self-join
-        # segment (see functions/plan.py)
-        .transform(lambda df: sorted_once(df, "doc_a", "doc_b"))
-    )
-
-
-_WINNOW_PAIRS_SQL = f"""
-WITH g AS (
-  SELECT doc_id,
-         [CAST({winnow_hash_sql("text", "i", WINNOW_K)} AS BIGINT)
-          for i in range(1, length(text) - {WINNOW_K} + 2)] AS h
-  FROM documents
-),
-w AS (
-  SELECT doc_id,
-         list_distinct([list_min(h[j:j+{WINNOW_W - 1}])
-                        for j in range(1, len(h) - {WINNOW_W} + 2)]) AS fps
-  FROM g
-),
-idx0 AS (SELECT doc_id, unnest(fps) AS fp FROM w),
-rare AS (SELECT fp FROM idx0 GROUP BY fp HAVING count(*) <= 5),
-idx AS (SELECT doc_id, fp FROM idx0 WHERE fp IN (SELECT fp FROM rare))
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(count(*) AS BIGINT) AS n_shared
-FROM idx a JOIN idx b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY doc_a, doc_b
-HAVING count(*) >= {MIN_SHARED_FPS}
-ORDER BY doc_a, doc_b
-"""
 
 
 # --- PII scrubbing ------------------------------------------------------------
@@ -200,8 +123,6 @@ ORDER BY event_type
 
 
 QUERIES = [
-    Query("winnow_neardup_pairs", _winnow_neardup_pairs, _WINNOW_PAIRS_SQL,
-          ("llm", "dedup", "fingerprint")),
     Query("pii_scrub_stats", _pii_scrub_stats, _PII_SQL, ("llm", "text", "pii")),
     Query("sketch_distinct_users", _sketch_distinct_users, _SKETCH_DISTINCT_SQL,
           ("agg", "sketch")),

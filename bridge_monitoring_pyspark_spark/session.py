@@ -139,9 +139,12 @@ def pinned_shuffle_partitions(
     ``n`` defaults to ``sparkContext.defaultParallelism``; at cluster
     scale callers size it to the loop's state cardinality instead (the
     streaming twin of this knob is
-    streaming/jobs.py:_stream_shuffle_partitions)."""
+    streaming/jobs.py:_stream_shuffle_partitions). A data-sized ``n`` is
+    0 when the data is empty (an empty checkpoint has no partitions), and
+    Spark rejects a non-positive partition count, so ``n`` is at least 1."""
     if n is None:
         n = spark.sparkContext.defaultParallelism
+    n = max(n, 1)
     keys = (
         "spark.sql.shuffle.partitions",
         # AQE plans shuffles at initialPartitionNum when coalescing is on,

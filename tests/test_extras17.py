@@ -6,7 +6,8 @@ from __future__ import annotations
 import numpy as np
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras17 import INCR_SPLIT, QUANT_BITS_MAX
+from bridge_monitoring_pyspark_spark.plans.dedup import INCR_SPLIT
+from bridge_monitoring_pyspark_spark.plans.extras17 import QUANT_BITS_MAX
 from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
 from testdata_paths import SF_SMOKE
@@ -15,7 +16,7 @@ from testdata_paths import SF_SMOKE
 def test_incremental_dedup_matches_python_replay(spark):
     import hashlib
 
-    from bridge_monitoring_pyspark_spark.plans.extras17 import (
+    from bridge_monitoring_pyspark_spark.plans.dedup import (
         INCR_INTRA_N,
         INCR_RECRAWL_N,
         INTRA_OFFSET,

@@ -1,4 +1,5 @@
-"""Tests for the data-selection suite (plans/extras19.py): pure-Python
+"""Tests for the data-selection suite (plans/extras19.py, its substring
+dedup pair in plans/dedup.py): pure-Python
 replays of DSIR importance weights, the hashed linear classifier, the
 duplicated-substring run detector, and A-ES weighted sampling — plus the
 plan shapes their 100 TB arguments rest on."""
@@ -12,10 +13,10 @@ import re
 import pytest
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
+from bridge_monitoring_pyspark_spark.plans.dedup import DUP_GRAM_WORDS
 from bridge_monitoring_pyspark_spark.plans.extras19 import (
     CLS_BUCKETS,
     DSIR_BUCKETS,
-    DUP_GRAM_WORDS,
     SAMPLE_N,
 )
 from bridge_monitoring_pyspark_spark.sources.readers import load_table

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras31 import (
+from bridge_monitoring_pyspark_spark.plans.dedup import (
     BLOOM_K,
     BLOOM_M_BITS,
     BLOOM_NGRAM,

@@ -399,6 +399,49 @@ def test_streaming_written_once():
     assert not [m for m in gone if (root / "plans" / f"{m}.py").exists()]
 
 
+def test_dedup_written_once():
+    """The exact, near-dup, substring and decontamination entries are built
+    in plans/dedup.py, and each oracle shape is written once in the
+    package: the shingle comprehension, the recursive components CTE, the
+    winnowing minima, the DuckDB fingerprint, and the MinHash band shape
+    (one candidate call under plans/). The wave module the Bloom entry
+    came from stays gone."""
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+    from bridge_monitoring_pyspark_spark.plans import catalog
+
+    moved = {
+        "doc_fingerprint_md5", "dedup_exact_docs", "dedup_events_keep_first",
+        "neardup_jaccard_pairs", "neardup_minhash_lsh_pairs", "simhash_docs",
+        "dedup_pipeline_survivors", "neardup_components",
+        "winnow_fingerprint_stats", "winnow_neardup_pairs",
+        "decontaminate_ngram_overlap", "substring_dup_runs",
+        "substring_dedup_clean", "bloom_shingle_decontaminate",
+        "incremental_dedup_new_docs",
+    }
+    queries = catalog.all_queries()
+    home = {n: q.build.__module__.rsplit(".", 1)[-1] for n, q in queries.items()}
+    assert {n for n in moved if home[n] != "dedup"} == set()
+    assert {n for n, m in home.items() if m == "dedup"} == moved
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    for needle in (
+        "list_distinct([w[i] || ' ' || w[i+1]",
+        "reach(node, other)",
+        "list_min(h[j:j+",
+        "md5(lower(trim(text)))",
+    ):
+        assert sum(src.count(needle) for src in srcs.values()) == 1, needle
+    assert sum(
+        src.count("minhash_lsh_candidates(")
+        for name, src in srcs.items() if name.startswith("plans/")
+    ) == 1
+    assert "extras31" not in catalog._PLAN_MODULES
+    assert not (root / "plans" / "extras31.py").exists()
+
+
 def test_file_stream_sources_read_one_way():
     """A file-stream source is a directory plus a file-name filter, never
     a glob path: a glob makes each landed file a root path, which Spark

@@ -70,7 +70,8 @@ QUERIES: tuple[tuple[str, str], ...] = (
     ("sequence_packing_hierarchical", "linear"),
     ("streaming_dropdup_watermark", "micro-batch"),
     ("streaming_salted_interval_join", "micro-batch"),
-    # round-5 fourth wave — the data-selection suite (plans/extras19.py)
+    # round-5 fourth wave — the data-selection suite (plans/extras19.py;
+    # its two substring-dedup entries now live in plans/dedup.py)
     ("dsir_importance_weights", "linear"),
     ("quality_classifier_scores", "linear"),
     ("substring_dup_runs", "linear"),
