@@ -4,7 +4,9 @@ via Reciprocal Rank Fusion (Cormack, Clarke & Buettcher, SIGIR 2009).
 RRF is the standard hybrid-search combiner (Elasticsearch, Vespa, most
 RAG stacks): each retriever contributes ``1 / (K + rank)`` per document,
 so scores from incomparable scales (BM25 weights vs cosine similarity)
-fuse without calibration.
+fuse without calibration. :func:`bm25_topn` is the one BM25 scorer:
+``bm25_retrieval`` is its top list as is, and the hybrid entry ranks it
+(:func:`rank_by`) before fusing.
 
 Spark-first shape, 100 TB notes:
 * Both legs end in a global top-``depth`` — Catalyst compiles
@@ -24,37 +26,29 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 RRF_K = 60
+BM25_K1 = 1.2  # tf saturation
+BM25_B = 0.75  # document-length normalization
 
 
-def bm25_topn(
-    docs: DataFrame,
-    terms: tuple[str, ...],
-    depth: int,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Okapi BM25 top-``depth`` for a disjunctive term query:
-    (doc_id, sparse_rank). Lucene-form idf; corpus scalars (N, avgdl,
-    per-term df) ride along via broadcast cross-join — no driver collect.
+def bm25_topn(docs: DataFrame, terms: tuple[str, ...], depth: int) -> DataFrame:
+    """Okapi BM25 top-``depth`` of ``docs(doc_id, text)`` for a disjunctive
+    term query: (doc_id, bm25), best first. Lucene-form idf; corpus scalars
+    (N, avgdl, per-term df) ride along via broadcast cross-join — no driver
+    collect.
 
-    Zero-wide-shuffle shape (round 9): per-term tf and doc length are
-    array expressions over the tokenized text — one corpus scan, one
+    No wide shuffle: per-term tf and doc length are array expressions over
+    the tokenized text, so the plan is one corpus scan, one
     map-side-combined scalar aggregate, a per-row scoring expression, and
-    a TakeOrderedAndProject top-``depth``. The original form exploded to
-    (doc, term) rows and groupBy'd the WHOLE vocabulary just to score a
-    fixed term set; the decade-3 measurement caught it superlinear
-    (×18.64 at 10× rows — ~800M shuffled pairs at 5M docs). Results are
-    identical: a query term with tf = 0 contributes exactly 0.0 to the
-    score, and docs matching no term are filtered out as before.
+    a TakeOrderedAndProject top-``depth``. Scoring a fixed term set never
+    needs the corpus vocabulary; exploding to (doc, term) rows and
+    grouping them would shuffle every token of the corpus (~800M pairs at
+    5M docs) for the few terms that score. A query term with tf = 0
+    contributes exactly 0.0, and docs matching no term are filtered out.
 
-    Input domain (ADVICE r9): duplicate query terms are deduped first-seen
-    (the old groupBy-on-term form deduped implicitly; scoring a term twice
-    would double-count it), and a single-term query works — the match
-    predicate is an OR-fold over the per-term tf columns, not F.greatest
-    (which requires >= 2 arguments).
+    Input domain: duplicate query terms are deduped first-seen (scoring a
+    term twice would double-count it), and a single-term query works — the
+    match predicate is an OR-fold over the per-term tf columns, not
+    F.greatest (which requires >= 2 arguments).
     """
     terms = tuple(dict.fromkeys(terms))  # dedupe, keep first-seen order
     if not terms:
@@ -68,13 +62,13 @@ def bm25_topn(
 
     toks = (
         docs.select(
-            id_col,
+            "doc_id",
             F.filter(
-                F.split(F.lower(text_col), "[^a-z]+"), lambda x: x != F.lit("")
+                F.split(F.lower("text"), "[^a-z]+"), lambda x: x != F.lit("")
             ).alias("__toks"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.size("__toks").alias("dl"),
             *[tf_of(w).alias(f"__tf{i}") for i, w in enumerate(terms)],
         )
@@ -97,8 +91,11 @@ def bm25_topn(
         )
         return (
             idf
-            * (F.col(f"__tf{i}") * (k1 + 1))
-            / (F.col(f"__tf{i}") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+            * (F.col(f"__tf{i}") * (BM25_K1 + 1))
+            / (
+                F.col(f"__tf{i}")
+                + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            )
         )
 
     total = w_term(0)
@@ -106,18 +103,25 @@ def bm25_topn(
     for i in range(1, len(terms)):
         total = total + w_term(i)
         matches = matches | (F.col(f"__tf{i}") > 0)
-    scored = (
+    return (
         toks.crossJoin(F.broadcast(stats))
         .where(matches)
-        .select(id_col, F.round(total, 4).alias("bm25"))
-        .orderBy(F.col("bm25").desc(), id_col)
+        .select("doc_id", F.round(total, 4).alias("bm25"))
+        .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(depth)
     )
+
+
+def rank_by(
+    scored: DataFrame, score_col: str, rank_col: str, *, id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, rank) over a depth-bounded top list: row_number by (score
+    desc, id), the deterministic rank RRF fuses."""
     return scored.select(
         id_col,
         F.row_number()
-        .over(Window.orderBy(F.col("bm25").desc(), id_col))
-        .alias("sparse_rank"),
+        .over(Window.orderBy(F.col(score_col).desc(), id_col))
+        .alias(rank_col),
     )
 
 
@@ -155,12 +159,7 @@ def cosine_topn(
         .orderBy(F.col("cos").desc(), id_col)
         .limit(depth)
     )
-    return scored.select(
-        id_col,
-        F.row_number()
-        .over(Window.orderBy(F.col("cos").desc(), id_col))
-        .alias("dense_rank"),
-    )
+    return rank_by(scored, "cos", "dense_rank", id_col=id_col)
 
 
 def rrf_fuse(

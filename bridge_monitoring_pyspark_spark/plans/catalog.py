@@ -170,7 +170,7 @@ _PLAN_MODULES: tuple[str, ...] = (
     "advanced", "relational2", "llmdata2", "streaming", "extras2", "tpch2",
     "extras3", "extras4", "extras5", "extras6", "extras7", "extras8",
     "extras10", "extras11", "extras12", "extras13", "extras14", "extras15",
-    "extras16", "dedup", "extras17", "extras18", "extras19", "extras20",
+    "extras16", "dedup", "retrieval", "extras18", "extras19", "extras20",
     "extras21", "extras22", "extras23", "extras25", "extras26", "extras27",
     "extras28", "extras29", "extras32", "extras34", "extras35",
 )

@@ -9,7 +9,7 @@ and IVF search, one capability with each decision written once.
   space, compare pairs ONLY within a cluster and keep one representative
   of each near-duplicate group: the cluster-blocked third embedding-dedup
   strategy next to exact blocked all-pairs and hyperplane-LSH candidates
-  (plans/extras3.py). ``semdedup_prune`` uses stride centroids (K ~
+  (plans/retrieval.py). ``semdedup_prune`` uses stride centroids (K ~
   sqrt(N)) so the oracle replays centroid choice exactly;
   ``semdedup_prune_kmeans`` is the 100 TB production form — the trained
   fixed-K Lloyd model feeding the same assigner, O(N·K·d) BLAS with
@@ -78,6 +78,7 @@ from ..operators.topk import top_k_per_group
 from ..session import pinned_shuffle_partitions
 from ..sources.readers import load_table
 from .catalog import Query
+from .retrieval import cosine_rank_tail
 
 KMEANS_K = 8
 KMEANS_ITERS = 5
@@ -875,14 +876,7 @@ scored AS (
   FROM query_probes q JOIN corpus_assign c
     ON q.cid = c.cid AND c.neighbor_id != q.query_id
 )
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(s, 6) DESC, neighbor_id ASC)
-            AS INT) AS rank,
-       neighbor_id, round(s, 4) AS cosine_sim
-FROM scored
-QUALIFY rank <= {IVF_TOPK}
-ORDER BY query_id, rank
+{cosine_rank_tail(IVF_TOPK)}
 """
 
 

@@ -1,5 +1,5 @@
-"""Shuffle-shaping scale witnesses: skew-salted join and the fully
-distributed exact k-NN join.
+"""Shuffle-shaping scale witness: the skew-salted join. (The fully
+distributed exact k-NN join lives in plans/retrieval.py.)
 
 AQE's skew-join split (tests/test_skew_and_properties.py) is the first
 answer to a hot join key; this module witnesses the *manual* salting
@@ -9,11 +9,6 @@ itself (``streaming_salted_interval_join``, plans/streaming.py). The
 salt is a deterministic hash (operators/joins.py:salted_join), so the
 result is bit-identical to the plain join and the DuckDB oracle is simply
 that plain join.
-
-The k-NN join witnesses the other big-table-×-big-table shape: exact
-top-k neighbors for EVERY query row with both sides distributed
-(operators/similarity.py:knn_join_blocked) — no collect, no broadcast —
-so the oracle is the plain brute-force SQL.
 """
 
 from __future__ import annotations
@@ -22,9 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import salted_join
-from ..operators.similarity import knn_join_blocked
 from ..sources.readers import load_table
-from ..functions.plan import sorted_once
 from .catalog import Query
 
 SALT_BUCKETS = 8
@@ -64,49 +57,7 @@ ORDER BY c_mktsegment
 """
 
 
-def _knn_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-3 neighbors for every query vector vec_id < 50 via the
-    grid-decomposed k-NN join — both sides stay distributed (the
-    "neighbors for every document" shape where collecting the query side,
-    as the probe-style ann_cosine_topk does, stops scaling). Exact, so the
-    oracle is the brute-force SQL."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 50)
-    # Auto-sized blocks (round-12 memory-bounds audit): the 50-row query
-    # side resolves to ONE query block — the old fixed 4 replicated the
-    # whole corpus into the shuffle 4x for nothing — and the corpus side to
-    # ceil(Nc/8192), which pins the per-cell sims matrix as the corpus
-    # grows (8 blocks at sf0.1, the long-benchmarked shape).
-    return sorted_once(
-        knn_join_blocked(
-            q, e, "vec_id", "vec_id", "embedding", "embedding", k=3,
-            n_query_blocks=None, n_corpus_blocks=None,
-        ),
-        "query_id", "rank",
-    )
-
-
-_KNN_JOIN_SQL = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id < 50),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_cosine_similarity(q.v, c.v) AS s
-  FROM q JOIN e c ON c.vec_id != q.vec_id
-)
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(s, 6) DESC, neighbor_id ASC) AS INT) AS rank,
-       neighbor_id, round(s, 4) AS cosine_sim
-FROM scored
-QUALIFY rank <= 3
-ORDER BY query_id, rank
-"""
-
-
 QUERIES = [
     Query("salted_skew_join_revenue", _salted_skew_join_revenue, _SALTED_SQL,
           ("join", "skew", "salting")),
-    Query("knn_join_blocked", _knn_join_blocked, _KNN_JOIN_SQL,
-          ("llm", "ann", "knn_join")),
 ]

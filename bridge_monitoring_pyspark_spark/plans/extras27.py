@@ -1,96 +1,13 @@
-"""Round-8 extension wave 2: hybrid sparse+dense retrieval with RRF.
-
-The retrieval stack a RAG-style data pipeline runs over this engine:
-BM25 keyword ranking (documents.text) and dense cosine ranking
-(embeddings.embedding, ids shared with doc_id) fused by Reciprocal Rank
-Fusion — see operators/retrieval.py for the scale notes (both legs are
-TakeOrderedAndProject; the fusion join is depth-bounded).
-
-No counterpart in the 550-LoC reference (no text or vector retrieval).
+"""Round-8 extension wave 2: temperature-sampled corpus mixing. (The
+wave's hybrid sparse+dense RRF retrieval lives in plans/retrieval.py.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.retrieval import RRF_K, bm25_topn, cosine_topn, rrf_fuse
 from ..sources.readers import load_table
 from .catalog import Query
-
-HYBRID_TERMS = ("hash", "join", "vector")
-HYBRID_DEPTH = 50
-HYBRID_TOPK = 20
-HYBRID_QUERY_VEC = 0
-
-
-def _hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRF fusion of the BM25 top-50 (fixed disjunctive term query) and
-    the cosine top-50 (query = embedding of vec_id 0): top-20 by fused
-    score. Ranks are over rounded scores with id tie-breaks, so the fused
-    list is deterministic across engines and partitionings; documents in
-    only one list still score (missing rank contributes 0)."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    sparse = bm25_topn(docs, HYBRID_TERMS, HYBRID_DEPTH)
-    dense = cosine_topn(emb, HYBRID_QUERY_VEC, HYBRID_DEPTH)
-    return rrf_fuse(sparse, dense, HYBRID_TOPK)
-
-
-_TERMS_SQL = ", ".join(f"'{t}'" for t in HYBRID_TERMS)
-
-_HYBRID_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
-  FROM documents
-),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM toks WHERE term != '' GROUP BY doc_id, term
-),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-corpus AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-bm25 AS (
-  SELECT tf.doc_id, round(sum(
-           ln(1.0 + (corpus.n_docs - df.df + 0.5) / (df.df + 0.5))
-           * (tf.tf * (1.2 + 1))
-           / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / corpus.avgdl))
-         ), 4) AS bm25
-  FROM tf
-  JOIN df ON tf.term = df.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN corpus
-  WHERE tf.term IN ({_TERMS_SQL})
-  GROUP BY tf.doc_id
-),
-sparse AS (
-  SELECT doc_id,
-         CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT)
-           AS sparse_rank
-  FROM bm25 ORDER BY bm25 DESC, doc_id LIMIT {HYBRID_DEPTH}
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = {HYBRID_QUERY_VEC}),
-cos AS (
-  SELECT e.vec_id,
-         round(list_cosine_similarity(e.v, q.qv), 6) AS cos
-  FROM e CROSS JOIN q WHERE e.vec_id != {HYBRID_QUERY_VEC}
-),
-dense AS (
-  SELECT vec_id AS doc_id,
-         CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT)
-           AS dense_rank
-  FROM cos ORDER BY cos DESC, vec_id LIMIT {HYBRID_DEPTH}
-)
-SELECT COALESCE(s.doc_id, d.doc_id) AS doc_id,
-       s.sparse_rank, d.dense_rank,
-       round(COALESCE(1.0 / ({RRF_K} + s.sparse_rank), 0.0)
-             + COALESCE(1.0 / ({RRF_K} + d.dense_rank), 0.0), 6) AS rrf_score
-FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id
-ORDER BY rrf_score DESC, doc_id
-LIMIT {HYBRID_TOPK}
-"""
-
 
 MIX_ALPHA = 0.7
 MIX_BUDGET_TOKENS = 10_000_000
@@ -168,8 +85,6 @@ ORDER BY source
 
 
 QUERIES = [
-    Query("hybrid_rrf_retrieval", _hybrid_rrf_retrieval, _HYBRID_SQL,
-          ("llm", "retrieval", "ann", "ranking")),
     Query("temperature_mix_weights", _temperature_mix_weights, _MIX_SQL,
           ("llm", "sampling", "training-data")),
 ]

@@ -1,5 +1,5 @@
-"""Round-8 extension wave 3: runtime bloom-filter join pruning and
-hard-negative mining.
+"""Round-8 extension wave 3: runtime bloom-filter join pruning. (The
+wave's hard-negative mining lives in plans/retrieval.py.)
 
 * ``bloomfilter_join_pruned`` — the third runtime-filtering witness next
   to DPP (extras22) and CBO reorder (extras22): Catalyst injects a bloom
@@ -7,13 +7,8 @@ hard-negative mining.
   rows that cannot join are dropped BEFORE the shuffle. At 100 TB this is
   the lever that saves a fact/dim join whose dim is too big to broadcast:
   the shuffle shrinks from |fact| rows to |semi-join survivors|.
-* ``hard_negative_mining`` — the retriever-training data builder: per
-  anchor embedding, the most-similar wrong-label vectors with the margin
-  against the anchor's best same-label positive
-  (operators/similarity.hard_negative_topk).
 
-No counterpart in the 550-LoC reference (no optimizer levers, no vector
-mining).
+No counterpart in the 550-LoC reference (no optimizer levers).
 """
 
 from __future__ import annotations
@@ -21,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import hard_negative_topk
 from ..sources.readers import load_table
 from .catalog import Query
 
@@ -114,59 +108,7 @@ ORDER BY l_returnflag
 """
 
 
-HN_N_ANCHORS = 20
-HN_TOPK = 5
-
-
-def _hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 hardest negatives (most-similar wrong-label vectors) for each
-    of the first 20 embeddings, with the positive similarity and margin —
-    the mining pass a contrastive retriever-training pipeline runs per
-    batch. Anchors broadcast; the corpus is scored in one scan shared by
-    the positive and negative legs (operators/similarity.py)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    anchors = e.where(F.col("vec_id") < HN_N_ANCHORS)
-    return hard_negative_topk(
-        e, anchors, "vec_id", "embedding", "label", HN_TOPK
-    )
-
-
-_HN_SQL = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-),
-a AS (SELECT * FROM e WHERE vec_id < {HN_N_ANCHORS}),
-s AS (
-  SELECT a.vec_id AS query_id, a.label AS qlabel,
-         c.vec_id AS neighbor_id, c.label AS nlabel,
-         round(list_cosine_similarity(a.v, c.v), 6) AS sim6
-  FROM a JOIN e c ON c.vec_id != a.vec_id
-),
-pos AS (
-  SELECT query_id, max(sim6) AS pos6 FROM s
-  WHERE nlabel = qlabel GROUP BY query_id
-),
-neg AS (
-  SELECT query_id, neighbor_id, nlabel, sim6,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim6 DESC, neighbor_id ASC) AS INT)
-           AS rank
-  FROM s WHERE nlabel != qlabel
-)
-SELECT n.query_id, n.rank, n.neighbor_id,
-       n.nlabel AS neg_label,
-       round(n.sim6, 4) AS neg_sim,
-       round(p.pos6, 4) AS pos_sim,
-       round(p.pos6 - n.sim6, 4) AS margin
-FROM neg n LEFT JOIN pos p USING (query_id)
-WHERE n.rank <= {HN_TOPK}
-ORDER BY query_id, rank
-"""
-
-
 QUERIES = [
     Query("bloomfilter_join_pruned", _bloomfilter_join_pruned, _BLOOM_SQL,
           ("optimizer", "runtime-filter", "bloom", "join")),
-    Query("hard_negative_mining", _hard_negative_mining, _HN_SQL,
-          ("llm", "retrieval", "mining", "training-data")),
 ]

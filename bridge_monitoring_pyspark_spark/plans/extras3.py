@@ -1,105 +1,17 @@
-"""Fourth extension wave: random-hyperplane LSH ANN, unpivot/melt,
-Arrow-native (mapInArrow) vector analytics, and the Python data source.
-(The wave's winnowing fingerprints live in plans/dedup.py.)
-
-Oracle notes: the LSH query is approximate *relative to exact top-k*, but
-fully deterministic given its hyperplanes: the catalog entry pins a seeded
-Rademacher (±1) plane matrix and the DuckDB oracle replays the identical
-algorithm (same planes → same buckets → same candidates → same exact
-re-rank), so hash-match holds without the oracle needing any LSH recall
-assumption.
+"""Fourth extension wave: unpivot/melt, Arrow-native (mapInArrow) vector
+analytics, and the Python data source. (The wave's winnowing fingerprints
+live in plans/dedup.py, its random-hyperplane LSH entries in
+plans/retrieval.py.)
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import hyperplane_lsh_topk
 from ..sources.readers import load_table
 from ..functions.plan import scratch_dir, sorted_once
 from .catalog import Query
-
-
-# --- Random-hyperplane LSH ANN ------------------------------------------------
-LSH_DIM, LSH_TABLES, LSH_BITS = 64, 16, 5
-
-# Seeded Rademacher (±1) hyperplanes — any symmetric distribution is a valid
-# SRP draw, and ±1 literals are compact enough to replicate inside the DuckDB
-# oracle (one sign character per entry, plane-major). RandomState is the
-# numpy *legacy* generator with a frozen bit-stream guarantee, so the matrix
-# is identical on every machine/version.
-_LSH_PLANES = np.where(
-    np.random.RandomState(7).rand(LSH_DIM, LSH_TABLES * LSH_BITS) < 0.5, 1.0, -1.0
-)
-_LSH_SIGNS = "".join(
-    "p" if _LSH_PLANES[i, j] > 0 else "n"
-    for j in range(LSH_TABLES * LSH_BITS)
-    for i in range(LSH_DIM)
-)
-
-
-def _ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-5 for query vectors vec_id < 10, with
-    the pinned Rademacher plane matrix so the DuckDB oracle can replay the
-    exact same bucketing + candidate join + exact re-rank. Recall vs the
-    exact `ann_cosine_topk` is additionally pytest-measured."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10)
-    return sorted_once(
-        hyperplane_lsh_topk(
-            q, e, "vec_id", "vec_id", "embedding", dim=LSH_DIM, k=5,
-            n_tables=LSH_TABLES, bits=LSH_BITS, planes=_LSH_PLANES,
-        ),
-        "query_id", "rank",
-    )
-
-
-# The oracle is the same algorithm end-to-end: rebuild the ±1 planes from the
-# sign string, bucket every vector per table (sign bits packed little-endian,
-# bit b of table t = plane t*BITS+b), candidate = shares any (table, bucket)
-# with the query, then exact cosine re-rank with the engine's tie-break
-# (round(sim,6) desc, neighbor asc). Sign boundary risk (numpy matmul vs
-# DuckDB sequential dot differing across ±1-weighted sums) has measure ~0 on
-# continuous embeddings; 64-term dots sit ~1e13 ulps from zero.
-_ANN_LSH_SQL = f"""
-WITH p AS (
-  SELECT t.pid,
-         [CASE WHEN substring('{_LSH_SIGNS}', t.pid * {LSH_DIM} + i, 1) = 'p'
-               THEN 1.0 ELSE -1.0 END
-          for i in range(1, {LSH_DIM} + 1)] AS pv
-  FROM (SELECT unnest(range({LSH_TABLES * LSH_BITS})) AS pid) t
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-b AS (
-  SELECT e.vec_id, CAST(p.pid // {LSH_BITS} AS INT) AS tbl,
-         sum(CASE WHEN list_dot_product(e.v, p.pv) > 0
-                  THEN CAST(1 AS BIGINT) << CAST(p.pid % {LSH_BITS} AS INT)
-                  ELSE 0 END) AS bucket
-  FROM e CROSS JOIN p
-  GROUP BY e.vec_id, tbl
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-  WHERE q.vec_id < 10 AND c.vec_id != q.vec_id
-),
-scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         list_cosine_similarity(qe.v, ce.v) AS s
-  FROM cand
-  JOIN e qe ON qe.vec_id = cand.query_id
-  JOIN e ce ON ce.vec_id = cand.neighbor_id
-)
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(s, 6) DESC, neighbor_id ASC) AS INT) AS rank,
-       neighbor_id, round(s, 4) AS cosine_sim
-FROM scored
-QUALIFY rank <= 5
-ORDER BY query_id, rank
-"""
 
 
 # --- Unpivot / melt -----------------------------------------------------------
@@ -165,63 +77,7 @@ ORDER BY vec_id
 """
 
 
-def _neardup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup PAIRS via hyperplane-LSH candidates + exact
-    verification — the SemDeDup-shaped scale path beside the exact blocked
-    all-pairs (`neardup_embedding_pairs`, O(N²) dots): work is O(N·tables)
-    bucketing plus within-bucket pairs, the embedding twin of the text
-    side's banded MinHash. Pinned Rademacher planes make the candidate set
-    deterministic, so the DuckDB oracle replays bucketing, pair join, and
-    threshold verify exactly (recall vs the exact pairs is a measured
-    property, not a correctness gate)."""
-    from ..operators.similarity import hyperplane_lsh_pairs
-
-    e = load_table(spark, sf_dir, "embeddings")
-    return sorted_once(
-        hyperplane_lsh_pairs(
-            e, "vec_id", "embedding", LSH_DIM, 0.4,
-            n_tables=LSH_TABLES, bits=LSH_BITS, planes=_LSH_PLANES,
-        ),
-        "vec_a", "vec_b",
-    )
-
-
-_NEARDUP_LSH_SQL = f"""
-WITH p AS (
-  SELECT t.pid,
-         [CASE WHEN substring('{_LSH_SIGNS}', t.pid * {LSH_DIM} + i, 1) = 'p'
-               THEN 1.0 ELSE -1.0 END
-          for i in range(1, {LSH_DIM} + 1)] AS pv
-  FROM (SELECT unnest(range({LSH_TABLES * LSH_BITS})) AS pid) t
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-b AS (
-  SELECT e.vec_id, CAST(p.pid // {LSH_BITS} AS INT) AS tbl,
-         sum(CASE WHEN list_dot_product(e.v, p.pv) > 0
-                  THEN CAST(1 AS BIGINT) << CAST(p.pid % {LSH_BITS} AS INT)
-                  ELSE 0 END) AS bucket
-  FROM e CROSS JOIN p
-  GROUP BY e.vec_id, tbl
-),
-cand AS (
-  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-  FROM b x JOIN b y ON x.tbl = y.tbl AND x.bucket = y.bucket
-  WHERE x.vec_id < y.vec_id
-)
-SELECT cand.vec_a, cand.vec_b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS cosine_sim
-FROM cand
-JOIN e a ON a.vec_id = cand.vec_a
-JOIN e b ON b.vec_id = cand.vec_b
-WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-ORDER BY vec_a, vec_b
-"""
-
-
 QUERIES = [
-    Query("ann_lsh_topk", _ann_lsh_topk, _ANN_LSH_SQL, ("llm", "ann", "lsh")),
-    Query("neardup_embedding_lsh_pairs", _neardup_embedding_lsh_pairs,
-          _NEARDUP_LSH_SQL, ("llm", "dedup", "ann", "lsh", "scale_path")),
     Query("unpivot_part_metrics", _unpivot_part_metrics, _UNPIVOT_SQL, ("reshape",)),
     Query("emb_norms_arrow", _emb_norms_arrow, _EMB_NORMS_SQL, ("llm", "vector", "arrow")),
 ]

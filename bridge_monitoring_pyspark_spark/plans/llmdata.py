@@ -1,8 +1,8 @@
-"""LLM-training-data pipeline queries: text analysis, embedding near-dups,
-similarity search, multimodal columns (the north-star extensions, SURVEY.md
-§7 Phase 3). All run over the ``documents`` / ``embeddings`` tables. The
-shingle, MinHash, SimHash and fingerprint dedup entries live in
-plans/dedup.py.
+"""LLM-training-data pipeline queries: text analysis and multimodal
+columns (the north-star extensions, SURVEY.md §7 Phase 3), over the
+``documents`` table. The shingle, MinHash, SimHash and fingerprint dedup
+entries live in plans/dedup.py; the embedding near-dup pairs and the
+exact cosine top-k in plans/retrieval.py.
 
 Oracle notes: token semantics are written twice (Spark columns, DuckDB
 list comprehensions) with identical 0/1-based index mapping; tests and
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from ..functions.plan import sorted_once
 from ..functions.text import token_count_estimate, words
 from ..operators.multimodal import extract_features, with_binary_payload
-from ..operators.similarity import cosine_pairs_blocked, cosine_topk_arrow
 from ..sources.readers import load_table
 from .catalog import Query
 
@@ -144,64 +143,6 @@ ORDER BY lang
 """
 
 
-# --- Near-dup ---------------------------------------------------------------------
-def _neardup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (threshold 0.4 — the testdata has no
-    planted >0.95 pairs, and at 0.4 LSH bucketing cannot guarantee recall),
-    via the blocked exact all-pairs search: block self-join +
-    per-block-pair BLAS matmul in applyInPandas. Exact like brute force,
-    but nothing is ever collected to the driver — see
-    operators/similarity.py:cosine_pairs_blocked scale notes."""
-    e = load_table(spark, sf_dir, "embeddings")
-    # n_blocks=None: auto-size ceil(N/8192) so the per-task sims matrix
-    # stays ~512 MB at any corpus size (identical plan at sf0.1, where
-    # auto resolves to the long-benchmarked 8 blocks).
-    return sorted_once(
-        cosine_pairs_blocked(e, "vec_id", "embedding", 0.4, n_blocks=None),
-        "vec_a", "vec_b",
-    )
-
-
-_NEARDUP_EMB_SQL = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS cosine_sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-ORDER BY vec_a, vec_b
-"""
-
-
-# --- Similarity search ----------------------------------------------------------
-def _ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 neighbors for query vectors vec_id < 10, via the
-    Arrow/BLAS brute-force path with per-batch partial top-k."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10)
-    return sorted_once(
-        cosine_topk_arrow(q, e, "vec_id", "vec_id", "embedding", "embedding", k=5),
-        "query_id", "rank",
-    )
-
-
-_ANN_SQL = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id < 10),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_cosine_similarity(q.v, c.v) AS s
-  FROM q JOIN e c ON c.vec_id != q.vec_id
-)
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(s, 6) DESC, neighbor_id ASC) AS INT) AS rank,
-       neighbor_id, round(s, 4) AS cosine_sim
-FROM scored
-QUALIFY rank <= 5
-ORDER BY query_id, rank
-"""
-
-
 # --- Multimodal --------------------------------------------------------------------
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload plumbing + Arrow-batched feature extraction
@@ -226,7 +167,5 @@ QUERIES = [
     Query("token_count_estimate", _token_counts, _TOKEN_COUNT_SQL, ("llm", "text")),
     Query("lang_id_heuristic", _lang_id, _LANG_ID_SQL, ("llm", "text")),
     Query("language_summary", _language_summary, _LANG_SUMMARY_SQL, ("llm", "text")),
-    Query("neardup_embedding_pairs", _neardup_embeddings, _NEARDUP_EMB_SQL, ("llm", "dedup", "ann")),
-    Query("ann_cosine_topk", _ann_bruteforce, _ANN_SQL, ("llm", "ann")),
     Query("multimodal_features", _multimodal_features, _MULTIMODAL_SQL, ("llm", "multimodal")),
 ]

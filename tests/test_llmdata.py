@@ -356,7 +356,7 @@ def test_lsh_matches_pinned_plane_replay(spark):
     oracle asserts, checked here without DuckDB in the loop."""
     import numpy as np
 
-    from bridge_monitoring_pyspark_spark.plans.extras3 import (
+    from bridge_monitoring_pyspark_spark.plans.retrieval import (
         _LSH_PLANES,
         LSH_BITS,
         LSH_TABLES,

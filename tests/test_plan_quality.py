@@ -442,6 +442,44 @@ def test_dedup_written_once():
     assert not (root / "plans" / "extras31.py").exists()
 
 
+def test_retrieval_written_once():
+    """The ANN, k-NN, near-dup pair, quantization, BM25, hybrid and
+    hard-negative entries are built in plans/retrieval.py, and each oracle
+    shape is written once in the package: the ranked cosine tail, the LSH
+    bucket sum, the cosine-pair threshold and the BM25 idf, whose k1/b are
+    the scorer's constants. The wave module the int8 entry came from stays
+    gone."""
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+    from bridge_monitoring_pyspark_spark.plans import catalog
+
+    moved = {
+        "ann_cosine_topk", "neardup_embedding_pairs", "ann_lsh_topk",
+        "neardup_embedding_lsh_pairs", "knn_join_blocked", "ann_pq_adc_topk",
+        "embedding_int8_quantize", "bm25_retrieval", "hybrid_rrf_retrieval",
+        "hard_negative_mining",
+    }
+    queries = catalog.all_queries()
+    home = {n: q.build.__module__.rsplit(".", 1)[-1] for n, q in queries.items()}
+    assert {n for n, m in home.items() if m == "retrieval"} == moved
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    for needle in (
+        "ORDER BY round(s, 6) DESC, neighbor_id ASC",
+        "THEN CAST(1 AS BIGINT) << CAST(p.pid %",
+        "WHERE list_cosine_similarity(a.v, b.v) >=",
+        "ln(1.0 + (corpus.n_docs - df.df + 0.5) / (df.df + 0.5))",
+        "BM25_K1 = ",
+        "def bm25_topn(",
+    ):
+        assert sum(src.count(needle) for src in srcs.values()) == 1, needle
+    assert "{BM25_K1}" in srcs["plans/retrieval.py"]
+    assert "extras17" not in catalog._PLAN_MODULES
+    assert not (root / "plans" / "extras17.py").exists()
+
+
 def test_file_stream_sources_read_one_way():
     """A file-stream source is a directory plus a file-name filter, never
     a glob path: a glob makes each landed file a root path, which Spark
@@ -528,9 +566,9 @@ def test_neardup_pairs_build_never_touches_driver(spark, monkeypatch):
     # inspect the computation plan: sorted_once's lazy checkpoint (round
     # 14) wraps the final plan in an opaque LogicalRDD — swap in a plain
     # orderBy so the gate still sees the blocked-matmul stage
-    from bridge_monitoring_pyspark_spark.plans import llmdata as _llm
+    from bridge_monitoring_pyspark_spark.plans import retrieval as _ret
 
-    monkeypatch.setattr(_llm, "sorted_once", lambda d, *c: d.orderBy(*c))
+    monkeypatch.setattr(_ret, "sorted_once", lambda d, *c: d.orderBy(*c))
     df = CATALOG["neardup_embedding_pairs"].build(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # the blocked matmul stage

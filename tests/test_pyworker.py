@@ -16,15 +16,15 @@ import os
 import subprocess
 import sys
 import textwrap
-import uuid
 
 import pytest
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
 from bridge_monitoring_pyspark_spark.session import default_configs
 
+from testdata_paths import PERFBENCH_SF, jobs_in_group
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PERFBENCH_SF = os.path.join(REPO, "perfbench", "fixture", "sf0.01")
 
 
 def test_daemon_module_is_in_the_package():
@@ -142,22 +142,10 @@ LLM_DATA_JOBS = {
 }
 
 
-def _jobs_in_group(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        fn()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", sorted(LLM_DATA_JOBS))
 def test_llm_data_job_counts_pinned(spark, name):
     query = all_queries()[name]
-    jobs = _jobs_in_group(
+    jobs = jobs_in_group(
         spark,
         lambda: query.build(spark, PERFBENCH_SF).write.format("noop").mode("overwrite").save(),
     )

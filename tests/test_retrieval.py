@@ -1,20 +1,34 @@
-"""Hybrid RRF retrieval (operators/retrieval.py)."""
+"""The retrieval entries (plans/retrieval.py): BM25 and hybrid RRF
+scoring, int8 quantization against a numpy replay, every entry over a
+zero-row documents and embeddings copy of the smoke fixture, and the
+Spark jobs each build runs at perfbench's fixture. (Also the
+temperature-mix replay of plans/extras27.py.)"""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from bridge_monitoring_pyspark_spark.operators.retrieval import RRF_K, bm25_topn
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras27 import (
+from bridge_monitoring_pyspark_spark.plans.retrieval import (
+    BM25_TERMS,
+    BM25_TOPK,
     HYBRID_DEPTH,
     HYBRID_TOPK,
+    QUANT_BITS_MAX,
 )
-from bridge_monitoring_pyspark_spark.operators.retrieval import RRF_K
+from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
-from testdata_paths import SF_SMOKE
+from testdata_paths import PERFBENCH_SF, SF_SMOKE, cut_copy, jobs_in_group, oracle
+
+CATALOG = all_queries()
 
 
 def test_hybrid_rrf_scores_and_order(spark):
     rows = (
-        all_queries()["hybrid_rrf_retrieval"].build(spark, SF_SMOKE).collect()
+        CATALOG["hybrid_rrf_retrieval"].build(spark, SF_SMOKE).collect()
     )
     assert len(rows) == HYBRID_TOPK
     # fused score must equal the RRF formula over the reported ranks
@@ -38,7 +52,7 @@ def test_hybrid_rrf_scores_and_order(spark):
 
 def test_hybrid_rrf_includes_single_list_docs(spark):
     rows = (
-        all_queries()["hybrid_rrf_retrieval"].build(spark, SF_SMOKE).collect()
+        CATALOG["hybrid_rrf_retrieval"].build(spark, SF_SMOKE).collect()
     )
     # the full-outer fuse keeps docs that only one retriever surfaced
     # (dense-only docs exist because BM25 term hits are sparse)
@@ -53,8 +67,6 @@ def test_temperature_mix_weights_replay(spark):
         MIX_ALPHA,
         MIX_BUDGET_TOKENS,
     )
-    from bridge_monitoring_pyspark_spark.sources.readers import load_table
-
     docs = load_table(spark, SF_SMOKE, "documents").select("source", "text").collect()
     tok = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
     agg: dict[str, list[int]] = {}
@@ -66,7 +78,7 @@ def test_temperature_mix_weights_replay(spark):
     raw_total = sum(raw.values())
     tok_total = sum(t for _, t in agg.values())
     got = (
-        all_queries()["temperature_mix_weights"].build(spark, SF_SMOKE).collect()
+        CATALOG["temperature_mix_weights"].build(spark, SF_SMOKE).collect()
     )
     assert [r.source for r in got] == sorted(agg)
     for r in got:
@@ -91,20 +103,98 @@ def test_bm25_single_term_and_duplicate_terms(spark):
     """ADVICE r9: a single-term query is in-domain (the match predicate is
     an OR-fold, not F.greatest), and duplicate query terms dedupe
     first-seen instead of double-counting their score."""
-    from bridge_monitoring_pyspark_spark.operators.retrieval import bm25_topn
-    from bridge_monitoring_pyspark_spark.sources.readers import load_table
-
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    single = [
-        (r.doc_id, r.sparse_rank) for r in bm25_topn(docs, ("hash",), 10).collect()
-    ]
+    single = [tuple(r) for r in bm25_topn(docs, ("hash",), 10).collect()]
     assert single, "single-term query must rank matching docs"
-    duped = [
-        (r.doc_id, r.sparse_rank)
-        for r in bm25_topn(docs, ("hash", "hash"), 10).collect()
-    ]
+    duped = [tuple(r) for r in bm25_topn(docs, ("hash", "hash"), 10).collect()]
     assert duped == single
-    import pytest
-
     with pytest.raises(ValueError):
         bm25_topn(docs, (), 10)
+
+
+def test_bm25_ranks_relevant_docs(spark):
+    """A doc stuffed with query terms must outscore the corpus tail: every
+    returned top-20 doc must actually contain at least one query term."""
+    top = CATALOG["bm25_retrieval"].build(spark, SF_SMOKE).collect()
+    assert 0 < len(top) <= BM25_TOPK
+    assert all(r.bm25 > 0 for r in top)
+    ids = [r.doc_id for r in top]
+    docs = {
+        r.doc_id: r.text
+        for r in load_table(spark, SF_SMOKE, "documents")
+        .where(F.col("doc_id").isin(ids))
+        .collect()
+    }
+    for i in ids:
+        assert any(t in docs[i].lower() for t in BM25_TERMS)
+
+
+def test_int8_quantize_error_bound_and_replay(spark):
+    rows = {r.vec_id: r for r in
+            CATALOG["embedding_int8_quantize"].build(spark, SF_SMOKE).collect()}
+    assert rows
+    embs = {
+        r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+        for r in load_table(spark, SF_SMOKE, "embeddings")
+        .where("vec_id < 100")
+        .select("vec_id", "embedding")
+        .collect()
+    }
+    assert set(rows) == set(embs)
+    for vid, x in embs.items():
+        r = rows[vid]
+        scale = np.abs(x).max() / QUANT_BITS_MAX
+        q = np.round(x / scale)
+        err = np.abs(x - q * scale)
+        assert -QUANT_BITS_MAX <= r.q_min <= r.q_max <= QUANT_BITS_MAX
+        assert r.q_max == int(q.max()) and r.q_min == int(q.min())
+        # symmetric rounding bound: reconstruction is within half a step
+        # (+1e-6: max_abs_err is rounded to 6 dp and may round up past it)
+        assert r.max_abs_err <= scale / 2 + 1e-6
+        assert abs(r.mean_abs_err - round(err.mean(), 6)) <= 2e-6
+
+
+_RETRIEVAL_CASES = sorted(
+    n for n, q in CATALOG.items() if q.build.__module__.endswith(".plans.retrieval")
+)
+
+
+@pytest.fixture(scope="module")
+def empty_sf(tmp_path_factory):
+    """Zero-row documents and embeddings."""
+    return cut_copy(tmp_path_factory.mktemp("empty_corpus"), {"documents": 0, "embeddings": 0})
+
+
+@pytest.mark.parametrize("name", _RETRIEVAL_CASES)
+def test_zero_row_corpus_gives_the_empty_oracle_result(spark, empty_sf, name):
+    want = oracle(empty_sf, CATALOG[name].oracle)
+    got = CATALOG[name].build(spark, empty_sf)
+    assert sorted(got.columns) == sorted(d[0] for d in want.description)
+    assert got.collect() == want.fetchall() == []
+
+
+# Spark jobs per build() plus noop write at perfbench's fixture. BM25 is one
+# corpus scan with a broadcast scalar aggregate: 3 jobs, where exploding to
+# (doc, term) rows and grouping the vocabulary ran 13.
+RETRIEVAL_JOBS = {
+    "ann_cosine_topk": 5,
+    "neardup_embedding_pairs": 6,
+    "ann_lsh_topk": 8,
+    "neardup_embedding_lsh_pairs": 7,
+    "knn_join_blocked": 9,
+    "ann_pq_adc_topk": 14,
+    "embedding_int8_quantize": 3,
+    "bm25_retrieval": 3,
+    "hybrid_rrf_retrieval": 4,
+    "hard_negative_mining": 8,
+}
+
+
+@pytest.mark.parametrize("name", _RETRIEVAL_CASES)
+def test_retrieval_job_counts_pinned(spark, name):
+    query = CATALOG[name]
+    jobs = jobs_in_group(
+        spark,
+        lambda: query.build(spark, PERFBENCH_SF).write.format("noop").mode("overwrite").save(),
+    )
+    assert jobs == RETRIEVAL_JOBS[name]
