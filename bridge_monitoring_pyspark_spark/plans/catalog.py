@@ -166,13 +166,12 @@ PRIORITY_ORDER: tuple[str, ...] = (
 # Plan modules in registration order: entries not named in PRIORITY_ORDER
 # follow in this order.
 _PLAN_MODULES: tuple[str, ...] = (
-    "bridge", "tpch", "llmdata", "clustering", "extras",
-    "advanced", "relational2", "llmdata2", "streaming", "extras2", "tpch2",
-    "extras3", "extras4", "extras5", "extras6", "extras7", "extras8",
-    "extras10", "extras11", "extras12", "extras13", "extras14", "extras15",
-    "extras16", "dedup", "retrieval", "extras18", "extras19", "extras20",
+    "bridge", "llmdata", "clustering", "extras", "relational", "llmdata2",
+    "streaming", "extras2", "tpch", "extras3", "extras4", "extras5", "extras6",
+    "extras7", "extras8", "extras10", "extras11", "extras12", "extras13",
+    "extras14", "extras15", "extras16", "dedup", "retrieval", "extras19",
     "extras21", "extras22", "extras23", "extras25", "extras26", "extras27",
-    "extras28", "extras29", "extras32", "extras34", "extras35",
+    "extras29", "extras32", "extras34", "extras35",
 )
 
 

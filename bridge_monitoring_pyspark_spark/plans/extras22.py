@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
 from ..functions.plan import scratch_dir, sorted_once
+from ..session import scoped_confs
 from .catalog import Query
 
 # One parquet materialization per (witness, sf_dir) per process. The lake
@@ -349,13 +350,9 @@ def cbo_join_reorder_build(spark: SparkSession, sf_dir: str, cbo: bool) -> DataF
     QueryExecution, so the CBO'd plan survives the restore and later
     conf changes cannot leak into other queries)."""
     _cbo_tables(spark, sf_dir)
-    # restore the caller's conf values, not a hardcoded "false" — a session
-    # that had CBO enabled before the build must get it back (round-7
-    # advice: the old finally block silently disabled CBO session-wide)
-    orig = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    for k in _CBO_CONFS:
-        spark.conf.set(k, str(cbo).lower())
-    try:
+    # the caller's conf values come back, not a hardcoded "false": a session
+    # that had CBO enabled before the build must get it back
+    with scoped_confs(spark, {k: str(cbo).lower() for k in _CBO_CONFS}):
         li, o, c = (
             spark.table("cbo_lineitem"),
             spark.table("cbo_orders"),
@@ -373,12 +370,6 @@ def cbo_join_reorder_build(spark: SparkSession, sf_dir: str, cbo: bool) -> DataF
         )
         j._jdf.queryExecution().optimizedPlan()  # force plan under CBO
         return j
-    finally:
-        for k, v in orig.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:

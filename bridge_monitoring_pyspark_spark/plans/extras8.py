@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.plan import sorted_once
 from ..sources.readers import load_table
 from .catalog import Query
+from .relational import ASOF_EVENTS, asof_sql_tail
 
 
 # --- Grouped-map applyInPandas: per-group OLS ----------------------------------
@@ -101,11 +102,11 @@ def _cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the key and each worker sees (events-of-user, orders-of-
     user) as a pandas pair. The inner merge_asof is the classic financial
     as-of; the DataFrame-only form of this query is
-    `asof_last_order_before_event` (tpch.py) — same answer, different
+    `asof_last_order_before_event` (relational.py) — same answer, different
     execution surface."""
     ev = (
         load_table(spark, sf_dir, "events")
-        .where(F.col("event_id") < 500)
+        .where(F.col("event_id") < ASOF_EVENTS)
         .select("event_id", "user_id", "ts")
     )
     od = load_table(spark, sf_dir, "orders").select(
@@ -132,15 +133,10 @@ def _cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COGROUP_ASOF_SQL = """
+_COGROUP_ASOF_SQL = f"""
 SELECT e.event_id, e.user_id, e.ts,
        o.o_orderkey AS last_orderkey, o.o_orderdate AS last_orderdate
-FROM events e JOIN orders o
-  ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-WHERE e.event_id < 500
-QUALIFY row_number() OVER (
-    PARTITION BY e.event_id ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) = 1
-ORDER BY e.event_id
+{asof_sql_tail()}ORDER BY e.event_id
 """
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import exact_avg_sql
 from ..functions.plan import scratch_dir
+from ..session import scoped_confs
 from ..sources.readers import load_table
 from ..streaming.jobs import (
     _NTZ_AS_UTC,
@@ -726,13 +727,9 @@ def _streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
             "bucket"
         ).parquet(state)
 
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
         drain_batches(stream, base, "upsert", merge)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
 
     return (
         spark.read.schema(state_schema).parquet(state)

@@ -122,6 +122,24 @@ def get_spark(
 
 
 @contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set the session confs ``confs`` for the scope; on exit restore each
+    key to its value before the scope, or unset it if it was unset, also
+    when the scope raises."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
 def pinned_shuffle_partitions(
     spark: SparkSession, n: int | None = None
 ) -> Iterator[None]:
@@ -152,17 +170,8 @@ def pinned_shuffle_partitions(
         # stages starting at the session's wide default.
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
     )
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, str(n))
-    try:
+    with scoped_confs(spark, {k: str(n) for k in keys}):
         yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @contextmanager
@@ -180,13 +189,5 @@ def pinned_arrow_batch(spark: SparkSession, n_rows: int) -> Iterator[None]:
     this helper is the explicit lever for pipelines that need a tighter
     ROW budget than both defaults (round-12 per-task memory audit;
     VERDICT r12 item 6)."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(n_rows))
-    try:
+    with scoped_confs(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(n_rows)}):
         yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)

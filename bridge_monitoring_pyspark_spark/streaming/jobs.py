@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from ..functions.numeric import exact_avg
 from ..operators.dq import SensorRules, split_valid_invalid
 from ..schemas import TABLES
+from ..session import scoped_confs
 from ..sources.readers import load_table, read_parquet_stream
 
 # NTZ wall-clock → zoned TIMESTAMP at the same absolute instant (naive read
@@ -86,12 +87,8 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int | None):
     if n is None:
         yield
         return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _write(

@@ -1,5 +1,5 @@
 """Tests for the banded pure-range join (operators/joins.py:banded_range_join
-+ plans/extras20.py): row-level equality against Spark's own nested-loop
++ plans/relational.py): row-level equality against Spark's own nested-loop
 theta join, the no-nested-loop plan shape, and the __band collision guard."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from bridge_monitoring_pyspark_spark.operators.joins import banded_range_join
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras20 import (
+from bridge_monitoring_pyspark_spark.plans.relational import (
     BAND_SECONDS,
     _clicks_and_purchases,
 )
@@ -61,7 +61,7 @@ def test_asof_tolerance_left_semantics(spark):
     unbounded as-of proves those NULLs had older matches to exclude."""
     import datetime
 
-    from bridge_monitoring_pyspark_spark.plans.extras20 import ASOF_TOLERANCE_DAYS
+    from bridge_monitoring_pyspark_spark.plans.relational import ASOF_TOLERANCE_DAYS
     from bridge_monitoring_pyspark_spark.sources.readers import load_table
 
     rows = all_queries()["asof_tolerance_left"].build(spark, SF_SMOKE).collect()

@@ -1,11 +1,12 @@
-"""Runtime bloom-filter join witness and hard-negative mining."""
+"""Runtime bloom-filter join witness (plans/relational.py) and hard-negative
+mining (plans/retrieval.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from bridge_monitoring_pyspark_spark.plans.catalog import all_queries
-from bridge_monitoring_pyspark_spark.plans.extras28 import (
+from bridge_monitoring_pyspark_spark.plans.relational import (
     bloomfilter_join_build,
 )
 

@@ -638,3 +638,41 @@ def test_sorted_once_shipped_plan_is_checkpointed_sort(spark, monkeypatch):
     assert "Sort [" in plan and "rangepartitioning" in plan
     # the Sort must consume the checkpointed child, not a recomputed subtree
     assert plan.index("Sort [") < plan.index("Scan ExistingRDD")
+
+
+def test_relational_written_once():
+    """The 22 TPC-H shapes are built in plans/tpch.py in query-number order
+    and the other relational entries in plans/relational.py. The revenue
+    column, the timestamp literal, the urgent-order filter (Spark and SQL)
+    and the as-of oracle tail are each written once in the package, no
+    plan module wraps load_table, and the six modules the entries came from
+    stay gone."""
+    import pathlib
+
+    import bridge_monitoring_pyspark_spark as pkg
+    from bridge_monitoring_pyspark_spark.plans import catalog, tpch
+
+    queries = catalog.all_queries()
+    home = {n: q.build.__module__.rsplit(".", 1)[-1] for n, q in queries.items()}
+    assert [re.match(r"q(\d+)_", q.name)[1] for q in tpch.QUERIES] == [
+        str(i) for i in range(1, 23)
+    ]
+    assert {n for n, m in home.items() if m == "tpch"} == {q.name for q in tpch.QUERIES}
+    assert sum(m == "relational" for m in home.values()) == 34
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+    assert not [n for n, src in srcs.items() if n.startswith("plans/") and "def _t(" in src]
+    for needle in (
+        '(1 - F.col("l_discount"))',
+        '== "1-URGENT"',
+        "= '1-URGENT'",
+        "PARTITION BY e.event_id ORDER BY o.o_orderdate DESC, o.o_orderkey DESC",
+    ):
+        assert sum(src.count(needle) for src in srcs.values()) == 1, needle
+    ts_lits = re.compile(r'F\.lit\([^()]*\)\.cast\("timestamp"\)')
+    assert sum(len(ts_lits.findall(src)) for src in srcs.values()) == 1
+
+    gone = {"tpch2", "relational2", "advanced", "extras18", "extras20", "extras28"}
+    assert not gone & set(catalog._PLAN_MODULES)
+    assert not [m for m in gone if (root / "plans" / f"{m}.py").exists()]

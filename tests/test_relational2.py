@@ -1,6 +1,7 @@
-"""Targeted tests for the second relational/LLM wave (plans/relational2.py,
-plans/llmdata2.py): physical-plan expectations and semantic invariants the
-DuckDB oracle can't express (determinism, coverage, numpy ground truth)."""
+"""Targeted tests for relational and LLM-data entries (plans/relational.py,
+plans/tpch.py, plans/llmdata2.py): physical-plan expectations and semantic
+invariants the DuckDB oracle can't express (determinism, coverage, numpy
+ground truth)."""
 
 from __future__ import annotations
 

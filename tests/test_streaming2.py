@@ -1,7 +1,7 @@
 """Tests for the streaming witnesses (plans/streaming.py): output-mode
 semantics vs batch equivalents, the state-store reader, streaming/jobs.py's
 drain helper, and the witnesses over a zero-row events table; plus plan
-checks for the hint/cache queries (plans/relational2.py)."""
+checks for the hint/cache queries (plans/relational.py)."""
 
 from __future__ import annotations
 
@@ -69,7 +69,7 @@ def test_shuffle_hash_hint_applies(spark):
 
 
 def test_cached_reuse_hits_memory_scan_then_releases(spark):
-    from bridge_monitoring_pyspark_spark.plans.relational2 import (
+    from bridge_monitoring_pyspark_spark.plans.relational import (
         _cached_reuse_parts,
     )
 
